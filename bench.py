@@ -325,17 +325,57 @@ def scale_dedup_metric(spark) -> dict:
     }
 
 
+def _replicas(df, id_col: str, n: int, stride: int):
+    """``n`` copies of ``df`` with a ``rep`` column; copy r's ids shift by
+    r·stride, so ``id // stride`` recovers the replica (ids < stride)
+    and copy 0 keeps the original ids."""
+    from pyspark.sql import functions as F
+
+    reps = df.sparkSession.range(n).select(F.col("id").alias("rep"))
+    return df.crossJoin(reps).withColumn(
+        id_col, F.col(id_col) + F.lit(stride) * F.col("rep")
+    )
+
+
+def _replica_of(id_col: str, stride: int):
+    from pyspark.sql import functions as F
+
+    return F.floor(F.col(id_col) / F.lit(stride))
+
+
+def _fold_replica(scored, stride: int, n_cells: int):
+    """The replica-keyed cell protocol on a scored relation: replica r of
+    a vector in cell c lands in effective cell c + r·n_cells, which is
+    what ``semantic_cells_for`` prescribes at r× the corpus (cells ∝ N,
+    constant expected population), realized structurally instead of
+    training r·n_cells centroids."""
+    from pyspark.sql import functions as F
+
+    return scored.withColumn(
+        "cell", F.col("cell") + _replica_of("vec_id", stride) * n_cells
+    )
+
+
+def _wall_ratio(out: dict):
+    return (
+        round(out["x10_wall_sec"] / out["base_wall_sec"], 2)
+        if out["base_wall_sec"] > 0
+        else None
+    )
+
+
 def scale_pipeline_metric(spark) -> dict:
     """Whole-pipeline scale ladder (r7 judge task #3): the LSH-only
     ``scale`` key proves candidate generation is linear; this extends the
-    measured proof to the FULL dedup pipeline — LSH candidates → exact
-    verification → connected components → keep-longest verdict →
-    maximal_duplicate_spans over the survivors (the salted join-back
-    whose linearity was previously only argued). 10× token-disjoint
-    blowup; the wall clock is the time to force the end of the chain
-    (spans count, which evaluates everything upstream); the replica
-    invariants are checked in separate follow-up actions so they never
-    pollute the timing:
+    measured proof to the FULL dedup pipeline — the registered
+    keep-longest verdict (``llm_ops8.keep_longest_verdict``: LSH
+    candidates → exact verification → connected components →
+    keep-longest) → maximal_duplicate_spans over the survivors (the
+    salted join-back whose linearity was previously only argued). 10×
+    token-disjoint blowup; the wall clock is the time to force the end
+    of the chain (spans count, which evaluates everything upstream); the
+    replica invariants are checked in separate follow-up actions so they
+    never pollute the timing:
 
     - ``cross_replica_pairs`` must be 0 — structural, because verified
       pairs need exact Jaccard ≥ 0.5 and token-disjoint replicas share
@@ -344,20 +384,19 @@ def scale_pipeline_metric(spark) -> dict:
       the zero-cross-replica-pairs + per-replica-determinism claim of the
       r7 task, measured rather than asserted from theory."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from sea_streamer_spark.operators import dedup as D
-    from sea_streamer_spark.operators import graph as G
+    from sea_streamer_spark.plans.llm_ops8 import keep_longest_verdict
     from sea_streamer_spark.sources.tables import load_tables
 
-    k = 10
+    k, stride = 10, 10_000_000
     docs = load_tables(spark, SF_DIR, "documents").documents.select(
-        "doc_id", "text"
+        "doc_id", "source", "text"
     )
     n_base = docs.count()
-    reps = spark.range(k).select(F.col("id").alias("rep"))
-    big = docs.crossJoin(reps).select(
-        (F.col("doc_id") * k + F.col("rep")).alias("doc_id"),
+    big = _replicas(docs, "doc_id", k, stride).select(
+        "doc_id",
+        "source",
         F.regexp_replace(
             "text", r"(\S+)", F.concat(F.lit("$1r"), F.col("rep"))
         ).alias("text"),
@@ -365,23 +404,14 @@ def scale_pipeline_metric(spark) -> dict:
 
     out: dict = {"replicas": k, "n_docs": n_base * k}
     for tag, d0 in (("base", docs), ("x10", big)):
-        d = d0.select(
-            "doc_id", "text", F.length("text").cast("long").alias("n_chars")
-        )
+        d = d0.withColumn("n_chars", F.length("text").cast("long"))
         # The timer wraps CONSTRUCTION too: connected_components
         # materializes its rounds eagerly (localCheckpoint) at call time,
         # so starting the clock at the first count() would silently
         # exclude the CC work.
         t0 = time.perf_counter()
-        pairs = D.minhash_lsh_dedup(d, threshold=0.5).select("doc_a", "doc_b")
-        clustered = G.dedup_clusters(d, pairs)
-        part = Window.partitionBy("cluster_id")
-        w = part.orderBy(F.desc("n_chars"), F.asc("doc_id"))
-        verdict = (
-            clustered.join(d.select("doc_id", "n_chars"), "doc_id")
-            .select("doc_id", (F.row_number().over(w) == 1).alias("kept"))
-        )
-        kept = verdict.filter("kept").join(d, "doc_id").select("doc_id", "text")
+        verdict = keep_longest_verdict(d)
+        kept = verdict.filter("kept").select("doc_id").join(d, "doc_id")
         # Sequential semantics (Lee et al.: near-dup removal, then exact
         # substrings over the survivors) — at these SFs the survivors
         # carry ZERO ≥10-token duplicated spans precisely because
@@ -389,23 +419,23 @@ def scale_pipeline_metric(spark) -> dict:
         # corpus gets its own span pass below for a NON-vacuous
         # span-stage linearity measurement.
         out[f"{tag}_spans_kept"] = D.maximal_duplicate_spans(
-            kept, min_len=10
+            kept.select("doc_id", "text"), min_len=10
         ).count()
         out[f"{tag}_spans_raw"] = D.maximal_duplicate_spans(
             d.select("doc_id", "text"), min_len=10
         ).count()
         out[f"{tag}_wall_sec"] = round(time.perf_counter() - t0, 4)
-        # Verification actions OUTSIDE the timing (pairs/candidates are
-        # cached inside minhash_lsh_dedup, so these are cheap re-reads).
+        # Verification actions OUTSIDE the timing (the verdict's shingle
+        # sets and candidates are cached inside minhash_lsh_dedup, so
+        # rebuilding its pairs here re-reads them).
+        pairs = D.minhash_lsh_dedup(d, threshold=0.5)
         out[f"{tag}_pairs"] = pairs.count()
         out[f"{tag}_kept"] = verdict.filter("kept").count()
         if tag == "x10":
             out["cross_replica_pairs"] = pairs.filter(
-                F.col("doc_a") % k != F.col("doc_b") % k
+                _replica_of("doc_a", stride) != _replica_of("doc_b", stride)
             ).count()
-    out["wall_ratio_x10"] = round(
-        out["x10_wall_sec"] / out["base_wall_sec"], 2
-    ) if out["base_wall_sec"] > 0 else None
+    out["wall_ratio_x10"] = _wall_ratio(out)
     out["linear"] = bool(
         out["cross_replica_pairs"] == 0
         and out["x10_pairs"] == out["base_pairs"] * k
@@ -424,19 +454,17 @@ def scale_pipeline_metric(spark) -> dict:
 def scale_semantic_metric(spark) -> dict:
     """Semantic-dedup scale ladder (r9 judge task #7): the text
     modality's 10× replica proof (``scale_pipeline``), run through the
-    SEMANTIC pipeline — cluster-assign → broadcast centroid score →
-    within-cell keep/drop join.
+    registered SemDeDup stages (llm_ops12: ``_semantic_score`` →
+    ``_semantic_candidates`` → ``_semantic_dropped``) — cluster-assign →
+    broadcast centroid score → within-cell keep/drop join.
 
     Replica protocol: 10 copies of the embedding table, identical
-    vectors, with the replica id FOLDED INTO THE CELL KEY (replica r of
-    a vector in cell c lands in effective cell c + r·K). This is
-    exactly what ``semantic_cells_for`` prescribes at 10× the corpus —
-    cells ∝ N with constant expected population — realized structurally
-    instead of training 640 centroids: candidate volume, shuffle width
-    and per-cell join size are identical to a 640-cell quantizer whose
-    cells happen to partition by replica. Cross-replica candidate pairs
-    are therefore structurally zero (the join key differs), and the
-    measured invariants are exact 10× counts:
+    vectors, with the replica id FOLDED INTO THE CELL KEY of the scored
+    relation (``_fold_replica``). Candidate volume, shuffle width and
+    per-cell join size are identical to a 640-cell quantizer whose cells
+    happen to partition by replica. Cross-replica candidate pairs are
+    therefore structurally zero (the join key differs), and the measured
+    invariants are exact 10× counts:
 
     - ``cross_replica_pairs`` == 0 — a nonzero value means the dedup
       join stopped keying on the full cell id;
@@ -445,99 +473,37 @@ def scale_semantic_metric(spark) -> dict:
     - ``wall_ratio_x10`` — the wall-clock ratio (assignment is
       map-side linear; the join is Σ pop² which the key extension
       keeps linear in N)."""
-    from pyspark.sql import functions as F
-
-    from sea_streamer_spark.operators import similarity as S
-    from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
-    from sea_streamer_spark.plans.llm_ops3 import _SEM_THRESHOLD
+    from sea_streamer_spark.plans.llm_ops12 import (
+        _semantic_candidates,
+        _semantic_centroids,
+        _semantic_dropped,
+        _semantic_score,
+    )
     from sea_streamer_spark.sources.tables import load_tables
 
-    k = 10
+    k, stride = 10, 10_000_000
     n_cells = 64  # the semantic_cells_for rung for the sf0.1 corpus
     emb = load_tables(spark, SF_DIR, "embeddings").embeddings
     n_base = emb.count()
-    cents = gate_ivf_centroids(n_cells=n_cells)
-    if cents is None:
-        cents = S.ivf_centroids(emb, n_cells=n_cells)
-    cent_df = spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        "cell long, cvec array<double>",
-    )
-    reps = spark.range(k).select(F.col("id").alias("rep"))
-    big = emb.crossJoin(reps).select(
-        (F.col("vec_id") * k + F.col("rep")).alias("vec_id"),
-        "embedding",
-        F.col("rep"),
-    )
-    base = emb.select("vec_id", "embedding", F.lit(0).cast("long").alias("rep"))
+    cents = _semantic_centroids(emb, n_cells)
 
     out: dict = {"replicas": k, "n_vectors": n_base * k, "n_cells_base": n_cells}
-    for tag, d0 in (("base", base), ("x10", big)):
+    for tag, n in (("base", 1), ("x10", k)):
         t0 = time.perf_counter()
-        assigned = d0.select(
-            "vec_id",
-            "embedding",
-            "rep",
-            S.ivf_cell_expr(cents).alias("cell0"),
-        )
-        scored = (
-            assigned.join(F.broadcast(cent_df), F.col("cell0") == cent_df["cell"])
-            .select(
-                "vec_id",
-                "embedding",
-                "rep",
-                (F.col("cell0") + F.col("rep") * n_cells).alias("ecell"),
-                F.floor(
-                    S.cosine(F.col("embedding"), F.col("cvec"))
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("cos_c_micro"),
-                # r12: per-vector norm hoisted before the pair join (1
-                # fold per pair instead of cosine's 3; bit-identical —
-                # same fold, same dot/(na*nb) association)
-                F.sqrt(S.dot(F.col("embedding"), F.col("embedding"))).alias(
-                    "nrm"
-                ),
-            )
-        )
-        a, b = scored.alias("a"), scored.alias("b")
-        better = (F.col("b.cos_c_micro") < F.col("a.cos_c_micro")) | (
-            (F.col("b.cos_c_micro") == F.col("a.cos_c_micro"))
-            & (F.col("b.vec_id") < F.col("a.vec_id"))
-        )
-        cand = a.join(
-            b, (F.col("a.ecell") == F.col("b.ecell")) & better
-        ).select(
-            F.col("a.vec_id").alias("va"),
-            F.col("b.vec_id").alias("vb"),
-            F.col("a.rep").alias("rep_a"),
-            F.col("b.rep").alias("rep_b"),
-            (
-                S.dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos"),
+        scored = _semantic_score(_replicas(emb, "vec_id", n, stride), cents)
+        cand = _semantic_candidates(
+            _fold_replica(scored, stride, n_cells)
         ).cache()
-        dropped = (
-            cand.filter(F.col("cos") >= F.lit(_SEM_THRESHOLD))
-            .select("va")
-            .distinct()
-        )
-        out[f"{tag}_dropped"] = dropped.count()
+        out[f"{tag}_dropped"] = _semantic_dropped(cand).count()
         out[f"{tag}_wall_sec"] = round(time.perf_counter() - t0, 4)
         # invariant actions OUTSIDE the timing (cand is cached)
         out[f"{tag}_candidates"] = cand.count()
         if tag == "x10":
             out["cross_replica_pairs"] = cand.filter(
-                F.col("rep_a") != F.col("rep_b")
+                _replica_of("va", stride) != _replica_of("vb", stride)
             ).count()
         cand.unpersist()
-    out["wall_ratio_x10"] = (
-        round(out["x10_wall_sec"] / out["base_wall_sec"], 2)
-        if out["base_wall_sec"] > 0
-        else None
-    )
+    out["wall_ratio_x10"] = _wall_ratio(out)
     out["linear"] = bool(
         out["cross_replica_pairs"] == 0
         and out["x10_candidates"] == out["base_candidates"] * k
@@ -552,7 +518,9 @@ def scale_e2e_metric(spark) -> dict:
     per-family ladders prove each dedup stage linear; this proves the
     COMPOSED curation funnel — redact → exact dedup → MinHash near-dup
     → SemDeDup → Gopher gate → Hamilton apportionment, the
-    ``curation_e2e_pipeline`` stage chain — scales as one pipeline.
+    ``curation_e2e_pipeline`` stage chain — scales as one pipeline. The
+    funnel counts and the apportionment are the registered composition
+    (``llm_ops15._e2e_funnel``) over replica-keyed stage relations.
 
     Replica protocol (10×, replica-keyed like ``scale_semantic``):
     documents and embeddings get 10 copies with ``id + 70_000·rep``
@@ -577,40 +545,36 @@ def scale_e2e_metric(spark) -> dict:
 
     from sea_streamer_spark.operators import dedup as D
     from sea_streamer_spark.operators import graph as G
-    from sea_streamer_spark.operators import quality as Q
-    from sea_streamer_spark.operators import similarity as S
-    from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
-    from sea_streamer_spark.plans.llm_ops3 import _SEM_THRESHOLD
+    from sea_streamer_spark.plans.llm_ops12 import (
+        _semantic_candidates,
+        _semantic_centroids,
+        _semantic_dropped,
+        _semantic_score,
+    )
     from sea_streamer_spark.plans.llm_ops14 import (
+        _APPORTION_BUDGET,
         _pii_injected_col,
         _redact_chain_spark,
     )
+    from sea_streamer_spark.plans.llm_ops15 import _e2e_funnel
     from sea_streamer_spark.sources.tables import load_tables
 
-    k, off, n_cells, budget = 10, 70_000, 64, 100
+    k, off, n_cells = 10, 70_000, 64
     t = load_tables(spark, SF_DIR, "documents", "embeddings")
-    docs, emb = t.documents, t.embeddings
-    reps = spark.range(k).select(F.col("id").alias("rep"))
-    cents = gate_ivf_centroids(n_cells=n_cells)
-    if cents is None:
-        cents = S.ivf_centroids(emb, n_cells=n_cells)
-
-    def _funnel(d0, e0) -> dict:
-        """Per-source funnel counts + Hamilton allocation; d0/e0 carry a
-        ``rep`` column (all-zero for the base run)."""
-        dirty = d0.select(
-            "doc_id", "source", "rep", _pii_injected_col().alias("t")
-        ).select(
-            "doc_id",
-            "source",
-            "rep",
-            "t",
-            _redact_chain_spark(F.col("t")).alias("r"),
+    cents = _semantic_centroids(t.embeddings, n_cells)
+    out: dict = {"replicas": k, "budget": _APPORTION_BUDGET}
+    funnel = {}
+    for tag, n in (("base", 1), ("x10", k)):
+        t0 = time.perf_counter()
+        d0 = _replicas(
+            t.documents.select("doc_id", "source", "text"), "doc_id", n, off
         )
-        ex = dirty.select(
+        red = d0.select(
+            "doc_id", "source", "rep", _pii_injected_col().alias("t")
+        ).select("*", _redact_chain_spark(F.col("t")).alias("r"))
+        ex = red.select(
             "doc_id",
             "source",
-            "rep",
             (F.col("r") != F.col("t")).alias("had_pii"),
             (
                 F.col("doc_id")
@@ -629,197 +593,46 @@ def scale_e2e_metric(spark) -> dict:
         pairs = D.minhash_lsh_dedup(nd_in, threshold=0.5).select(
             "doc_a", "doc_b"
         )
-        cl = G.dedup_clusters(nd_in.select("doc_id"), pairs).select(
-            "doc_id", "cluster_id"
+        cl = G.dedup_clusters(nd_in, pairs)
+        e0 = _replicas(t.embeddings, "vec_id", n, off)
+        cand = _semantic_candidates(
+            _fold_replica(_semantic_score(e0, cents), off, n_cells)
         )
-        st3 = ex.join(cl, "doc_id").select(
-            "*",
-            (
-                F.col("keep2")
-                & (
-                    F.col("doc_id")
-                    == F.min(F.when(F.col("keep2"), F.col("doc_id"))).over(
-                        Window.partitionBy("cluster_id")
-                    )
-                )
-            ).alias("keep3"),
+        sem = _semantic_dropped(cand).select(
+            F.col("vec_id").alias("doc_id"), F.lit(False).alias("kept")
         )
-        # semantic stage: replica-folded cells, centroid-score drop
-        cent_df = spark.createDataFrame(
-            [(int(c), [float(x) for x in v]) for c, v in cents],
-            "cell long, cvec array<double>",
-        )
-        scored = (
-            e0.select(
-                "vec_id", "embedding", "rep", S.ivf_cell_expr(cents).alias("c0")
-            )
-            .join(F.broadcast(cent_df), F.col("c0") == cent_df["cell"])
-            .select(
-                "vec_id",
-                "embedding",
-                "rep",
-                (F.col("c0") + F.col("rep") * n_cells).alias("ecell"),
-                F.floor(
-                    S.cosine(F.col("embedding"), F.col("cvec"))
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("cs"),
-                # r12 norm hoist (see scale_semantic_metric note)
-                F.sqrt(S.dot(F.col("embedding"), F.col("embedding"))).alias(
-                    "nrm"
-                ),
-            )
-        )
-        a, b = scored.alias("a"), scored.alias("b")
-        better = (F.col("b.cs") < F.col("a.cs")) | (
-            (F.col("b.cs") == F.col("a.cs"))
-            & (F.col("b.vec_id") < F.col("a.vec_id"))
-        )
-        cand = a.join(
-            b, (F.col("a.ecell") == F.col("b.ecell")) & better
-        ).select(
-            F.col("a.vec_id").alias("va"),
-            F.col("a.rep").alias("rep_a"),
-            F.col("b.rep").alias("rep_b"),
-            (
-                S.dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos"),
-        )
-        x_rep = cand.filter(F.col("rep_a") != F.col("rep_b")).count()
-        dropped = (
-            cand.filter(F.col("cos") >= F.lit(_SEM_THRESHOLD))
-            .select(F.col("va").alias("doc_id"))
-            .distinct()
-            .withColumn("sem_dropped", F.lit(True))
-        )
-        labels = Q.gopher_quality_flags(d0.select("doc_id", "text")).select(
-            "doc_id", "passes"
-        )
-        flags = (
-            st3.join(dropped, "doc_id", "left")
-            .join(labels, "doc_id")
-            .select(
-                "source",
-                "had_pii",
-                "keep2",
-                "keep3",
-                (
-                    F.col("keep3") & F.col("sem_dropped").isNull()
-                ).alias("keep4"),
-                (
-                    F.col("keep3")
-                    & F.col("sem_dropped").isNull()
-                    & F.col("passes")
-                ).alias("keep5"),
-            )
-        )
-
-        def _csum(c, alias):
-            return (
-                F.sum(F.when(F.col(c), 1).otherwise(0))
-                .cast("long")
-                .alias(alias)
-            )
-
-        per = {
-            r["source"]: (
-                r["n_docs"],
-                r["n_pii"],
-                r["n_ex"],
-                r["n_nd"],
-                r["n_sem"],
-                r["n_q"],
-            )
-            for r in flags.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                _csum("had_pii", "n_pii"),
-                _csum("keep2", "n_ex"),
-                _csum("keep3", "n_nd"),
-                _csum("keep4", "n_sem"),
-                _csum("keep5", "n_q"),
-            )
-            .collect()
+        funnel[tag] = {
+            r["source"]: list(r)[1:]
+            for r in _e2e_funnel(ex, cl, sem, d0).collect()
         }
-        # Hamilton over the K-bounded per-source aggregate (driver-side
-        # on ≤20 rows — the registered row does this distributed)
-        tot = sum(v[5] for v in per.values())
-        floors = {s: budget * v[5] // tot for s, v in per.items()}
-        rems = sorted(
-            ((budget * v[5] % tot, s) for s, v in per.items()),
-            key=lambda x: (-x[0], x[1]),
-        )
-        seats = budget - sum(floors.values())
-        alloc = dict(floors)
-        for _, s in rems[:seats]:
-            alloc[s] += 1
-        sampled = {s: min(alloc[s], per[s][5]) for s in per}
-        # replica of a doc id: ids are orig + off·rep with orig < off
-        x_nd = pairs.filter(
-            F.floor(F.col("doc_a") / F.lit(off))
-            != F.floor(F.col("doc_b") / F.lit(off))
-        ).count()
-        return {
-            "per_source": per,
-            "sampled": sampled,
-            "cross_replica_sem": x_rep,
-            "cross_replica_nd": x_nd,
-        }
-
-    out: dict = {"replicas": k, "budget": budget}
-    base_docs = docs.select(
-        "doc_id", "source", "text", F.lit(0).cast("long").alias("rep")
-    )
-    base_emb = emb.select(
-        "vec_id", "embedding", F.lit(0).cast("long").alias("rep")
-    )
-    big_docs = docs.crossJoin(reps).select(
-        (F.col("doc_id") + F.lit(off) * F.col("rep")).alias("doc_id"),
-        "source",
-        "text",
-        "rep",
-    )
-    big_emb = emb.crossJoin(reps).select(
-        (F.col("vec_id") + F.lit(off) * F.col("rep")).alias("vec_id"),
-        "embedding",
-        "rep",
-    )
-    results = {}
-    for tag, d0, e0 in (
-        ("base", base_docs, base_emb),
-        ("x10", big_docs, big_emb),
-    ):
-        t0 = time.perf_counter()
-        results[tag] = _funnel(d0, e0)
         out[f"{tag}_wall_sec"] = round(time.perf_counter() - t0, 4)
-    out["wall_ratio_x10"] = (
-        round(out["x10_wall_sec"] / out["base_wall_sec"], 2)
-        if out["base_wall_sec"] > 0
-        else None
+        if tag == "x10":
+            out["cross_replica_sem_candidates"] = cand.filter(
+                _replica_of("va", off) != _replica_of("vb", off)
+            ).count()
+            out["cross_replica_nd_pairs"] = pairs.filter(
+                _replica_of("doc_a", off) != _replica_of("doc_b", off)
+            ).count()
+    out["wall_ratio_x10"] = _wall_ratio(out)
+    b, x = funnel["base"], funnel["x10"]
+    # rows: n_docs, n_pii, n_exact, n_neardup, n_semantic, n_quality,
+    # n_sampled — every count scales 10×, the sample not at all
+    same_sources = set(b) == set(x)
+    counts_linear = same_sources and all(
+        [10 * v for v in b[s][:6]] == x[s][:6] for s in b
     )
-    b, x = results["base"], results["x10"]
-    out["cross_replica_sem_candidates"] = x["cross_replica_sem"]
-    out["cross_replica_nd_pairs"] = x["cross_replica_nd"]
-    counts_linear = all(
-        tuple(10 * v for v in b["per_source"][s]) == x["per_source"][s]
-        for s in b["per_source"]
-    ) and set(b["per_source"]) == set(x["per_source"])
-    sampled_invariant = b["sampled"] == x["sampled"]
+    sampled_invariant = same_sources and all(b[s][6] == x[s][6] for s in b)
     out["per_source_counts_x10_exact"] = bool(counts_linear)
     out["sampled_scale_invariant"] = bool(sampled_invariant)
-    out["n_sampled_total"] = sum(b["sampled"].values())
-    out["base_funnel"] = {
-        s: list(v) + [b["sampled"][s]] for s, v in sorted(b["per_source"].items())
-    }
+    out["n_sampled_total"] = sum(v[6] for v in b.values())
+    out["base_funnel"] = dict(sorted(b.items()))
     out["linear"] = bool(
         counts_linear
         and sampled_invariant
-        and x["cross_replica_sem"] == 0
-        and x["cross_replica_nd"] == 0
+        and out["cross_replica_sem_candidates"] == 0
+        and out["cross_replica_nd_pairs"] == 0
     )
+    spark.catalog.clearCache()
     return out
 
 
@@ -829,7 +642,8 @@ def scale_semantic_planted_metric(spark) -> dict:
     proves candidate-volume linearity at 10×. This joins them: the
     PLANTED corpus (every 10th base vector + 3 single-dimension ×1.25
     replicas — within-cluster cosine ≈ 0.999) runs through the
-    replica-keyed 10× protocol at the recommended rung, and planted
+    registered scorer (``llm_ops12._semantic_score``) with the
+    replica-keyed 10× cell protocol at the recommended rung, and planted
     recall is reported at BOTH scales. Because the replica fold makes
     each copy's cell assignment identical to the base corpus's, recall
     at 10× must equal recall at base EXACTLY — measured, with the
@@ -839,60 +653,52 @@ def scale_semantic_planted_metric(spark) -> dict:
 
     from sea_streamer_spark.operators import similarity as S
     from sea_streamer_spark.plans.llm_ops3 import _SEM_THRESHOLD
+    from sea_streamer_spark.plans.llm_ops12 import _semantic_score
     from sea_streamer_spark.plans.llm_ops15 import (
+        _BASE_KEY_SQL,
         _PLANTED_ID_BASE,
         _SEM_TARGET_POP,
         planted_embeddings,
     )
 
-    k = 10
+    k, stride = 10, 10_000_000
     corpus = planted_embeddings(spark, SF_DIR).cache()
     n_vec = corpus.count()
     n_cells = (n_vec + _SEM_TARGET_POP - 1) // _SEM_TARGET_POP
-    # round the rung to the llm_ops15 sweep grid resolution: use the
-    # exact recommended count (centroids trained on the planted corpus)
+    # the exact recommended rung (centroids trained on the planted corpus)
     cents = S.ivf_centroids(corpus, n_cells=n_cells)
-    reps = spark.range(k).select(F.col("id").alias("rep"))
+    orig = f"(vec_id % {stride})"
+    # planted cluster key: replicas share their base vector's id
+    ck = F.expr(_BASE_KEY_SQL.format(id=orig).replace("//", "div"))
+    planted = F.expr(f"{orig} >= {_PLANTED_ID_BASE}")
 
-    def _recall(e0) -> tuple[int, int]:
-        cells = e0.select(
+    def _recall(n: int) -> tuple[int, int]:
+        cells = _fold_replica(
+            _semantic_score(_replicas(corpus, "vec_id", n, stride), cents),
+            stride,
+            n_cells,
+        ).select(
             "vec_id",
-            "rep",
-            (S.ivf_cell_expr(cents) + F.col("rep") * n_cells).alias("ecell"),
-            # cluster key: planted replicas share their base vector's id
-            F.when(
-                F.col("vec_id") % F.lit(10_000_000) >= _PLANTED_ID_BASE,
-                (F.col("vec_id") % F.lit(10_000_000) - _PLANTED_ID_BASE)
-                / F.lit(100),
-            )
-            .otherwise(F.col("vec_id") % F.lit(10_000_000))
-            .cast("long")
-            .alias("ck"),
             "embedding",
-            # r12 norm hoist (see scale_semantic_metric note)
-            F.sqrt(S.dot(F.col("embedding"), F.col("embedding"))).alias(
-                "nrm"
-            ),
+            "cell",
+            _replica_of("vec_id", stride).alias("rep"),
+            ck.alias("ck"),
+            planted.alias("planted"),
         )
-        a = cells.alias("a")
-        b = cells.alias("b")
+        a, b = cells.alias("a"), cells.alias("b")
         clpairs = a.join(
             b,
             (F.col("a.ck") == F.col("b.ck"))
             & (F.col("a.rep") == F.col("b.rep"))
             & (F.col("a.vec_id") < F.col("b.vec_id"))
             # at least one replica member → a planted pair
-            & (
-                (F.col("a.vec_id") % F.lit(10_000_000) >= _PLANTED_ID_BASE)
-                | (F.col("b.vec_id") % F.lit(10_000_000) >= _PLANTED_ID_BASE)
-            ),
+            & (F.col("a.planted") | F.col("b.planted")),
         ).select(
             (
-                S.dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
+                S.cosine(F.col("a.embedding"), F.col("b.embedding"))
                 >= F.lit(_SEM_THRESHOLD)
             ).alias("true_pair"),
-            (F.col("a.ecell") == F.col("b.ecell")).alias("coloc"),
+            (F.col("a.cell") == F.col("b.cell")).alias("coloc"),
         )
         agg = clpairs.filter("true_pair").agg(
             F.count(F.lit(1)).alias("n_true"),
@@ -900,39 +706,28 @@ def scale_semantic_planted_metric(spark) -> dict:
         ).collect()[0]
         return int(agg["n_true"]), int(agg["n_coloc"] or 0)
 
-    base = corpus.select(
-        "vec_id", "embedding", F.lit(0).cast("long").alias("rep")
-    )
-    big = corpus.crossJoin(reps).select(
-        (F.col("vec_id") + F.lit(10_000_000) * F.col("rep")).alias("vec_id"),
-        "embedding",
-        "rep",
-    )
     out: dict = {
         "replicas": k,
         "n_vectors_base": n_vec,
         "n_cells_base": n_cells,
     }
-    for tag, e0 in (("base", base), ("x10", big)):
+    for tag, n in (("base", 1), ("x10", k)):
         t0 = time.perf_counter()
-        n_true, n_coloc = _recall(e0)
+        n_true, n_coloc = _recall(n)
         out[f"{tag}_wall_sec"] = round(time.perf_counter() - t0, 4)
         out[f"{tag}_planted_true_pairs"] = n_true
         out[f"{tag}_planted_colocated"] = n_coloc
         out[f"planted_recall_permille_{tag}"] = (
             1000 * n_coloc // n_true if n_true else 1000
         )
-    out["wall_ratio_x10"] = (
-        round(out["x10_wall_sec"] / out["base_wall_sec"], 2)
-        if out["base_wall_sec"] > 0
-        else None
-    )
+    out["wall_ratio_x10"] = _wall_ratio(out)
     out["recall_holds_at_x10"] = bool(
         out["planted_recall_permille_x10"]
         == out["planted_recall_permille_base"]
         and out["x10_planted_true_pairs"]
         == 10 * out["base_planted_true_pairs"]
     )
+    corpus.unpersist()
     return out
 
 

@@ -500,6 +500,22 @@ def positional_shingles(
     )
 
 
+def ordered_pairs_expr(arr: Column, a_name: str, b_name: str) -> Column:
+    """array<struct<a_name, b_name>> of every (arr[i], arr[j]) with i < j —
+    the task-local pair expansion of one array row, C(n,2) structs and no
+    shuffle. On a sorted, distinct array (``sort_array(collect_set(..))``)
+    every pair comes out ordered: a < b."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))),
+                lambda y: F.struct(x.alias(a_name), y.alias(b_name)),
+            ),
+        )
+    )
+
+
 def shared_key_pairs(
     rel: DataFrame,
     key_col: str,
@@ -535,19 +551,11 @@ def shared_key_pairs(
     df_ok = F.size("_ds") >= min_df
     if max_df is not None:
         df_ok = df_ok & (F.size("_ds") <= max_df)
-    ds = F.col("_ds")
-    pair_arr = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + 2, F.greatest(F.size(ds) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     return (
         g.filter(df_ok)
-        .select(F.explode(pair_arr).alias("_p"))
+        .select(
+            F.explode(ordered_pairs_expr(F.col("_ds"), "doc_a", "doc_b")).alias("_p")
+        )
         .select(F.col("_p.doc_a").alias("doc_a"), F.col("_p.doc_b").alias("doc_b"))
     )
 

@@ -53,23 +53,37 @@ from .registry import query
 def _semantic_scored(
     spark: SparkSession, sf_dir: str, n_cells: int = _SEM_CELLS
 ) -> DataFrame:
-    """(vec_id, embedding, cell, cos_c_micro): cell assignment is the
-    map-side argmax projection (never shuffles); the cosine-to-centroid
-    rides in on a broadcast join against the n_cells-row centroid table,
-    then micro-rounds to a BIGINT — the ONE float op, rounded per row
-    before any cross-row comparison (the one-float-then-fixed-point
-    rule). ``n_cells`` defaults to the gate-pinned 16 (llm_ops3); the
-    round-10 scale-aware variant (llm_ops14) passes the
-    ``semantic_cells_for`` rung instead."""
+    """:func:`_semantic_score` over the sf_dir's embeddings table with
+    the :func:`_semantic_centroids` quantizer. ``n_cells`` defaults to
+    the gate-pinned 16 (llm_ops3); the round-10 scale-aware variant
+    (llm_ops14) passes the ``semantic_cells_for`` rung instead."""
+    t = load_tables(spark, sf_dir, "embeddings")
+    return _semantic_score(
+        t.embeddings, _semantic_centroids(t.embeddings, n_cells)
+    )
+
+
+def _semantic_centroids(emb: DataFrame, n_cells: int) -> list:
+    """The gate-pinned ``n_cells`` quantizer (train-once-apply-at-any-
+    scale), or — when the gate data is absent — one trained on ``emb``."""
     from .llm_ops import gate_ivf_centroids
 
-    from ..operators.scale import fan_out
-
-    t = load_tables(spark, sf_dir, "embeddings")
     cents = gate_ivf_centroids(n_cells=n_cells)
     if cents is None:
-        cents = S.ivf_centroids(t.embeddings, n_cells=n_cells)
-    cent_df = spark.createDataFrame(
+        cents = S.ivf_centroids(emb, n_cells=n_cells)
+    return cents
+
+
+def _semantic_score(emb: DataFrame, cents: list) -> DataFrame:
+    """(vec_id, embedding, cell, cos_c_micro) for every row of ``emb``
+    against the ``cents`` quantizer: cell assignment is the map-side
+    argmax projection (never shuffles); the cosine-to-centroid rides in
+    on a broadcast join against the centroid table, then micro-rounds to
+    a BIGINT — the ONE float op, rounded per row before any cross-row
+    comparison (the one-float-then-fixed-point rule)."""
+    from ..operators.scale import fan_out
+
+    cent_df = emb.sparkSession.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in cents],
         "cell long, cvec array<double>",
     )
@@ -78,7 +92,7 @@ def _semantic_scored(
     # scan is one small-file split locally, so without the fan-out the
     # whole quantization ran in a single task (guide §2.5 input-parallelism
     # note; no-op at production scale where splits ≫ cores).
-    assigned = fan_out(t.embeddings, key="vec_id").select(
+    assigned = fan_out(emb, key="vec_id").select(
         "vec_id", "embedding", S.ivf_cell_expr(cents).alias("cell")
     )
     return assigned.join(F.broadcast(cent_df), "cell").select(
@@ -94,16 +108,13 @@ def _semantic_scored(
     )
 
 
-def _semantic_dropped(scored: DataFrame) -> DataFrame:
-    """vec_ids that lose to a better-ranked same-cell near-duplicate.
-
-    A vector is dropped iff some same-cell neighbor with cosine ≥ the
-    threshold ranks STRICTLY better — rank = (cos_c_micro ASC, vec_id
-    ASC), so exactly one member of every duplicate group survives and
-    it is the least-central one (SemDeDup's keep-the-outlier rule). The
-    join is cell-keyed (equi-join on cell, never all-pairs); candidate
-    volume is Σ cell_pop² — at production scale the cell count is the
-    knob (thousands of cells keeps populations √N-ish), here it is the
+def _semantic_candidates(scored: DataFrame) -> DataFrame:
+    """(va, vb, cos): every same-cell pair of the scored relation where
+    ``vb`` ranks STRICTLY better than ``va`` — rank = (cos_c_micro ASC,
+    vec_id ASC) — with their exact cosine. The join is cell-keyed
+    (equi-join on cell, never all-pairs); candidate volume is
+    Σ cell_pop² — at production scale the cell count is the knob
+    (thousands of cells keeps populations √N-ish), here it is the
     gate-pinned 16-cell quantizer shared with the ANN queries.
 
     r12: per-vector norms are precomputed ONCE before the pair join —
@@ -121,13 +132,25 @@ def _semantic_dropped(scored: DataFrame) -> DataFrame:
         (F.col("b.cos_c_micro") == F.col("a.cos_c_micro"))
         & (F.col("b.vec_id") < F.col("a.vec_id"))
     )
-    cos_ab = S.dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
+    return a.join(b, (F.col("a.cell") == F.col("b.cell")) & better).select(
+        F.col("a.vec_id").alias("va"),
+        F.col("b.vec_id").alias("vb"),
+        (
+            S.dot(F.col("a.embedding"), F.col("b.embedding"))
+            / (F.col("a.nrm") * F.col("b.nrm"))
+        ).alias("cos"),
     )
+
+
+def _semantic_dropped(cand: DataFrame) -> DataFrame:
+    """vec_ids that lose to a better-ranked same-cell near-duplicate: a
+    vector is dropped iff some candidate pair (:func:`_semantic_candidates`)
+    has cosine ≥ the threshold, so exactly one member of every duplicate
+    group survives and it is the least-central one (SemDeDup's
+    keep-the-outlier rule)."""
     return (
-        a.join(b, (F.col("a.cell") == F.col("b.cell")) & better)
-        .filter(cos_ab >= F.lit(_SEM_THRESHOLD))
-        .select(F.col("a.vec_id").alias("vec_id"))
+        cand.filter(F.col("cos") >= F.lit(_SEM_THRESHOLD))
+        .select(F.col("va").alias("vec_id"))
         .distinct()
     )
 
@@ -203,7 +226,7 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic end-to-end, so the oracle value-hash checks it
     exactly at every sf (gate-pinned quantizer, llm_ops3 convention)."""
     scored = _semantic_scored(spark, sf_dir)
-    dropped = _semantic_dropped(scored)
+    dropped = _semantic_dropped(_semantic_candidates(scored))
     return (
         scored.join(dropped.withColumn("hit", F.lit(True)), "vec_id", "left")
         .select(

@@ -43,7 +43,12 @@ from ..sources.tables import load_tables
 from .llm_ops import cell_structs_sql, lit_vec, oracle_ivf_centroids, _duck_cosine
 from .llm_ops3 import _SEM_THRESHOLD
 from .llm_ops11 import _duck_gopher_pass
-from .llm_ops12 import _SEM_BETTER, _semantic_dropped, _semantic_scored
+from .llm_ops12 import (
+    _SEM_BETTER,
+    _semantic_candidates,
+    _semantic_dropped,
+    _semantic_scored,
+)
 from .registry import query
 
 # ---------------------------------------------------------------- wave 1
@@ -336,7 +341,7 @@ def dedup_semantic_cluster_scaled(
             f"(gate-pinned) before registering this scale"
         )
     scored = _semantic_scored(spark, sf_dir, n_cells=k)
-    dropped = _semantic_dropped(scored)
+    dropped = _semantic_dropped(_semantic_candidates(scored))
     return (
         scored.join(dropped.withColumn("hit", F.lit(True)), "vec_id", "left")
         .select(
@@ -1750,23 +1755,35 @@ def curation_sample_apportionment(
     source's allocation is within 1 of its exact proportional share —
     the quota property, pinned. One source rollup + one source-dimension
     rank window."""
-    from pyspark.sql.window import Window
-
-    from .llm_ops12 import _idiv_col, _imod_col
-
     docs = load_tables(spark, sf_dir, "documents").documents
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
-    tot = per.agg(F.sum("n_docs").cast("long").alias("n"))
+    return _hamilton_alloc(per, "n_docs").orderBy("source")
+
+
+def _hamilton_alloc(per: DataFrame, weight: str) -> DataFrame:
+    """(source, ``weight``, quota_floor, extra, alloc): the Hamilton
+    apportionment of the ``_APPORTION_BUDGET`` over the per-source
+    ``weight`` column of ``per`` — exact integer floor quotas
+    (B·w // N) + one extra seat for each of the B − Σ floors largest
+    remainders (B·w mod N desc, source asc). Shared by the apportionment
+    row and the curation funnel (llm_ops15) so the two can never
+    allocate differently; the tail rides broadcast crossJoins on the
+    source-dimension relation."""
+    from pyspark.sql.window import Window
+
+    from .llm_ops12 import _idiv_col, _imod_col
+
+    tot = per.agg(F.sum(weight).cast("long").alias("n"))
     q = per.crossJoin(F.broadcast(tot)).select(
         "source",
-        "n_docs",
+        weight,
         _idiv_col(
-            F.col("n_docs"), F.col("n"), scale=_APPORTION_BUDGET
+            F.col(weight), F.col("n"), scale=_APPORTION_BUDGET
         ).alias("quota_floor"),
         _imod_col(
-            F.col("n_docs"), F.col("n"), scale=_APPORTION_BUDGET
+            F.col(weight), F.col("n"), scale=_APPORTION_BUDGET
         ).alias("rem"),
     )
     seats = q.agg(
@@ -1776,31 +1793,20 @@ def curation_sample_apportionment(
     )
     ranked = q.select(
         "source",
-        "n_docs",
+        weight,
         "quota_floor",
         F.row_number()
         .over(Window.orderBy(F.desc("rem"), F.asc("source")))
         .cast("long")
         .alias("rk"),
     )
-    return (
-        ranked.crossJoin(F.broadcast(seats))
-        .select(
-            "source",
-            "n_docs",
-            "quota_floor",
-            F.when(F.col("rk") <= F.col("r"), 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("extra"),
-            (
-                F.col("quota_floor")
-                + F.when(F.col("rk") <= F.col("r"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("alloc"),
-        )
-        .orderBy("source")
+    extra = F.when(F.col("rk") <= F.col("r"), 1).otherwise(0)
+    return ranked.crossJoin(F.broadcast(seats)).select(
+        "source",
+        weight,
+        "quota_floor",
+        extra.cast("long").alias("extra"),
+        (F.col("quota_floor") + extra).cast("long").alias("alloc"),
     )
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import dedup as D
 from ..operators import similarity as S
 from ..sources.tables import load_tables
 from .llm_ops import cell_structs_sql, oracle_ivf_centroids, _duck_cosine
@@ -525,8 +526,6 @@ def dedup_semantic_recall_planted(
 # semantic stage unchanged — stated: no vector means SemDeDup has no
 # evidence to drop on.
 
-_E2E_BUDGET = 100  # == llm_ops14._APPORTION_BUDGET (pinned by test)
-
 
 def _e2e_front_sql() -> str:
     """Shared inj/red/ex/cl CTE text (inject -> redact -> exact-dedup
@@ -555,6 +554,7 @@ def _e2e_front_sql() -> str:
 
 def _build_e2e_oracle() -> str:
     from .llm_ops11 import _duck_gopher_pass
+    from .llm_ops14 import _APPORTION_BUDGET
     from .registry import QUERIES
 
     scaled = QUERIES["dedup_semantic_cluster_scaled"].oracle.strip()
@@ -595,14 +595,14 @@ def _build_e2e_oracle() -> str:
     tot AS (SELECT CAST(SUM(n_after_quality) AS BIGINT) AS n FROM per),
     q AS (
       SELECT source,
-             CAST({_E2E_BUDGET} * n_after_quality // (SELECT n FROM tot)
+             CAST({_APPORTION_BUDGET} * n_after_quality // (SELECT n FROM tot)
                   AS BIGINT) AS quota_floor,
-             CAST({_E2E_BUDGET} * n_after_quality % (SELECT n FROM tot)
+             CAST({_APPORTION_BUDGET} * n_after_quality % (SELECT n FROM tot)
                   AS BIGINT) AS rem
       FROM per
     ),
     seats AS (
-      SELECT CAST({_E2E_BUDGET} - SUM(quota_floor) AS BIGINT) AS r FROM q
+      SELECT CAST({_APPORTION_BUDGET} - SUM(quota_floor) AS BIGINT) AS r FROM q
     ),
     ranked AS (
       SELECT source, quota_floor, rem,
@@ -630,8 +630,9 @@ def _e2e_funnel_tail(
     the batch pipeline and the streamed one (llm_ops16
     ``curation_streaming_e2e`` — r11 VERDICT task #1): ``ex`` carries
     per-doc (doc_id, source, had_pii, keep2) however those flags were
-    produced; everything after — near-dup clusters, scaled SemDeDup,
-    Gopher gate, Hamilton apportionment — is THIS one code path, so the
+    produced; this builds the registered near-dup cluster and scaled
+    SemDeDup relations, and everything after — Gopher gate, Hamilton
+    apportionment — is the ONE composition :func:`_e2e_funnel`, so the
     two registered rows can only differ in the exact-dedup front.
 
     ``ex_fn`` (callable returning the ``ex`` relation) is the streamed
@@ -656,12 +657,9 @@ def _e2e_funnel_tail(
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
-    from pyspark.sql.window import Window
 
-    from ..operators import quality as Q
     from ..sources.tables import load_tables
     from .llm_ops2 import dedup_clusters
-    from .llm_ops12 import _idiv_col, _imod_col
     from .llm_ops14 import dedup_semantic_cluster_scaled
 
     docs = load_tables(spark, sf_dir, "documents").documents
@@ -686,6 +684,24 @@ def _e2e_funnel_tail(
         sem = f_sem.result()
         if f_ex is not None:
             ex = f_ex.result()
+    return _e2e_funnel(ex, cl, sem, docs)
+
+
+def _e2e_funnel(
+    ex: DataFrame, cl: DataFrame, sem: DataFrame, docs: DataFrame
+) -> DataFrame:
+    """The per-source funnel over the stage relations: ``ex`` (doc_id,
+    source, had_pii, keep2) exact-dedup flags, ``cl`` (doc_id,
+    cluster_id) near-dup clusters, ``sem`` (doc_id, kept) SemDeDup
+    verdicts — docs without a row pass — and ``docs`` for the Gopher
+    gate. Near-dup keeps the min surviving doc_id per cluster; the
+    sample is the Hamilton apportionment (llm_ops14 ``_hamilton_alloc``)
+    of the budget over the SURVIVOR counts, capped at availability."""
+    from pyspark.sql.window import Window
+
+    from ..operators import quality as Q
+    from .llm_ops14 import _hamilton_alloc
+
     st3 = ex.join(cl, "doc_id").select(
         "*",
         (
@@ -737,37 +753,7 @@ def _e2e_funnel_tail(
         _csum("keep4", "n_after_semantic"),
         _csum("keep5", "n_after_quality"),
     ).localCheckpoint(eager=True)
-    tot = per.agg(F.sum("n_after_quality").cast("long").alias("n"))
-    q = per.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_after_quality",
-        _idiv_col(
-            F.col("n_after_quality"), F.col("n"), scale=_E2E_BUDGET
-        ).alias("quota_floor"),
-        _imod_col(
-            F.col("n_after_quality"), F.col("n"), scale=_E2E_BUDGET
-        ).alias("rem"),
-    )
-    seats = q.agg(
-        (F.lit(_E2E_BUDGET) - F.sum("quota_floor")).cast("long").alias("r")
-    )
-    ranked = q.select(
-        "source",
-        "quota_floor",
-        F.row_number()
-        .over(Window.orderBy(F.desc("rem"), F.asc("source")))
-        .cast("long")
-        .alias("rk"),
-    ).crossJoin(F.broadcast(seats))
-    alloc = ranked.select(
-        "source",
-        (
-            F.col("quota_floor")
-            + F.when(F.col("rk") <= F.col("r"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("alloc"),
-    )
+    alloc = _hamilton_alloc(per, "n_after_quality").select("source", "alloc")
     return (
         per.join(alloc, "source")
         .select(
@@ -1616,18 +1602,10 @@ def basket_part_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    ps = F.col("ps")
-    pair_arr = F.flatten(
-        F.transform(
-            ps,
-            lambda x, i: F.transform(
-                F.slice(ps, i + 2, F.greatest(F.size(ps) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
     up = (
-        g.select(F.explode(pair_arr).alias("_p"))
+        g.select(
+            F.explode(D.ordered_pairs_expr(F.col("ps"), "pa", "pb")).alias("_p")
+        )
         .groupBy(F.col("_p.pa").alias("pa"), F.col("_p.pb").alias("pb"))
         .agg(F.count(F.lit(1)).cast("long").alias("cab"))
         .filter(F.col("cab") >= 2)

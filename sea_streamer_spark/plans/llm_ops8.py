@@ -70,19 +70,20 @@ _DUCK_CLUSTERS = f"""
 
 
 def _cluster_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared relation: every document with its near-dup cluster id,
-    cluster size, and the keep-longest verdict. One LSH pass + CC rounds
-    (both existing primitives), then a single cluster-keyed window shuffle
-    carrying both the size count and the keep rank — rule: max ``n_chars``,
-    tie-break min ``doc_id`` (deterministic under any partitioning)."""
-    t = load_tables(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_dedup(t.documents, threshold=0.5).select(
-        "doc_a", "doc_b"
-    )
-    clustered = G.dedup_clusters(t.documents, pairs)
-    j = clustered.join(
-        t.documents.select("doc_id", "n_chars", "source"), "doc_id"
-    )
+    """:func:`keep_longest_verdict` over the sf_dir's documents table."""
+    return keep_longest_verdict(load_tables(spark, sf_dir, "documents").documents)
+
+
+def keep_longest_verdict(docs: DataFrame) -> DataFrame:
+    """Every row of ``docs`` (doc_id, text, n_chars, source) with its
+    near-dup cluster id, cluster size, and the keep-longest verdict. One
+    LSH pass + CC rounds (both existing primitives), then a single
+    cluster-keyed window shuffle carrying both the size count and the
+    keep rank — rule: max ``n_chars``, tie-break min ``doc_id``
+    (deterministic under any partitioning)."""
+    pairs = D.minhash_lsh_dedup(docs, threshold=0.5).select("doc_a", "doc_b")
+    clustered = G.dedup_clusters(docs, pairs)
+    j = clustered.join(docs.select("doc_id", "n_chars", "source"), "doc_id")
     part = Window.partitionBy("cluster_id")
     w = part.orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return j.select(
@@ -752,18 +753,12 @@ def basket_brand_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("brand")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    bs = F.col("bs")
-    pair_arr = F.flatten(
-        F.transform(
-            bs,
-            lambda x, i: F.transform(
-                F.slice(bs, i + 2, F.greatest(F.size(bs) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("brand_a"), y.alias("brand_b")),
-            ),
-        )
-    )
     pairs = (
-        g.select(F.explode(pair_arr).alias("_p"))
+        g.select(
+            F.explode(
+                D.ordered_pairs_expr(F.col("bs"), "brand_a", "brand_b")
+            ).alias("_p")
+        )
         .groupBy(
             F.col("_p.brand_a").alias("brand_a"),
             F.col("_p.brand_b").alias("brand_b"),

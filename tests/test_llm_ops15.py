@@ -311,7 +311,8 @@ def test_e2e_pipeline_composes_registered_stages(spark):
         row[5] += keep5[d]
 
     # Hamilton over survivor counts, python replay
-    budget = 100
+    from sea_streamer_spark.plans.llm_ops14 import _APPORTION_BUDGET as budget
+
     n_total = sum(v[5] for v in per.values())
     q = {
         s: (budget * v[5] // n_total, budget * v[5] % n_total)
@@ -338,13 +339,8 @@ def test_e2e_pipeline_composes_registered_stages(spark):
 
 
 def test_e2e_pipeline_funnel_is_monotone(spark):
-    """Stage survivor counts can only shrink, the budget constant
-    matches the registered apportionment wave's, and every source's
-    sample fits its survivors."""
-    from sea_streamer_spark.plans.llm_ops14 import _APPORTION_BUDGET
-    from sea_streamer_spark.plans.llm_ops15 import _E2E_BUDGET
-
-    assert _E2E_BUDGET == _APPORTION_BUDGET
+    """Stage survivor counts can only shrink, and every source's sample
+    fits its survivors."""
     for r in _run(spark, "curation_e2e_pipeline").collect():
         assert (
             r["n_docs"]
@@ -854,6 +850,8 @@ def test_basket_set_pair_expansion_matches_distinct_self_join(spark):
     BOTH sides identically) and singleton/equal-only orders (no pairs)."""
     from pyspark.sql import functions as F
 
+    from sea_streamer_spark.operators.dedup import ordered_pairs_expr
+
     rows = [
         (1, 10), (1, 11), (1, 11), (1, 12),  # dup partkey 11 in order 1
         (2, 10), (2, 12),
@@ -879,18 +877,8 @@ def test_basket_set_pair_expansion_matches_distinct_self_join(spark):
     g = li.groupBy(F.col("l_orderkey").alias("o")).agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
-    ps = F.col("ps")
-    pair_arr = F.flatten(
-        F.transform(
-            ps,
-            lambda x, i: F.transform(
-                F.slice(ps, i + 2, F.greatest(F.size(ps) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
     up = (
-        g.select(F.explode(pair_arr).alias("_p"))
+        g.select(F.explode(ordered_pairs_expr(F.col("ps"), "pa", "pb")).alias("_p"))
         .groupBy(F.col("_p.pa").alias("pa"), F.col("_p.pb").alias("pb"))
         .agg(F.count(F.lit(1)).cast("long").alias("cab"))
     )

@@ -1,13 +1,19 @@
 #!/usr/bin/env python
-"""Dump raw ``.explain('formatted')`` output for the round-13 optimization
-targets into plans/r13/<query>_<tag>.txt.
+"""Dump raw ``.explain('formatted')`` output of registered queries into
+<out_dir>/<query>_<tag>.txt.
 
-Usage: python tools/explain_r13.py <before|after> <query ...>
+Usage: python tools/explain_plans.py <out_dir> <tag> <query ...>
 
-Same contract as tools/explain_r12.py (verbatim formatted plans cited by
-the optimization journal); queries whose function body runs driver-side
-actions still execute them here — their final plan is a LocalTableScan
-and the journal records the job-count evidence instead.
+e.g. ``python tools/explain_plans.py plans/ab before curation_e2e_pipeline``
+before a plan change, and the same with ``after`` once it lands.
+
+Unlike tools/dump_plans.py (canonicalized snapshots for churn tracking),
+this writes the verbatim formatted plan an optimization journal cites.
+Queries whose function body runs driver-side actions (the eval truth
+sides) still execute them here; their *final* plan is a LocalTableScan —
+for those the interesting evidence is the job count, recorded separately.
+
+Env: SPARK_GRAFT_SF_DIR (the bench's scale-factor directory).
 """
 
 from __future__ import annotations
@@ -17,22 +23,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SF_DIR  # noqa: E402
 from sea_streamer_spark.plans.queries import QUERIES  # noqa: E402
 from sea_streamer_spark.session import get_spark  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r13",
-    )
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="explain-r13")
+    spark = get_spark(app_name="explain-plans")
     for name in names:
         if name not in QUERIES:
             print(f"SKIP {name}: not registered")

@@ -21,29 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _cpu_probe() -> float:
-    time.sleep(1.0)
-    best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        x = 0
-        for i in range(1_000_000):
-            x += i
-        best = min(best, (time.perf_counter() - t0) * 1000.0)
-    return round(best, 1)
-
-
-def _stat() -> list[int] | None:
-    try:
-        parts = open("/proc/stat").readline().split()
-        if parts and parts[0] == "cpu":
-            return [int(x) for x in parts[1:9]]
-    except Exception:
-        pass
-    return None
+from bench import SF_DIR, _cpu_probe, _stat_snapshot, _steal_pct  # noqa: E402
 
 
 def main() -> None:
@@ -59,7 +37,7 @@ def main() -> None:
 
     spark = get_spark(app_name="time-queries")
     print(f"# sf_dir={SF_DIR} cpus={os.environ['SPARK_GRAFT_CPUS']}")
-    p0, s0 = _cpu_probe(), _stat()
+    p0, s0 = _cpu_probe(), _stat_snapshot()
     print(f"# probe_start_ms={p0}")
     for name in args:
         fn = QUERIES[name].fn
@@ -79,12 +57,7 @@ def main() -> None:
             + f"\tspread={spread:.0f}%"
         )
         sys.stdout.flush()
-    p1, s1 = _cpu_probe(), _stat()
-    steal = None
-    if s0 and s1:
-        d = [y - x for x, y in zip(s0, s1)]
-        busy = sum(d) - d[3]
-        steal = round(100.0 * d[7] / busy, 1) if busy > 0 else 0.0
+    p1, steal = _cpu_probe(), _steal_pct(s0, _stat_snapshot())
     print(f"# probe_end_ms={p1} steal_pct={steal}")
     spark.stop()
 
