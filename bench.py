@@ -654,10 +654,10 @@ def scale_semantic_planted_metric(spark) -> dict:
     from sea_streamer_spark.operators import similarity as S
     from sea_streamer_spark.plans.llm_ops3 import _SEM_THRESHOLD
     from sea_streamer_spark.plans.llm_ops12 import _semantic_score
+    from sea_streamer_spark.plans.llm_ops14 import _SEM_TARGET_POP
     from sea_streamer_spark.plans.llm_ops15 import (
         _BASE_KEY_SQL,
         _PLANTED_ID_BASE,
-        _SEM_TARGET_POP,
         planted_embeddings,
     )
 

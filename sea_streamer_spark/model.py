@@ -91,6 +91,24 @@ MESSAGE_SCHEMA = StructType(
 
 ENVELOPE_COLUMNS = [f.name for f in MESSAGE_SCHEMA.fields]
 
+#: The envelope as the DDL string the Python data sources (``ss``,
+#: ``sea_redis``, ``sea_iggy``) return from ``schema()``. Written out rather
+#: than derived from MESSAGE_SCHEMA: a DDL string declares every field
+#: nullable, which is the source schema those readers have always exposed.
+ENVELOPE_DDL = (
+    "stream_key string, shard_id bigint, sequence bigint, "
+    "timestamp timestamp, payload binary"
+)
+
+
+def client_opts(options) -> dict:
+    """The broker-client options a data source ships to its executors."""
+    return {
+        k: options.get(k)
+        for k in ("fake_root", "host", "port")
+        if options.get(k) is not None
+    }
+
 
 def envelope_from_events(events: DataFrame, num_shards: int = 4) -> DataFrame:
     """Project the driver's ``events`` table into the canonical envelope.

@@ -43,12 +43,57 @@ DUCK_SHINGLE_SETS = """
   sizes AS (SELECT doc_id, COUNT(*) AS n FROM ds GROUP BY doc_id)
 """.format(toks=TOKS)
 
+
+def shingle_overlap_sql(inter: str = "COUNT(*) AS inter") -> str:
+    """Shared-shingle count per doc pair (doc_a < doc_b) over ``ds``."""
+    return f"""
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {inter}
+      FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      GROUP BY 1, 2"""
+
+
+def near_dup_pairs_sql(select: str = "doc_a, doc_b", floor: float = 0.5) -> str:
+    """Body of the near-dup ``pairs`` CTE: doc pairs whose shingle-set
+    Jaccard is at least ``floor`` (``select`` may also read ``inter`` and
+    the ``sa``/``sb`` sizes)."""
+    return f"""
+      SELECT {select} FROM ({shingle_overlap_sql()}
+      ) p
+      JOIN sizes sa ON sa.doc_id = doc_a
+      JOIN sizes sb ON sb.doc_id = doc_b
+      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= {floor}"""
+
+
+NEAR_DUP_PAIRS = near_dup_pairs_sql()
+
+
+def undirected_edges_sql(union: str = "UNION ALL") -> str:
+    """Both directions (u, v) of every ``pairs`` row."""
+    return f"SELECT doc_a AS u, doc_b AS v FROM pairs {union} SELECT doc_b, doc_a FROM pairs"
+
+
+UNDIRECTED_EDGES = undirected_edges_sql()
+
+#: Connected components of ``e`` by recursive min-label propagation:
+#: ``lbls(node, cluster)`` with cluster = the component's smallest node.
+DUCK_CC_LABELS = """cc(node, lbl) AS (
+      SELECT u, u FROM (SELECT DISTINCT u FROM e)
+      UNION
+      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
+    ),
+    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node)"""
+
+#: The near-dup cluster chain (needs ``WITH RECURSIVE``): shingle sets,
+#: Jaccard >= 0.5 ``pairs``, undirected edges ``e``, component ``lbls``.
+NEAR_DUP_CLUSTERS = f"""{DUCK_SHINGLE_SETS},
+    pairs AS ({NEAR_DUP_PAIRS}
+    ),
+    e AS ({UNDIRECTED_EDGES}),
+    {DUCK_CC_LABELS}"""
+
 JACCARD_SQL = f"""
   WITH {DUCK_SHINGLE_SETS},
-  pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-    FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
+  pairs AS ({shingle_overlap_sql()}
   )
   SELECT doc_a, doc_b,
          CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
@@ -57,6 +102,48 @@ JACCARD_SQL = f"""
   JOIN sizes sb ON sb.doc_id = doc_b
   WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
 """
+
+#: Token positions under a corpus-duplicated word 3-gram:
+#: ``toks(doc_id, tk)`` and the covered 0-based positions ``cov(doc_id, idx)``.
+DUCK_DUP_3GRAM_COVER = """toks AS (
+      SELECT doc_id, string_split_regex(text, '\\s+') AS tk FROM documents
+    ), pos AS (
+      SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 2)) AS i
+      FROM toks WHERE len(tk) >= 3
+    ), sh AS (
+      SELECT doc_id, i - 1 AS pos,
+             tk[i] || ' ' || tk[i + 1] || ' ' || tk[i + 2] AS sh
+      FROM pos
+    ), dup AS (
+      SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) >= 2
+    ), cov AS (
+      SELECT DISTINCT doc_id, idx FROM (
+        SELECT s.doc_id, s.pos + unnest([0, 1, 2]) AS idx
+        FROM sh s JOIN dup USING (sh)
+      )
+    )"""
+
+#: Tail of the span-removal oracles: given ``toks(doc_id, tk)`` and the
+#: covered token positions ``cov(doc_id, idx)``, drop covered tokens and
+#: report per doc the removed count and the md5 of the rebuilt text.
+DUCK_SPAN_REMOVAL_TAIL = """tp AS (
+      SELECT t.doc_id, i - 1 AS idx, t.tk[i] AS tok
+      FROM toks t, unnest(generate_series(1, len(t.tk))) AS u(i)
+    ), kept AS (
+      SELECT tp.doc_id, tp.idx, tp.tok
+      FROM tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.idx = tp.idx
+      WHERE cov.doc_id IS NULL
+    ), rebuilt AS (
+      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
+             md5(string_agg(tok, ' ' ORDER BY idx)) AS clean_fp
+      FROM kept GROUP BY doc_id
+    )
+    SELECT t.doc_id,
+           CAST(len(t.tk) AS BIGINT) AS n_tokens,
+           CAST(len(t.tk) - COALESCE(r.n_kept, 0) AS BIGINT) AS n_removed,
+           COALESCE(r.clean_fp, md5('')) AS clean_fp
+    FROM toks t LEFT JOIN rebuilt r USING (doc_id)
+    ORDER BY t.doc_id"""
 
 
 def _duck_simhash_sql() -> str:
@@ -504,6 +591,34 @@ def cell_structs_sql(C, vec: str = "embedding") -> str:
     )
 
 
+def ivf_cell_sql(C, alias: str) -> str:
+    """``embedding``'s nearest-centroid cell id (see cell_structs_sql) as
+    a BIGINT column named ``alias``."""
+    return f"CAST(-(list_aggregate([{cell_structs_sql(C)}], 'max').negcell) AS BIGINT) AS {alias}"
+
+
+def _duck_ivf_probe(C, nprobe: int) -> str:
+    """IVF probe CTEs over centroids ``C``: the query vector ``q`` (vec_id
+    0), the centroid literals ``cent``, the ``probed`` top-``nprobe`` cells
+    by query cosine and every vector's ``assigned`` ivf_cell."""
+    cent_values = ",\n      ".join(
+        f"({i}, {lit_vec(C[i])}::DOUBLE[])" for i in range(len(C))
+    )
+    return f"""q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+    cent(cell, cvec) AS (VALUES
+      {cent_values}),
+    probed AS (
+      SELECT cell FROM (
+        SELECT c.cell, {_duck_cosine('q.qvec', 'c.cvec')} AS cs FROM cent c, q
+      ) ORDER BY cs DESC, cell LIMIT {nprobe}
+    ),
+    assigned AS (
+      SELECT vec_id, embedding,
+             {ivf_cell_sql(C, 'ivf_cell')}
+      FROM embeddings
+    )"""
+
+
 def _pq_sql_parts(cbs) -> tuple[list[str], str]:
     """(code column exprs, ADC sum expr) for a PQ codebook set — shared by
     _build_pq_oracle and _build_ivf_pq_oracle (the bit-exact encoding SQL
@@ -555,22 +670,8 @@ def _build_ivf_oracle() -> str | None:
     C = oracle_ivf_centroids(n_cells=16, iters=8)
     if C is None:
         return None
-    cent_values = ",\n      ".join(f"({i}, {lit_vec(C[i])}::DOUBLE[])" for i in range(16))
-    structs = cell_structs_sql(C)
     return f"""
-    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-    cent(cell, cvec) AS (VALUES
-      {cent_values}),
-    probed AS (
-      SELECT cell FROM (
-        SELECT c.cell, {_duck_cosine('q.qvec', 'c.cvec')} AS cs FROM cent c, q
-      ) ORDER BY cs DESC, cell LIMIT 4
-    ),
-    assigned AS (
-      SELECT vec_id, embedding,
-             CAST(-(list_aggregate([{structs}], 'max').negcell) AS BIGINT) AS ivf_cell
-      FROM embeddings
-    )
+    WITH {_duck_ivf_probe(C, 4)}
     SELECT vec_id, ivf_cell, cosine_sim FROM (
       SELECT a.vec_id, a.ivf_cell, {_duck_cosine('a.embedding', 'q.qvec')} AS cosine_sim
       FROM assigned a, q
@@ -629,25 +730,9 @@ def _build_ivf_pq_oracle(
     cbs = oracle_pq_codebooks(m, ksub)
     if C is None or cbs is None:
         return None
-    cent_values = ",\n      ".join(
-        f"({i}, {lit_vec(C[i])}::DOUBLE[])" for i in range(n_cells)
-    )
-    cell_structs = cell_structs_sql(C)
     code_cols, adc = _pq_sql_parts(cbs)
     return f"""
-    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-    cent(cell, cvec) AS (VALUES
-      {cent_values}),
-    probed AS (
-      SELECT cell FROM (
-        SELECT c.cell, {_duck_cosine('q.qvec', 'c.cvec')} AS cs FROM cent c, q
-      ) ORDER BY cs DESC, cell LIMIT {nprobe}
-    ),
-    assigned AS (
-      SELECT vec_id, embedding,
-             CAST(-(list_aggregate([{cell_structs}], 'max').negcell) AS BIGINT) AS ivf_cell
-      FROM embeddings
-    ),
+    WITH {_duck_ivf_probe(C, nprobe)},
     coded AS (
       SELECT vec_id, embedding, ivf_cell, {", ".join(code_cols)}
       FROM assigned
@@ -724,24 +809,8 @@ def _build_ivf_recall_oracle() -> str | None:
     C = oracle_ivf_centroids(n_cells=16, iters=8)
     if C is None:
         return None
-    cent_values = ",\n      ".join(
-        f"({i}, {lit_vec(C[i])}::DOUBLE[])" for i in range(16)
-    )
-    structs = cell_structs_sql(C)
     return f"""
-    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-    cent(cell, cvec) AS (VALUES
-      {cent_values}),
-    probed AS (
-      SELECT cell FROM (
-        SELECT c.cell, {_duck_cosine('q.qvec', 'c.cvec')} AS cs FROM cent c, q
-      ) ORDER BY cs DESC, cell LIMIT 4
-    ),
-    assigned AS (
-      SELECT vec_id, embedding,
-             CAST(-(list_aggregate([{structs}], 'max').negcell) AS BIGINT) AS ivf_cell
-      FROM embeddings
-    ),
+    WITH {_duck_ivf_probe(C, 4)},
     appr AS (
       SELECT vec_id FROM (
         SELECT a.vec_id, {_duck_cosine('a.embedding', 'q.qvec')} AS cosine_sim
@@ -801,10 +870,7 @@ def similarity_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_threshold_sweep",
     oracle=f"""
     WITH {DUCK_SHINGLE_SETS},
-    p0 AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-      FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
+    p0 AS ({shingle_overlap_sql()}
     ),
     pj AS (
       SELECT doc_a, doc_b,

@@ -26,12 +26,48 @@ from pyspark.sql import functions as F
 
 from ..operators.unigram import UNK_COST
 from ..sources.tables import load_tables
-from .llm_ops import ORACLE_SF_DIR
+from .llm_ops import (
+    DUCK_SHINGLE_SETS,
+    NEAR_DUP_PAIRS,
+    ORACLE_SF_DIR,
+    undirected_edges_sql,
+)
+from .llm_ops4 import _duck_merge_chain, _sq
 from .registry import query
 
 #: DP encode moduli — MUST match operators/unigram.py (_TOK_MOD, _K_MOD).
 _TOK_MOD = 1024
 _K_MOD = 8
+
+
+def _duck_viterbi_dp(words: str) -> str:
+    """The recursive unigram-Viterbi ``dp`` CTE over the distinct words
+    relation ``words(w)`` (needs ``WITH RECURSIVE`` and a
+    ``vocab(piece, cost)`` CTE); ``best[len(w)+1] % _TOK_MOD`` is the
+    word's token count."""
+    return f"""dp AS (
+      SELECT w, 0 AS i, [CAST(0 AS BIGINT)] AS best FROM {words}
+      UNION ALL
+      SELECT d.w, d.i + 1, list_append(d.best, CAST(least(
+          (d.best[d.i+1] + (COALESCE(v1.cost, {UNK_COST}) * {_TOK_MOD} + 1))
+            * {_K_MOD} + 1,
+          CASE WHEN d.i+1 >= 2 AND v2.cost IS NOT NULL
+               THEN (d.best[d.i]   + (v2.cost * {_TOK_MOD} + 1))
+                      * {_K_MOD} + 2 END,
+          CASE WHEN d.i+1 >= 3 AND v3.cost IS NOT NULL
+               THEN (d.best[d.i-1] + (v3.cost * {_TOK_MOD} + 1))
+                      * {_K_MOD} + 3 END,
+          CASE WHEN d.i+1 >= 4 AND v4.cost IS NOT NULL
+               THEN (d.best[d.i-2] + (v4.cost * {_TOK_MOD} + 1))
+                      * {_K_MOD} + 4 END
+        ) // {_K_MOD} AS BIGINT))
+      FROM dp d
+      LEFT JOIN vocab v1 ON v1.piece = substr(d.w, d.i + 1, 1)
+      LEFT JOIN vocab v2 ON v2.piece = substr(d.w, d.i,     2)
+      LEFT JOIN vocab v3 ON v3.piece = substr(d.w, d.i - 1, 3)
+      LEFT JOIN vocab v4 ON v4.piece = substr(d.w, d.i - 2, 4)
+      WHERE d.i < len(d.w)
+    )"""
 
 _uni_cache: dict[str, object] = {}
 
@@ -84,8 +120,22 @@ def _gate(sf_dir: str) -> str:
     )
 
 
-def _sq(s: str) -> str:
-    return s.replace("'", "''")
+def _word_counts(docs: DataFrame, key: str, alias: str) -> DataFrame:
+    """(``key``, w, ``alias``): whitespace-token counts per ``key``
+    (doc_id or source), empty tokens dropped."""
+    return (
+        docs.select(
+            key,
+            F.explode(
+                F.filter(
+                    F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
+                    lambda x: F.length(x) > 0,
+                )
+            ).alias("w"),
+        )
+        .groupBy(key, "w")
+        .agg(F.count(F.lit(1)).cast("long").alias(alias))
+    )
 
 
 def _build_unigram_vocab_oracle() -> str | None:
@@ -126,29 +176,7 @@ def _build_unigram_apply_oracle() -> str | None:
       WHERE len(w) > 0 GROUP BY doc_id, w
     ),
     words AS (SELECT DISTINCT w FROM occ),
-    dp AS (
-      SELECT w, 0 AS i, [CAST(0 AS BIGINT)] AS best FROM words
-      UNION ALL
-      SELECT d.w, d.i + 1, list_append(d.best, CAST(least(
-          (d.best[d.i+1] + (COALESCE(v1.cost, {UNK_COST}) * {_TOK_MOD} + 1))
-            * {_K_MOD} + 1,
-          CASE WHEN d.i+1 >= 2 AND v2.cost IS NOT NULL
-               THEN (d.best[d.i]   + (v2.cost * {_TOK_MOD} + 1))
-                      * {_K_MOD} + 2 END,
-          CASE WHEN d.i+1 >= 3 AND v3.cost IS NOT NULL
-               THEN (d.best[d.i-1] + (v3.cost * {_TOK_MOD} + 1))
-                      * {_K_MOD} + 3 END,
-          CASE WHEN d.i+1 >= 4 AND v4.cost IS NOT NULL
-               THEN (d.best[d.i-2] + (v4.cost * {_TOK_MOD} + 1))
-                      * {_K_MOD} + 4 END
-        ) // {_K_MOD} AS BIGINT))
-      FROM dp d
-      LEFT JOIN vocab v1 ON v1.piece = substr(d.w, d.i + 1, 1)
-      LEFT JOIN vocab v2 ON v2.piece = substr(d.w, d.i,     2)
-      LEFT JOIN vocab v3 ON v3.piece = substr(d.w, d.i - 1, 3)
-      LEFT JOIN vocab v4 ON v4.piece = substr(d.w, d.i - 2, 4)
-      WHERE d.i < len(d.w)
-    ),
+    {_duck_viterbi_dp("words")},
     wt AS (
       SELECT w, CAST(best[len(w)+1] % {_TOK_MOD} AS BIGINT) AS n_tok
       FROM dp WHERE i = len(w)
@@ -217,19 +245,7 @@ def tokenizer_unigram_token_counts(
     costs = {p: int(co) for p, _c, co in vocab}
 
     docs = load_tables(spark, sf_dir, "documents").documents
-    occ = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-                    lambda x: F.length(x) > 0,
-                )
-            ).alias("w"),
-        )
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_occ"))
-    )
+    occ = _word_counts(docs, "doc_id", "n_occ")
     # The word table is a distinct over the corpus tokens. Catalyst prunes
     # this branch to a TEXT-ONLY scan + explode + distinct — i.e. the
     # corpus is tokenized twice (once for occ, once here); an aggregate
@@ -530,16 +546,6 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the comparison is apples-to-apples.
 
 
-def _duck_merge_chain(merges) -> str:
-    s = "s0"
-    for left, right, _x in merges:
-        s = (
-            f"replace({s}, ' {_sq(left)} {_sq(right)} ',"
-            f" ' {_sq(left)}{_sq(right)} ')"
-        )
-    return s
-
-
 def _build_family_compare_oracle() -> str | None:
     from .llm_ops4 import bpe_train_py
     from .llm_ops6 import _wp_train_py
@@ -567,29 +573,7 @@ def _build_family_compare_oracle() -> str | None:
       FROM words GROUP BY doc_id, w
     ),
     dwords AS (SELECT DISTINCT w FROM occ),
-    dp AS (
-      SELECT w, 0 AS i, [CAST(0 AS BIGINT)] AS best FROM dwords
-      UNION ALL
-      SELECT d.w, d.i + 1, list_append(d.best, CAST(least(
-          (d.best[d.i+1] + (COALESCE(v1.cost, {UNK_COST}) * {_TOK_MOD} + 1))
-            * {_K_MOD} + 1,
-          CASE WHEN d.i+1 >= 2 AND v2.cost IS NOT NULL
-               THEN (d.best[d.i]   + (v2.cost * {_TOK_MOD} + 1))
-                      * {_K_MOD} + 2 END,
-          CASE WHEN d.i+1 >= 3 AND v3.cost IS NOT NULL
-               THEN (d.best[d.i-1] + (v3.cost * {_TOK_MOD} + 1))
-                      * {_K_MOD} + 3 END,
-          CASE WHEN d.i+1 >= 4 AND v4.cost IS NOT NULL
-               THEN (d.best[d.i-2] + (v4.cost * {_TOK_MOD} + 1))
-                      * {_K_MOD} + 4 END
-        ) // {_K_MOD} AS BIGINT))
-      FROM dp d
-      LEFT JOIN vocab v1 ON v1.piece = substr(d.w, d.i + 1, 1)
-      LEFT JOIN vocab v2 ON v2.piece = substr(d.w, d.i,     2)
-      LEFT JOIN vocab v3 ON v3.piece = substr(d.w, d.i - 1, 3)
-      LEFT JOIN vocab v4 ON v4.piece = substr(d.w, d.i - 2, 4)
-      WHERE d.i < len(d.w)
-    ),
+    {_duck_viterbi_dp("dwords")},
     wt_uni AS (
       SELECT w, CAST(best[len(w)+1] % {_TOK_MOD} AS BIGINT) AS n_uni
       FROM dp WHERE i = len(w)
@@ -673,19 +657,7 @@ def tokenizer_family_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs = {p: int(co) for p, _c, co in unigram_train_spark(spark, gate)}
 
     docs = load_tables(spark, sf_dir, "documents").documents
-    occ = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-                    lambda x: F.length(x) > 0,
-                )
-            ).alias("w"),
-        )
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_occ"))
-    )
+    occ = _word_counts(docs, "doc_id", "n_occ")
     # Distinct-word table: same deliberately-accepted second text-only
     # scan as tokenizer_unigram_token_counts (see the comment there); all
     # three tokenizer applies ride this ONE relation as projections.
@@ -1000,9 +972,8 @@ _BM25_K1, _BM25_B = 1.2, 0.75
 
 
 def _build_rocchio_oracle() -> str:
-    from ..operators.text import duck_tokens
+    from .llm_ops3 import DUCK_BM25_STATS
 
-    TOKS = duck_tokens("text")
     k1, b = _BM25_K1, _BM25_B
     # identical operand order + the CAST-to-DOUBLE constant discipline of
     # the search_bm25_topk oracle (llm_ops3.py)
@@ -1016,17 +987,7 @@ def _build_rocchio_oracle() -> str:
         f" * 1000000) AS BIGINT)"
     )
     return f"""
-    WITH corpus AS (
-      SELECT doc_id, {TOKS} AS toks FROM documents WHERE doc_id <> 0
-    ), qt AS (
-      SELECT DISTINCT unnest({TOKS}) AS term FROM documents WHERE doc_id = 0
-    ), dl AS (
-      SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM corpus
-    ), stats AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-      FROM dl
-    ), posting AS (
+    WITH {DUCK_BM25_STATS}, posting AS (
       SELECT doc_id, unnest(toks) AS term FROM corpus
     ), tfq AS (
       SELECT p.doc_id, p.term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -1385,8 +1346,6 @@ def quality_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_winnow_recall_oracle() -> str:
-    from .llm_ops import DUCK_SHINGLE_SETS
-
     return f"""
     WITH {DUCK_SHINGLE_SETS},{_duck_winnow_prints()},
     ph AS (SELECT DISTINCT doc_id, fp_h FROM prints),
@@ -1402,14 +1361,7 @@ def _build_winnow_recall_oracle() -> str:
       HAVING COUNT(*) >= {_WIN_MIN_SHARED}
     ),
     exact AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
     m AS (
       SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS e,
@@ -2186,6 +2138,25 @@ def _nb_chain_sql() -> str:
     )"""
 
 
+def _nb_cells_sql() -> str:
+    """_nb_chain_sql plus ``cells(a, b, c, d)``: the 2×2 table of the
+    Gopher rule (truth) against the NB gate (pass = score_pass >=
+    score_fail) over the held-out docs — a both pass, b rule only, c NB
+    only, d both fail."""
+    return f"""{_nb_chain_sql()},
+    cells AS (
+      SELECT CAST(SUM(CASE WHEN truth AND score_pass >= score_fail
+                      THEN 1 ELSE 0 END) AS BIGINT) AS a,
+             CAST(SUM(CASE WHEN truth AND score_pass < score_fail
+                      THEN 1 ELSE 0 END) AS BIGINT) AS b,
+             CAST(SUM(CASE WHEN NOT truth AND score_pass >= score_fail
+                      THEN 1 ELSE 0 END) AS BIGINT) AS c,
+             CAST(SUM(CASE WHEN NOT truth AND score_pass < score_fail
+                      THEN 1 ELSE 0 END) AS BIGINT) AS d
+      FROM scored
+    )"""
+
+
 def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out docs with NB scores: (doc_id, truth, score_pass,
     score_fail) — the Spark half of _nb_chain_sql, shared by the
@@ -2275,19 +2246,63 @@ def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored
 
 
-@query(
-    "quality_nb_distill_fidelity",
-    oracle=f"""
-    WITH {_nb_chain_sql()}
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_eval,
-           CAST(SUM(CASE WHEN score_pass >= score_fail AND truth
+def _nb_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark half of _nb_cells_sql: one row (a, b, c, d)."""
+    scored = _nb_scored(spark, sf_dir)
+    nb_pass = F.col("score_pass") >= F.col("score_fail")
+    return scored.agg(
+        F.sum(F.when(F.col("truth") & nb_pass, 1).otherwise(0))
+        .cast("long")
+        .alias("a"),
+        F.sum(F.when(F.col("truth") & ~nb_pass, 1).otherwise(0))
+        .cast("long")
+        .alias("b"),
+        F.sum(F.when(~F.col("truth") & nb_pass, 1).otherwise(0))
+        .cast("long")
+        .alias("c"),
+        F.sum(F.when(~F.col("truth") & ~nb_pass, 1).otherwise(0))
+        .cast("long")
+        .alias("d"),
+    )
+
+
+#: The NB gate's confusion counts (pass = score_pass >= score_fail,
+#: positive = the rule's truth) over ``scored``; _nb_confusion_aggs is
+#: the Spark side.
+_NB_CONFUSION_SQL = """CAST(SUM(CASE WHEN score_pass >= score_fail AND truth
                     THEN 1 ELSE 0 END) AS BIGINT) AS tp,
            CAST(SUM(CASE WHEN score_pass >= score_fail AND NOT truth
                     THEN 1 ELSE 0 END) AS BIGINT) AS fp,
            CAST(SUM(CASE WHEN score_pass < score_fail AND truth
                     THEN 1 ELSE 0 END) AS BIGINT) AS fn,
            CAST(SUM(CASE WHEN score_pass < score_fail AND NOT truth
-                    THEN 1 ELSE 0 END) AS BIGINT) AS tn,
+                    THEN 1 ELSE 0 END) AS BIGINT) AS tn"""
+
+
+def _nb_confusion_aggs() -> list:
+    pred = F.col("score_pass") >= F.col("score_fail")
+    return [
+        F.sum(F.when(pred & F.col("truth"), 1).otherwise(0))
+        .cast("long")
+        .alias("tp"),
+        F.sum(F.when(pred & ~F.col("truth"), 1).otherwise(0))
+        .cast("long")
+        .alias("fp"),
+        F.sum(F.when(~pred & F.col("truth"), 1).otherwise(0))
+        .cast("long")
+        .alias("fn"),
+        F.sum(F.when(~pred & ~F.col("truth"), 1).otherwise(0))
+        .cast("long")
+        .alias("tn"),
+    ]
+
+
+@query(
+    "quality_nb_distill_fidelity",
+    oracle=f"""
+    WITH {_nb_chain_sql()}
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_eval,
+           {_NB_CONFUSION_SQL},
            CAST(FLOOR(1000.0 * SUM(CASE WHEN (score_pass >= score_fail)
                     = truth THEN 1 ELSE 0 END) / COUNT(*)) AS BIGINT)
              AS accuracy_permille
@@ -2316,18 +2331,7 @@ def quality_nb_distill_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = F.col("score_pass") >= F.col("score_fail")
     return scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_eval"),
-        F.sum(F.when(pred & F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("tp"),
-        F.sum(F.when(pred & ~F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("fp"),
-        F.sum(F.when(~pred & F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("fn"),
-        F.sum(F.when(~pred & ~F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("tn"),
+        *_nb_confusion_aggs(),
         F.floor(
             F.lit(1000.0)
             * F.sum(F.when(pred == F.col("truth"), 1).otherwise(0))
@@ -2688,19 +2692,7 @@ def text_source_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is a term-keyed equi-join (never source × source × vocab);
     per-pair volume is intersection size, bounded by vocabulary."""
     docs = load_tables(spark, sf_dir, "documents").documents
-    cs = (
-        docs.select(
-            "source",
-            F.explode(
-                F.filter(
-                    F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-                    lambda x: F.length(x) > 0,
-                )
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    cs = _word_counts(docs, "source", "c")
     nt = cs.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     a = cs.select(
         F.col("source").alias("source_a"), "w", F.col("c").alias("ca")
@@ -2753,22 +2745,12 @@ def text_source_jsd_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_harmonic_oracle() -> str:
-    from .llm_ops import DUCK_SHINGLE_SETS
-
     return f"""
     WITH RECURSIVE {DUCK_SHINGLE_SETS},
     pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION SELECT doc_b, doc_a FROM pairs),
+    e AS ({undirected_edges_sql("UNION")}),
     bfs(s, n, d) AS (
       SELECT u, v, 1 FROM e
       UNION
@@ -2900,19 +2882,7 @@ def text_burrows_delta_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_tables(spark, sf_dir, "documents").documents
-    cs = (
-        docs.select(
-            "source",
-            F.explode(
-                F.filter(
-                    F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-                    lambda x: F.length(x) > 0,
-                )
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    cs = _word_counts(docs, "source", "c")
     nt = cs.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     topw = (
         cs.groupBy("w")

@@ -40,7 +40,15 @@ from pyspark.sql import functions as F
 from ..operators import similarity as S
 from ..operators import text as T
 from ..sources.tables import load_tables
-from .llm_ops import DUCK_SHINGLE_SETS, _duck_cosine, cell_structs_sql, lit_vec
+from .llm_ops import (
+    DUCK_SHINGLE_SETS,
+    NEAR_DUP_PAIRS,
+    UNDIRECTED_EDGES,
+    _duck_cosine,
+    ivf_cell_sql,
+    lit_vec,
+    near_dup_pairs_sql,
+)
 from .llm_ops3 import _SEM_CELLS, _SEM_THRESHOLD
 from .registry import query
 
@@ -157,7 +165,7 @@ def _semantic_dropped(cand: DataFrame) -> DataFrame:
 
 def _semantic_scored_sql(n_cells: int = _SEM_CELLS) -> str:
     """The shared oracle CTE chain (cent → assigned → scored) — cell
-    assignment SQL single-sourced via cell_structs_sql, centroid literals
+    assignment SQL single-sourced via ivf_cell_sql, centroid literals
     via the same gate-pinned quantizer the Spark side uses."""
     from .llm_ops import oracle_ivf_centroids
 
@@ -170,12 +178,10 @@ def _semantic_scored_sql(n_cells: int = _SEM_CELLS) -> str:
     cent_rows = ", ".join(
         f"({i}, {lit_vec(C[i])})" for i in range(len(C))
     )
-    structs = cell_structs_sql(C)
     return f"""cent(cell, cvec) AS (VALUES {cent_rows}),
     assigned AS (
       SELECT vec_id, embedding,
-             CAST(-(list_aggregate([{structs}], 'max').negcell) AS BIGINT)
-               AS cell
+             {ivf_cell_sql(C, 'cell')}
       FROM embeddings
     ),
     scored AS (
@@ -264,14 +270,7 @@ def _build_semantic_recall_oracle() -> str:
       )
     ),
     exact AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
     jdocs AS (
       SELECT DISTINCT doc_id FROM (
@@ -714,14 +713,7 @@ def privacy_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {DUCK_SHINGLE_SETS},
     pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
@@ -2224,17 +2216,9 @@ def _build_pr_convergence_oracle() -> str:
     return f"""
     WITH {DUCK_SHINGLE_SETS},
     pairs AS MATERIALIZED (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
-    e AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
+    e AS MATERIALIZED ({UNDIRECTED_EDGES}),
     deg AS MATERIALIZED (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY u),
     n AS (SELECT doc_id AS node FROM documents),
     it0 AS MATERIALIZED (SELECT node, CAST(1000000 AS BIGINT) AS s FROM n),
@@ -2388,6 +2372,10 @@ def _build_lsh_curve_oracle() -> str:
         band_rows.append(f"SELECT doc_id, {bi} AS band, {sig} AS key FROM sigs")
     bands = " UNION ALL ".join(band_rows)
     theory = ", ".join(f"({b}, {m})" for b, m in _LSH_THEORY.items())
+    j_bucket = (
+        "doc_a, doc_b, CAST(FLOOR(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) * 10)"
+        " AS BIGINT) AS j_bucket"
+    )
     return f"""
     WITH {DUCK_SHINGLE_SETS},
     hashed AS MATERIALIZED (
@@ -2400,18 +2388,7 @@ def _build_lsh_curve_oracle() -> str:
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
     ),
-    exact AS MATERIALIZED (
-      SELECT doc_a, doc_b,
-             CAST(FLOOR(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) * 10)
-                  AS BIGINT) AS j_bucket
-      FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= {_LSH_J_FLOOR}
+    exact AS MATERIALIZED ({near_dup_pairs_sql(j_bucket, floor=_LSH_J_FLOOR)}
     ),
     theory(j_bucket, p_theory_micro) AS (VALUES {theory})
     SELECT t.j_bucket,

@@ -32,8 +32,20 @@ from pyspark.sql.window import Window
 
 from ..operators.curation import duck_split_bucket
 from ..sources.tables import load_tables
-from .llm_ops import DUCK_SHINGLE_SETS, TOKS
-from .llm_ops11 import _nb_chain_sql, _nb_scored
+from .llm_ops import (
+    DUCK_CC_LABELS,
+    DUCK_SHINGLE_SETS,
+    NEAR_DUP_PAIRS,
+    TOKS,
+    UNDIRECTED_EDGES,
+    shingle_overlap_sql,
+)
+from .llm_ops11 import (
+    _NB_CONFUSION_SQL,
+    _nb_chain_sql,
+    _nb_confusion_aggs,
+    _nb_scored,
+)
 from .llm_ops12 import _idiv_col
 from .registry import query
 
@@ -648,10 +660,7 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, sh FROM ranked WHERE rk <= n - (n + 1) // 2 + 1
     ),
     inter AS MATERIALIZED (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(COUNT(*) AS BIGINT) AS i
-      FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
+      {shingle_overlap_sql("CAST(COUNT(*) AS BIGINT) AS i")}
     ),
     exact AS MATERIALIZED (
       SELECT doc_a, doc_b FROM inter
@@ -1887,10 +1896,8 @@ def _build_subcover_oracle() -> str:
         f" FROM g{r}"
         for r in range(1, _SUB_K + 1)
     )
-    from .llm_ops import DUCK_SHINGLE_SETS as _DSS
-
     return (
-        "WITH " + _DSS + "," + ",".join(parts)
+        "WITH " + DUCK_SHINGLE_SETS + "," + ",".join(parts)
         + f"\n    SELECT * FROM ({rows}) ORDER BY round"
     )
 
@@ -1972,14 +1979,7 @@ def curation_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_nb_chain_sql()},
     conf AS (
       SELECT
-        CAST(SUM(CASE WHEN score_pass >= score_fail AND truth
-                 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        CAST(SUM(CASE WHEN score_pass >= score_fail AND NOT truth
-                 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        CAST(SUM(CASE WHEN score_pass < score_fail AND truth
-                 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        CAST(SUM(CASE WHEN score_pass < score_fail AND NOT truth
-                 THEN 1 ELSE 0 END) AS BIGINT) AS tn
+        {_NB_CONFUSION_SQL}
       FROM scored
     )
     SELECT tp, fp, fn, tn,
@@ -2012,22 +2012,7 @@ def quality_nb_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the fidelity/calibration/AUC queries — one more 1-row rollup
     over the same chain, so the five eval rows can never disagree about
     the classifier."""
-    scored = _nb_scored(spark, sf_dir)
-    pred = F.col("score_pass") >= F.col("score_fail")
-    conf = scored.agg(
-        F.sum(F.when(pred & F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("tp"),
-        F.sum(F.when(pred & ~F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("fp"),
-        F.sum(F.when(~pred & F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("fn"),
-        F.sum(F.when(~pred & ~F.col("truth"), 1).otherwise(0))
-        .cast("long")
-        .alias("tn"),
-    )
+    conf = _nb_scored(spark, sf_dir).agg(*_nb_confusion_aggs())
     tp, fp, fn, tn = (F.col(c) for c in ("tp", "fp", "fn", "tn"))
     mcc_den = (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)
     return conf.select(
@@ -2643,17 +2628,9 @@ def privacy_dp_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {DUCK_SHINGLE_SETS},
     pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
+    e AS ({UNDIRECTED_EDGES}),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY u),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS m2,
@@ -2740,24 +2717,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {DUCK_SHINGLE_SETS},
     pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
+    e AS ({UNDIRECTED_EDGES}),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY u),
-    cc(node, lbl) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM e)
-      UNION
-      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
-    ),
-    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node),
+    {DUCK_CC_LABELS},
     m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pairs),
     mc AS (
       SELECT l.cluster, CAST(COUNT(*) AS BIGINT) AS m_c

@@ -40,7 +40,13 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as S
 from ..sources.tables import load_tables
-from .llm_ops import cell_structs_sql, lit_vec, oracle_ivf_centroids, _duck_cosine
+from .llm_ops import (
+    _duck_cosine,
+    cell_structs_sql,
+    ivf_cell_sql,
+    lit_vec,
+    oracle_ivf_centroids,
+)
 from .llm_ops3 import _SEM_THRESHOLD
 from .llm_ops11 import _duck_gopher_pass
 from .llm_ops12 import (
@@ -78,53 +84,213 @@ def _sweep_colocated(truth: DataFrame, cells: DataFrame) -> DataFrame:
     )
 
 
-def _build_cell_sweep_oracle() -> str:
+def _cell_sweep(
+    spark: SparkSession,
+    corpus: DataFrame,
+    truth: DataFrame,
+    n_vec: int,
+    sweep: tuple,
+) -> DataFrame:
+    """The SemDeDup cell sweep: for each cell count in ``sweep``, the
+    same-cell candidate volume of ``corpus(vec_id, embedding)`` under the
+    gate-trained quantizer and how many ``truth(va, vb)`` pairs share a
+    cell. When truth also carries a boolean ``planted`` column, the rows
+    add the planted-pair counts and recall."""
+    from .llm_ops import gate_ivf_centroids
+
+    planted = "planted" in truth.columns
+    truth = truth.cache()
+    # All assignments in ONE relation keyed by (k, vec_id): the
+    # per-k loop previously issued 2 actions per cell count (9 jobs
+    # total — 22 s of mostly scheduling at sf0.1); candidate volumes
+    # and colocated-truth counts now take one job each (4 total).
+    per_k = []
+    for k in sweep:
+        cents = gate_ivf_centroids(n_cells=k)
+        if cents is None:
+            cents = S.ivf_centroids(corpus, n_cells=k)
+        per_k.append(
+            corpus.select(
+                F.lit(k).cast("long").alias("k"),
+                "vec_id",
+                S.ivf_cell_expr(cents).alias("cell"),
+            )
+        )
+    cells_all = per_k[0]
+    for d in per_k[1:]:
+        cells_all = cells_all.unionByName(d)
+    cells_all = cells_all.cache()
+    n_flagged = F.coalesce(
+        F.sum(F.when(F.col("planted"), 1).otherwise(0)), F.lit(0)
+    ).cast("long")
+    names = [
+        "n_cells", "n_vectors", "n_true_pairs", "n_planted_pairs",
+        "n_candidate_pairs", "n_true_colocated", "n_planted_colocated",
+        "recall_permille", "planted_recall_permille",
+        "candidate_share_permille", "recommended",
+    ]
+    if not planted:
+        names = [n for n in names if "planted" not in n]
+    out = []
+    try:
+        if planted:
+            tstats = truth.agg(
+                F.count(F.lit(1)).cast("long").alias("t"),
+                n_flagged.alias("pl"),
+            ).collect()[0]
+            n_true, n_planted = tstats["t"], tstats["pl"]
+        else:
+            n_true, n_planted = truth.count(), 0
+        pair2 = {
+            r["k"]: r["p2"]
+            for r in cells_all.groupBy("k", "cell")
+            .agg(F.count(F.lit(1)).cast("long").alias("pop"))
+            .groupBy("k")
+            .agg(
+                F.coalesce(
+                    F.sum(F.col("pop") * (F.col("pop") - 1)), F.lit(0)
+                )
+                .cast("long")
+                .alias("p2")
+            )
+            .collect()
+        }
+        xa = cells_all.select(
+            "k", F.col("vec_id").alias("va"), F.col("cell").alias("cell_a")
+        )
+        xb = cells_all.select(
+            "k", F.col("vec_id").alias("vb"), F.col("cell").alias("cell_b")
+        )
+        coloc_aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+        if planted:
+            coloc_aggs.append(n_flagged.alias("npl"))
+        coloc = {
+            r["k"]: r
+            for r in truth.join(xa, "va")
+            .join(xb, ["k", "vb"])
+            .filter(F.col("cell_a") == F.col("cell_b"))
+            .groupBy("k")
+            .agg(*coloc_aggs)
+            .collect()
+        }
+        for k in sweep:
+            n_cand = pair2.get(k, 0) // 2
+            n_coloc = coloc[k]["n"] if k in coloc else 0
+            n_pl_coloc = coloc[k]["npl"] if planted and k in coloc else 0
+            c = (n_vec + _SEM_TARGET_POP - 1) // _SEM_TARGET_POP
+            row = {
+                "n_cells": k,
+                "n_vectors": n_vec,
+                "n_true_pairs": n_true,
+                "n_planted_pairs": n_planted,
+                "n_candidate_pairs": n_cand,
+                "n_true_colocated": n_coloc,
+                "n_planted_colocated": n_pl_coloc,
+                "recall_permille": (1000 * n_coloc) // n_true if n_true else 1000,
+                "planted_recall_permille": (1000 * n_pl_coloc) // n_planted
+                if n_planted
+                else 1000,
+                "candidate_share_permille": (1000 * n_cand)
+                // (n_vec * (n_vec - 1) // 2)
+                if n_vec > 1
+                else 0,
+                "recommended": bool(k >= c and k // 2 < c),
+            }
+            out.append(tuple(row[n] for n in names))
+    finally:
+        truth.unpersist()
+        cells_all.unpersist()
+    return spark.createDataFrame(
+        out,
+        ", ".join(
+            f"{n} {'boolean' if n == 'recommended' else 'long'}" for n in names
+        ),
+    ).orderBy("n_cells")
+
+
+def _build_cell_sweep_oracle(
+    sweep: tuple = _SWEEP_CELLS, planted: tuple[str, str] | None = None
+) -> str:
+    """Oracle of the SemDeDup cell sweep over ``embeddings``. With
+    ``planted = (corpus_cte, base_key)`` it sweeps the planted ``corpus``
+    CTE instead: ``base_key`` (an ``{id}`` template naming a vector's
+    planted cluster) flags truth pairs inside one cluster and the rows
+    add the planted-pair columns."""
+    src = "corpus" if planted else "embeddings"
     assigns = []
     rows = []
-    for k in _SWEEP_CELLS:
+    for k in sweep:
         C = oracle_ivf_centroids(n_cells=k, iters=8)
         if C is None:  # gate data absent: oracle never runs, placeholder
             return "SELECT 1 AS n_cells"
-        structs = cell_structs_sql(C)
         assigns.append(
             f"""assign{k} AS (
       SELECT vec_id,
-             CAST(-(list_aggregate([{structs}], 'max').negcell) AS BIGINT)
-               AS cell
-      FROM embeddings
+             {ivf_cell_sql(C, 'cell')}
+      FROM {src}
     )"""
+        )
+        coloc = f"""FROM truth p
+                JOIN assign{k} x ON x.vec_id = p.va
+                JOIN assign{k} y ON y.vec_id = p.vb
+              WHERE x.cell = y.cell"""
+        planted_pairs = "(SELECT pl FROM nt) AS n_planted_pairs," if planted else ""
+        planted_coloc = (
+            f""",
+             (SELECT CAST(COALESCE(SUM(CASE WHEN p.planted THEN 1 ELSE 0
+                                        END), 0) AS BIGINT) {coloc}) AS n_planted_colocated"""
+            if planted
+            else ""
         )
         rows.append(
             f"""
       SELECT CAST({k} AS BIGINT) AS n_cells,
              (SELECT n FROM nv) AS n_vectors,
              (SELECT t FROM nt) AS n_true_pairs,
+             {planted_pairs}
              (SELECT CAST(COALESCE(SUM(pop * (pop - 1)), 0) // 2 AS BIGINT)
               FROM (SELECT CAST(COUNT(*) AS BIGINT) AS pop
                     FROM assign{k} GROUP BY cell)) AS n_candidate_pairs,
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM truth p
-                JOIN assign{k} x ON x.vec_id = p.va
-                JOIN assign{k} y ON y.vec_id = p.vb
-              WHERE x.cell = y.cell) AS n_true_colocated"""
+             (SELECT CAST(COUNT(*) AS BIGINT) {coloc}) AS n_true_colocated{planted_coloc}"""
         )
     assigns_sql = ",\n    ".join(assigns)
     union_sql = "\n      UNION ALL".join(rows)
+    if planted:
+        corpus_cte, base_key = planted
+        key_a, key_b = base_key.format(id="a.vec_id"), base_key.format(id="b.vec_id")
+        head = f"""WITH {corpus_cte},
+    truth AS (
+      SELECT a.vec_id AS va, b.vec_id AS vb,
+             ({key_a}) = ({key_b}) AS planted"""
+        n_planted = """,
+                  CAST(COALESCE(SUM(CASE WHEN planted THEN 1 ELSE 0 END), 0)
+                       AS BIGINT) AS pl"""
+        planted_cols = ("n_planted_pairs,", "n_planted_colocated,")
+        planted_recall = """
+           CAST(CASE WHEN n_planted_pairs > 0
+                THEN 1000 * n_planted_colocated // n_planted_pairs
+                ELSE 1000 END AS BIGINT) AS planted_recall_permille,"""
+    else:
+        head = """WITH truth AS (
+      SELECT a.vec_id AS va, b.vec_id AS vb"""
+        n_planted = planted_recall = ""
+        planted_cols = ("", "")
     return f"""
-    WITH truth AS (
-      SELECT a.vec_id AS va, b.vec_id AS vb
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+    {head}
+      FROM {src} a JOIN {src} b ON a.vec_id < b.vec_id
       WHERE {_duck_cosine('a.embedding', 'b.embedding')} >= {_SEM_THRESHOLD}
     ),
-    nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-    nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM truth),
+    nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM {src}),
+    nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS t{n_planted}
+           FROM truth),
     {assigns_sql},
     raw AS ({union_sql}
     )
-    SELECT n_cells, n_vectors, n_true_pairs, n_candidate_pairs,
-           n_true_colocated,
+    SELECT n_cells, n_vectors, n_true_pairs, {planted_cols[0]}
+           n_candidate_pairs, n_true_colocated, {planted_cols[1]}
            CAST(CASE WHEN n_true_pairs > 0
                 THEN 1000 * n_true_colocated // n_true_pairs
-                ELSE 1000 END AS BIGINT) AS recall_permille,
+                ELSE 1000 END AS BIGINT) AS recall_permille,{planted_recall}
            CAST(CASE WHEN n_vectors > 1
                 THEN CAST(1000 AS HUGEINT) * n_candidate_pairs
                      // (CAST(n_vectors AS HUGEINT) * (n_vectors - 1) // 2)
@@ -157,7 +323,6 @@ def dedup_semantic_cell_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact_cosine_pairs — all-pairs BY DESIGN, it is ground truth);
     the counting side never leaves vec_id/cell-keyed equi-joins."""
     from ..operators.scale import fan_out
-    from .llm_ops import gate_ivf_centroids
 
     t = load_tables(spark, sf_dir, "embeddings")
     # r12: fan_out — the three quantizer applies are the expensive
@@ -169,87 +334,8 @@ def dedup_semantic_cell_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth_df, n_vec = S.exact_cosine_pairs_n(emb, _SEM_THRESHOLD)
     truth = truth_df.select(
         F.col("id_a").alias("va"), F.col("id_b").alias("vb")
-    ).cache()
-    # All three assignments in ONE relation keyed by (k, vec_id): the
-    # per-k loop previously issued 2 actions per cell count (9 jobs
-    # total — 22 s of mostly scheduling at sf0.1); candidate volumes
-    # and colocated-truth counts now take one job each (4 total).
-    per_k = []
-    for k in _SWEEP_CELLS:
-        cents = gate_ivf_centroids(n_cells=k)
-        if cents is None:
-            cents = S.ivf_centroids(emb, n_cells=k)
-        per_k.append(
-            emb.select(
-                F.lit(k).cast("long").alias("k"),
-                "vec_id",
-                S.ivf_cell_expr(cents).alias("cell"),
-            )
-        )
-    cells_all = per_k[0]
-    for d in per_k[1:]:
-        cells_all = cells_all.unionByName(d)
-    cells_all = cells_all.cache()
-    out = []
-    try:
-        n_true = truth.count()
-        pair2 = {
-            r["k"]: r["p2"]
-            for r in cells_all.groupBy("k", "cell")
-            .agg(F.count(F.lit(1)).cast("long").alias("pop"))
-            .groupBy("k")
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("pop") * (F.col("pop") - 1)), F.lit(0)
-                )
-                .cast("long")
-                .alias("p2")
-            )
-            .collect()
-        }
-        xa = cells_all.select(
-            "k", F.col("vec_id").alias("va"), F.col("cell").alias("cell_a")
-        )
-        xb = cells_all.select(
-            "k", F.col("vec_id").alias("vb"), F.col("cell").alias("cell_b")
-        )
-        coloc = {
-            r["k"]: r["n"]
-            for r in truth.join(xa, "va")
-            .join(xb, ["k", "vb"])
-            .filter(F.col("cell_a") == F.col("cell_b"))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .collect()
-        }
-        for k in _SWEEP_CELLS:
-            n_cand = pair2.get(k, 0) // 2
-            n_coloc = coloc.get(k, 0)
-            c = (n_vec + _SEM_TARGET_POP - 1) // _SEM_TARGET_POP
-            out.append(
-                (
-                    k,
-                    n_vec,
-                    n_true,
-                    n_cand,
-                    n_coloc,
-                    (1000 * n_coloc) // n_true if n_true else 1000,
-                    (1000 * n_cand) // (n_vec * (n_vec - 1) // 2)
-                    if n_vec > 1
-                    else 0,
-                    bool(k >= c and k // 2 < c),
-                )
-            )
-    finally:
-        truth.unpersist()
-        cells_all.unpersist()
-    return spark.createDataFrame(
-        out,
-        "n_cells long, n_vectors long, n_true_pairs long, "
-        "n_candidate_pairs long, n_true_colocated long, "
-        "recall_permille long, candidate_share_permille long, "
-        "recommended boolean",
-    ).orderBy("n_cells")
+    )
+    return _cell_sweep(spark, emb, truth, n_vec, _SWEEP_CELLS)
 
 
 def _build_scaled_cluster_oracle() -> str:
@@ -2151,10 +2237,9 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (cohort × age) triangle.
 
 
-@query(
-    "orders_ltv_triangle",
-    oracle="""
-    WITH firsts AS (
+#: Customer acquisition cohorts: ``firsts(o_custkey, cohort_year)`` (year
+#: of the first order) and ``sized(cohort_year, n_customers)``.
+DUCK_ORDER_COHORTS = """firsts AS (
       SELECT o_custkey,
              CAST(MIN(date_part('year', o_orderdate)) AS BIGINT)
                AS cohort_year
@@ -2163,7 +2248,13 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized AS (
       SELECT cohort_year, CAST(COUNT(*) AS BIGINT) AS n_customers
       FROM firsts GROUP BY cohort_year
-    ),
+    )"""
+
+
+@query(
+    "orders_ltv_triangle",
+    oracle=f"""
+    WITH {DUCK_ORDER_COHORTS},
     cells AS (
       SELECT f.cohort_year,
              CAST(date_part('year', o.o_orderdate) AS BIGINT)
@@ -2972,21 +3063,10 @@ def search_rank_agreement_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_kappa_oracle() -> str:
-    from .llm_ops11 import _nb_chain_sql
+    from .llm_ops11 import _nb_cells_sql
 
     return f"""
-    WITH {_nb_chain_sql()},
-    cells AS (
-      SELECT CAST(SUM(CASE WHEN truth AND score_pass >= score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS a,
-             CAST(SUM(CASE WHEN truth AND score_pass < score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS b,
-             CAST(SUM(CASE WHEN NOT truth AND score_pass >= score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS c,
-             CAST(SUM(CASE WHEN NOT truth AND score_pass < score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS d
-      FROM scored
-    )
+    WITH {_nb_cells_sql()}
     SELECT a + b + c + d AS n_docs, a AS n_both_pass, d AS n_both_fail,
            b + c AS n_disagree,
            CAST(1000 * (a + d) // (a + b + c + d) AS BIGINT)
@@ -3015,25 +3095,10 @@ def quality_cohens_kappa_gates(
     between the Gopher rule gate and the NB distilled gate on held-out
     docs, with the raw agreement rate beside it. One pass over the
     shared NB score relation."""
-    from .llm_ops11 import _nb_scored
+    from .llm_ops11 import _nb_cells
     from .llm_ops12 import _idiv_col
 
-    scored = _nb_scored(spark, sf_dir)
-    nb_pass = F.col("score_pass") >= F.col("score_fail")
-    cells = scored.agg(
-        F.sum(F.when(F.col("truth") & nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("a"),
-        F.sum(F.when(F.col("truth") & ~nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("b"),
-        F.sum(F.when(~F.col("truth") & nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("c"),
-        F.sum(F.when(~F.col("truth") & ~nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("d"),
-    )
+    cells = _nb_cells(spark, sf_dir)
     n = F.col("a") + F.col("b") + F.col("c") + F.col("d")
     x = (F.col("a") + F.col("b")) * (F.col("a") + F.col("c")) + (
         F.col("c") + F.col("d")

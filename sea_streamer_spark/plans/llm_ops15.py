@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..sources.tables import load_tables
-from .llm_ops import cell_structs_sql, oracle_ivf_centroids, _duck_cosine
 from .llm_ops3 import _SEM_THRESHOLD
+from .llm_ops14 import DUCK_ORDER_COHORTS, _build_cell_sweep_oracle, _cell_sweep
 from .registry import query
 
 # ---------------------------------------------------------------- wave 1
@@ -222,7 +222,6 @@ _PLANTED_ID_BASE = 1_000_000
 #: swept quantizer sizes: 16 = the r9 fixed pin, 32/128 = the
 #: semantic_cells_for rungs the planted corpus sizes (650 / 2600) hit.
 _PLANTED_SWEEP = (16, 32, 128)
-_SEM_TARGET_POP = 32
 
 
 def planted_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,84 +286,11 @@ _BASE_KEY_SQL = (
 )
 
 
-def _build_planted_sweep_oracle() -> str:
-    assigns = []
-    rows = []
-    for k in _PLANTED_SWEEP:
-        C = oracle_ivf_centroids(n_cells=k, iters=8)
-        if C is None:  # gate data absent: oracle never runs, placeholder
-            return "SELECT 1 AS n_cells"
-        structs = cell_structs_sql(C)
-        assigns.append(
-            f"""assign{k} AS (
-      SELECT vec_id,
-             CAST(-(list_aggregate([{structs}], 'max').negcell) AS BIGINT)
-               AS cell
-      FROM corpus
-    )"""
-        )
-        rows.append(
-            f"""
-      SELECT CAST({k} AS BIGINT) AS n_cells,
-             (SELECT n FROM nv) AS n_vectors,
-             (SELECT t FROM nt) AS n_true_pairs,
-             (SELECT pl FROM nt) AS n_planted_pairs,
-             (SELECT CAST(COALESCE(SUM(pop * (pop - 1)), 0) // 2 AS BIGINT)
-              FROM (SELECT CAST(COUNT(*) AS BIGINT) AS pop
-                    FROM assign{k} GROUP BY cell)) AS n_candidate_pairs,
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM truth p
-                JOIN assign{k} x ON x.vec_id = p.va
-                JOIN assign{k} y ON y.vec_id = p.vb
-              WHERE x.cell = y.cell) AS n_true_colocated,
-             (SELECT CAST(COALESCE(SUM(CASE WHEN p.planted THEN 1 ELSE 0
-                                        END), 0) AS BIGINT) FROM truth p
-                JOIN assign{k} x ON x.vec_id = p.va
-                JOIN assign{k} y ON y.vec_id = p.vb
-              WHERE x.cell = y.cell) AS n_planted_colocated"""
-        )
-    assigns_sql = ",\n    ".join(assigns)
-    union_sql = "\n      UNION ALL".join(rows)
-    key_a = _BASE_KEY_SQL.format(id="a.vec_id")
-    key_b = _BASE_KEY_SQL.format(id="b.vec_id")
-    return f"""
-    WITH {_PLANTED_CORPUS_SQL},
-    truth AS (
-      SELECT a.vec_id AS va, b.vec_id AS vb,
-             ({key_a}) = ({key_b}) AS planted
-      FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-      WHERE {_duck_cosine('a.embedding', 'b.embedding')} >= {_SEM_THRESHOLD}
-    ),
-    nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM corpus),
-    nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS t,
-                  CAST(COALESCE(SUM(CASE WHEN planted THEN 1 ELSE 0 END), 0)
-                       AS BIGINT) AS pl
-           FROM truth),
-    {assigns_sql},
-    raw AS ({union_sql}
-    )
-    SELECT n_cells, n_vectors, n_true_pairs, n_planted_pairs,
-           n_candidate_pairs, n_true_colocated, n_planted_colocated,
-           CAST(CASE WHEN n_true_pairs > 0
-                THEN 1000 * n_true_colocated // n_true_pairs
-                ELSE 1000 END AS BIGINT) AS recall_permille,
-           CAST(CASE WHEN n_planted_pairs > 0
-                THEN 1000 * n_planted_colocated // n_planted_pairs
-                ELSE 1000 END AS BIGINT) AS planted_recall_permille,
-           CAST(CASE WHEN n_vectors > 1
-                THEN CAST(1000 AS HUGEINT) * n_candidate_pairs
-                     // (CAST(n_vectors AS HUGEINT) * (n_vectors - 1) // 2)
-                ELSE 0 END AS BIGINT) AS candidate_share_permille,
-           (n_cells >= (n_vectors + {_SEM_TARGET_POP - 1})
-                       // {_SEM_TARGET_POP}
-            AND n_cells // 2 < (n_vectors + {_SEM_TARGET_POP - 1})
-                               // {_SEM_TARGET_POP}) AS recommended
-    FROM raw ORDER BY n_cells
-    """
-
-
 @query(
     "dedup_semantic_recall_planted",
-    oracle=_build_planted_sweep_oracle(),
+    oracle=_build_cell_sweep_oracle(
+        _PLANTED_SWEEP, (_PLANTED_CORPUS_SQL, _BASE_KEY_SQL)
+    ),
     tags=("llm", "dedup", "eval"),
 )
 def dedup_semantic_recall_planted(
@@ -386,7 +312,6 @@ def dedup_semantic_recall_planted(
     are the gate-trained k-means family (train-once-apply-at-any-scale,
     so each size matches its centroid-literal oracle at every sf)."""
     from ..operators.scale import fan_out
-    from .llm_ops import gate_ivf_centroids
 
     # r12: fan_out — the three quantizer applies below are the expensive
     # per-row stages and the derived corpus otherwise inherits the single
@@ -409,104 +334,8 @@ def dedup_semantic_recall_planted(
                 key_b.replace("//", "div")
             ),
         )
-        .cache()
     )
-    per_k = []
-    for k in _PLANTED_SWEEP:
-        cents = gate_ivf_centroids(n_cells=k)
-        if cents is None:
-            cents = S.ivf_centroids(corpus, n_cells=k)
-        per_k.append(
-            corpus.select(
-                F.lit(k).cast("long").alias("k"),
-                "vec_id",
-                S.ivf_cell_expr(cents).alias("cell"),
-            )
-        )
-    cells_all = per_k[0]
-    for d in per_k[1:]:
-        cells_all = cells_all.unionByName(d)
-    cells_all = cells_all.cache()
-    out = []
-    try:
-        tstats = truth.agg(
-            F.count(F.lit(1)).cast("long").alias("t"),
-            F.coalesce(
-                F.sum(F.when(F.col("planted"), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("long")
-            .alias("pl"),
-        ).collect()[0]
-        n_true, n_planted = tstats["t"], tstats["pl"]
-        pair2 = {
-            r["k"]: r["p2"]
-            for r in cells_all.groupBy("k", "cell")
-            .agg(F.count(F.lit(1)).cast("long").alias("pop"))
-            .groupBy("k")
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("pop") * (F.col("pop") - 1)), F.lit(0)
-                )
-                .cast("long")
-                .alias("p2")
-            )
-            .collect()
-        }
-        xa = cells_all.select(
-            "k", F.col("vec_id").alias("va"), F.col("cell").alias("cell_a")
-        )
-        xb = cells_all.select(
-            "k", F.col("vec_id").alias("vb"), F.col("cell").alias("cell_b")
-        )
-        coloc = {
-            r["k"]: (r["n"], r["npl"])
-            for r in truth.join(xa, "va")
-            .join(xb, ["k", "vb"])
-            .filter(F.col("cell_a") == F.col("cell_b"))
-            .groupBy("k")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.coalesce(
-                    F.sum(F.when(F.col("planted"), 1).otherwise(0)),
-                    F.lit(0),
-                )
-                .cast("long")
-                .alias("npl"),
-            )
-            .collect()
-        }
-        for k in _PLANTED_SWEEP:
-            n_cand = pair2.get(k, 0) // 2
-            n_coloc, n_pl_coloc = coloc.get(k, (0, 0))
-            c = (n_vec + _SEM_TARGET_POP - 1) // _SEM_TARGET_POP
-            out.append(
-                (
-                    k,
-                    n_vec,
-                    n_true,
-                    n_planted,
-                    n_cand,
-                    n_coloc,
-                    n_pl_coloc,
-                    (1000 * n_coloc) // n_true if n_true else 1000,
-                    (1000 * n_pl_coloc) // n_planted if n_planted else 1000,
-                    (1000 * n_cand) // (n_vec * (n_vec - 1) // 2)
-                    if n_vec > 1
-                    else 0,
-                    bool(k >= c and k // 2 < c),
-                )
-            )
-    finally:
-        truth.unpersist()
-        cells_all.unpersist()
-    return spark.createDataFrame(
-        out,
-        "n_cells long, n_vectors long, n_true_pairs long, "
-        "n_planted_pairs long, n_candidate_pairs long, "
-        "n_true_colocated long, n_planted_colocated long, "
-        "recall_permille long, planted_recall_permille long, "
-        "candidate_share_permille long, recommended boolean",
-    ).orderBy("n_cells")
+    return _cell_sweep(spark, corpus, truth, n_vec, _PLANTED_SWEEP)
 
 
 # ---------------------------------------------------------------- wave 3
@@ -829,21 +658,10 @@ def curation_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_mcc_oracle() -> str:
-    from .llm_ops11 import _nb_chain_sql
+    from .llm_ops11 import _nb_cells_sql
 
     return f"""
-    WITH {_nb_chain_sql()},
-    cells AS (
-      SELECT CAST(SUM(CASE WHEN truth AND score_pass >= score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS a,
-             CAST(SUM(CASE WHEN truth AND score_pass < score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS b,
-             CAST(SUM(CASE WHEN NOT truth AND score_pass >= score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS c,
-             CAST(SUM(CASE WHEN NOT truth AND score_pass < score_fail
-                      THEN 1 ELSE 0 END) AS BIGINT) AS d
-      FROM scored
-    )
+    WITH {_nb_cells_sql()}
     SELECT a + b + c + d AS n_docs,
            a AS n_tp, b AS n_fn, c AS n_fp, d AS n_tn,
            CAST(CASE WHEN a + b = 0 OR a + c = 0 OR b + d = 0
@@ -873,25 +691,10 @@ def quality_mcc_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB distilled gate against the Gopher rule truth, over the SAME
     single-sourced 2x2 cells as the kappa/McNemar waves (pinned equal
     in tests). One pass over the shared NB score relation."""
-    from .llm_ops11 import _nb_scored
+    from .llm_ops11 import _nb_cells
     from .llm_ops12 import _idiv_col
 
-    scored = _nb_scored(spark, sf_dir)
-    nb_pass = F.col("score_pass") >= F.col("score_fail")
-    cells = scored.agg(
-        F.sum(F.when(F.col("truth") & nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("a"),
-        F.sum(F.when(F.col("truth") & ~nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("b"),
-        F.sum(F.when(~F.col("truth") & nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("c"),
-        F.sum(F.when(~F.col("truth") & ~nb_pass, 1).otherwise(0))
-        .cast("long")
-        .alias("d"),
-    )
+    cells = _nb_cells(spark, sf_dir)
     a, b, c, d = (F.col(x) for x in "abcd")
     n = a + b + c + d
     margins = (
@@ -1675,17 +1478,8 @@ def basket_part_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_retention_triangle",
-    oracle="""
-    WITH firsts AS (
-      SELECT o_custkey,
-             CAST(MIN(date_part('year', o_orderdate)) AS BIGINT)
-               AS cohort_year
-      FROM orders GROUP BY o_custkey
-    ),
-    sized AS (
-      SELECT cohort_year, CAST(COUNT(*) AS BIGINT) AS n_customers
-      FROM firsts GROUP BY cohort_year
-    ),
+    oracle=f"""
+    WITH {DUCK_ORDER_COHORTS},
     active AS (
       SELECT DISTINCT f.cohort_year, o.o_custkey,
              CAST(date_part('year', o.o_orderdate) AS BIGINT)

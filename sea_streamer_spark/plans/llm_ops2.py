@@ -23,7 +23,7 @@ from ..operators import graph as G
 from ..operators import quality as Q
 from ..operators import text as T
 from ..sources.tables import load_tables
-from .llm_ops import DUCK_SHINGLE_SETS, _duck_cosine
+from .llm_ops import NEAR_DUP_CLUSTERS, _duck_cosine
 from .registry import query
 
 TOKS = T.duck_tokens("text")
@@ -239,32 +239,19 @@ def curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE {DUCK_SHINGLE_SETS},
-    pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-    ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
-    cc(node, lbl) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM e)
-      UNION
-      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
-    ),
-    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node)
+#: Near-dup cluster id per document (singletons are their own cluster);
+#: also the oracle of llm_ops6.dedup_clusters_incremental.
+DEDUP_CLUSTERS_SQL = f"""
+    WITH RECURSIVE {NEAR_DUP_CLUSTERS}
     SELECT d.doc_id, COALESCE(l.cluster, d.doc_id) AS cluster_id
     FROM documents d LEFT JOIN lbls l ON l.node = d.doc_id
     ORDER BY doc_id
-    """,
+    """
+
+
+@query(
+    "dedup_clusters",
+    oracle=DEDUP_CLUSTERS_SQL,
     tags=("llm", "dedup"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,11 +27,10 @@ TOKS = T.duck_tokens("text")
 # BM25 constants (the standard Robertson defaults)
 _K1, _B = 1.2, 0.75
 
-
-@query(
-    "search_bm25_topk",
-    oracle=f"""
-    WITH corpus AS (
+#: BM25 inputs for query doc 0 against the rest of the corpus:
+#: ``corpus(doc_id, toks)``, the query terms ``qt(term)``, document
+#: lengths ``dl(doc_id, dl)`` and the one-row ``stats(n_docs, avgdl)``.
+DUCK_BM25_STATS = f"""corpus AS (
       SELECT doc_id, {TOKS} AS toks FROM documents WHERE doc_id <> 0
     ), qt AS (
       SELECT DISTINCT unnest({TOKS}) AS term FROM documents WHERE doc_id = 0
@@ -41,7 +40,13 @@ _K1, _B = 1.2, 0.75
       SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
       FROM dl
-    ), tfq AS (
+    )"""
+
+
+@query(
+    "search_bm25_topk",
+    oracle=f"""
+    WITH {DUCK_BM25_STATS}, tfq AS (
       SELECT c.doc_id, c.term, CAST(COUNT(*) AS BIGINT) AS tf
       FROM (SELECT doc_id, unnest(toks) AS term FROM corpus) c
       JOIN qt USING (term)
@@ -288,20 +293,19 @@ def _build_semantic_oracle() -> str | None:
     the shared memoized quantizer (llm_ops.oracle_ivf_centroids — one sample
     scan + one training per process across all ANN oracles) emits centroid
     literals, and the SQL recomputes cell assignment (struct-max argmax with
-    the smaller-cell tie-break, the single-sourced cell_structs_sql snippet)
+    the smaller-cell tie-break, the single-sourced ivf_cell_sql snippet)
     plus the within-cell dominated-by-smaller-id EXISTS rule — bit-exact
     because every float expression uses the same fold order as the Spark
     side."""
-    from .llm_ops import cell_structs_sql, oracle_ivf_centroids
+    from .llm_ops import ivf_cell_sql, oracle_ivf_centroids
 
     C = oracle_ivf_centroids(n_cells=_SEM_CELLS, iters=8)
     if C is None:
         return None
-    structs = cell_structs_sql(C)
     return f"""
     WITH assigned AS (
       SELECT vec_id, embedding,
-             CAST(-(list_aggregate([{structs}], 'max').negcell) AS BIGINT) AS cell
+             {ivf_cell_sql(C, 'cell')}
       FROM embeddings
     )
     SELECT a.vec_id, a.cell,

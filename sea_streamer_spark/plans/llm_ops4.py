@@ -21,7 +21,15 @@ from ..operators.bloom import bloom_incremental_dedup
 from ..operators.dedup import duplicated_span_coverage
 from ..operators.quality import char_lm_score
 from ..sources.tables import load_tables
-from .llm_ops import ORACLE_SF_DIR, lit_vec
+from .llm_ops import (
+    DUCK_DUP_3GRAM_COVER,
+    DUCK_SHINGLE_SETS,
+    NEAR_DUP_CLUSTERS,
+    NEAR_DUP_PAIRS,
+    ORACLE_SF_DIR,
+    UNDIRECTED_EDGES,
+    lit_vec,
+)
 from .registry import query
 
 _TOKS = "string_split_regex(text, '\\s+')"
@@ -30,23 +38,7 @@ _TOKS = "string_split_regex(text, '\\s+')"
 #: Shared by dedup_span_coverage and its salted (skew-immune) variant —
 #: same semantics, different physical plan, one oracle.
 _SPAN_COVERAGE_ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKS} AS tk FROM documents
-    ), pos AS (
-      SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 2)) AS i
-      FROM toks WHERE len(tk) >= 3
-    ), sh AS (
-      SELECT doc_id, i - 1 AS pos,
-             tk[i] || ' ' || tk[i + 1] || ' ' || tk[i + 2] AS sh
-      FROM pos
-    ), dup AS (
-      SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) >= 2
-    ), cov AS (
-      SELECT DISTINCT doc_id, idx FROM (
-        SELECT s.doc_id, s.pos + unnest([0, 1, 2]) AS idx
-        FROM sh s JOIN dup USING (sh)
-      )
-    ), covered AS (
+    WITH {DUCK_DUP_3GRAM_COVER}, covered AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS covered_tokens
       FROM cov GROUP BY doc_id
     )
@@ -587,8 +579,6 @@ _PR_ITERS = 4
 
 
 def _build_pagerank_oracle() -> str:
-    from .llm_ops import DUCK_SHINGLE_SETS
-
     rounds = []
     for k in range(1, _PR_ITERS + 1):
         rounds.append(f"""
@@ -603,17 +593,9 @@ def _build_pagerank_oracle() -> str:
     return f"""
     WITH {DUCK_SHINGLE_SETS},
     pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
+    e AS ({UNDIRECTED_EDGES}),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY u),
     n AS (SELECT doc_id AS node FROM documents),
     it0 AS (SELECT node, CAST(1000000 AS BIGINT) AS s FROM n),
@@ -685,13 +667,21 @@ def _sq(s: str) -> str:
     return s.replace("'", "''")
 
 
-def _build_bpe_oracle() -> str | None:
-    merges = bpe_train_py(os.path.join(ORACLE_SF_DIR, "documents.parquet"))
-    if merges is None:
-        return None
+def _duck_merge_chain(merges) -> str:
+    """DuckDB ``replace()`` chain applying ``merges`` in order to the
+    space-separated symbols of ``s0``."""
     s = "s0"
-    for left, right, _ in merges:
-        s = f"replace({s}, ' {_sq(left)} {_sq(right)} ', ' {_sq(left)}{_sq(right)} ')"
+    for left, right, _x in merges:
+        s = (
+            f"replace({s}, ' {_sq(left)} {_sq(right)} ',"
+            f" ' {_sq(left)}{_sq(right)} ')"
+        )
+    return s
+
+
+def _duck_merge_token_counts(merges, col: str) -> str:
+    """Oracle of a merge-list tokenizer (BPE, WordPiece): per document the
+    word count and the token count ``col`` after applying ``merges``."""
     return f"""
     WITH words AS (
       SELECT doc_id, w FROM (
@@ -699,7 +689,7 @@ def _build_bpe_oracle() -> str | None:
         FROM documents
       ) WHERE len(w) > 0
     ), ap AS (
-      SELECT doc_id, {s} AS s FROM (
+      SELECT doc_id, {_duck_merge_chain(merges)} AS s FROM (
         SELECT doc_id,
                ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS s0
         FROM words
@@ -707,14 +697,21 @@ def _build_bpe_oracle() -> str | None:
     ), tok AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
              CAST(SUM(len(string_split(trim(s), ' '))) AS BIGINT)
-               AS n_bpe_tokens
+               AS {col}
       FROM ap GROUP BY doc_id
     )
     SELECT d.doc_id,
            CAST(COALESCE(t.n_words, 0) AS BIGINT) AS n_words,
-           CAST(COALESCE(t.n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens
+           CAST(COALESCE(t.{col}, 0) AS BIGINT) AS {col}
     FROM documents d LEFT JOIN tok t USING (doc_id)
     ORDER BY d.doc_id"""
+
+
+def _build_bpe_oracle() -> str | None:
+    merges = bpe_train_py(os.path.join(ORACLE_SF_DIR, "documents.parquet"))
+    if merges is None:
+        return None
+    return _duck_merge_token_counts(merges, "n_bpe_tokens")
 
 
 def bpe_train_spark(spark: SparkSession, sf_dir: str):
@@ -770,31 +767,12 @@ def tokenizer_bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators import curation as C  # noqa: E402
 from ..operators import dedup as D  # noqa: E402
 from ..operators import graph as G  # noqa: E402
-from .llm_ops import DUCK_SHINGLE_SETS  # noqa: E402
 
 
 @query(
     "curation_leakage_safe_split",
     oracle=f"""
-    WITH RECURSIVE {DUCK_SHINGLE_SETS},
-    pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-    ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
-    cc(node, lbl) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM e)
-      UNION
-      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
-    ),
-    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node),
+    WITH RECURSIVE {NEAR_DUP_CLUSTERS},
     assigned AS (
       SELECT d.doc_id,
              CAST(COALESCE(l.cluster, d.doc_id) AS BIGINT) AS cluster_id

@@ -578,43 +578,13 @@ def _wp_train_py(parquet_path: str):
     return _wp_cache[key]
 
 
-def _wp_sq(s: str) -> str:
-    return s.replace("'", "''")
-
-
 def _build_wp_oracle() -> str | None:
+    from .llm_ops4 import _duck_merge_token_counts
+
     merges = _wp_train_py(_os.path.join(_GATE, "documents.parquet"))
     if merges is None:
         return None
-    s = "s0"
-    for left, right, _ in merges:
-        s = (
-            f"replace({s}, ' {_wp_sq(left)} {_wp_sq(right)} ',"
-            f" ' {_wp_sq(left)}{_wp_sq(right)} ')"
-        )
-    return f"""
-    WITH words AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS w
-        FROM documents
-      ) WHERE len(w) > 0
-    ), ap AS (
-      SELECT doc_id, {s} AS s FROM (
-        SELECT doc_id,
-               ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS s0
-        FROM words
-      )
-    ), tok AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-             CAST(SUM(len(string_split(trim(s), ' '))) AS BIGINT)
-               AS n_wp_tokens
-      FROM ap GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(t.n_words, 0) AS BIGINT) AS n_words,
-           CAST(COALESCE(t.n_wp_tokens, 0) AS BIGINT) AS n_wp_tokens
-    FROM documents d LEFT JOIN tok t USING (doc_id)
-    ORDER BY d.doc_id"""
+    return _duck_merge_token_counts(merges, "n_wp_tokens")
 
 
 def _wp_train_spark(spark: SparkSession, sf_dir: str):
@@ -990,35 +960,19 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental dedup-cluster maintenance (graph.incremental_components)
 # ---------------------------------------------------------------------------
 
-from .llm_ops import DUCK_SHINGLE_SETS as _DSS  # noqa: E402
+from .llm_ops import (  # noqa: E402
+    DUCK_DUP_3GRAM_COVER,
+    DUCK_SHINGLE_SETS,
+    DUCK_SPAN_REMOVAL_TAIL,
+    NEAR_DUP_CLUSTERS,
+    NEAR_DUP_PAIRS,
+)
+from .llm_ops2 import DEDUP_CLUSTERS_SQL  # noqa: E402
 
 
 @query(
     "dedup_clusters_incremental",
-    oracle=f"""
-    WITH RECURSIVE {_DSS},
-    pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-    ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
-    cc(node, lbl) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM e)
-      UNION
-      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
-    ),
-    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node)
-    SELECT d.doc_id, COALESCE(l.cluster, d.doc_id) AS cluster_id
-    FROM documents d LEFT JOIN lbls l ON l.node = d.doc_id
-    ORDER BY doc_id
-    """,
+    oracle=DEDUP_CLUSTERS_SQL,
     tags=("llm", "dedup"),
 )
 def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1614,16 +1568,9 @@ def profile_drift_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_triangle_counts",
     oracle=f"""
-    WITH {_DSS},
+    WITH {DUCK_SHINGLE_SETS},
     pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
     tri AS (
       SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
@@ -1728,40 +1675,7 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_span_removal",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(text, '\\s+') AS tk FROM documents
-    ), pos AS (
-      SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 2)) AS i
-      FROM toks WHERE len(tk) >= 3
-    ), sh AS (
-      SELECT doc_id, i - 1 AS pos,
-             tk[i] || ' ' || tk[i + 1] || ' ' || tk[i + 2] AS sh
-      FROM pos
-    ), dup AS (
-      SELECT sh FROM sh GROUP BY sh HAVING COUNT(*) >= 2
-    ), cov AS (
-      SELECT DISTINCT doc_id, idx FROM (
-        SELECT s.doc_id, s.pos + unnest([0, 1, 2]) AS idx
-        FROM sh s JOIN dup USING (sh)
-      )
-    ), tp AS (
-      SELECT t.doc_id, i - 1 AS idx, t.tk[i] AS tok
-      FROM toks t, unnest(generate_series(1, len(t.tk))) AS u(i)
-    ), kept AS (
-      SELECT tp.doc_id, tp.idx, tp.tok
-      FROM tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.idx = tp.idx
-      WHERE cov.doc_id IS NULL
-    ), rebuilt AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-             md5(string_agg(tok, ' ' ORDER BY idx)) AS clean_fp
-      FROM kept GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           CAST(len(t.tk) AS BIGINT) AS n_tokens,
-           CAST(len(t.tk) - COALESCE(r.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(r.clean_fp, md5('')) AS clean_fp
-    FROM toks t LEFT JOIN rebuilt r USING (doc_id)
-    ORDER BY t.doc_id
+    WITH {DUCK_DUP_3GRAM_COVER}, {DUCK_SPAN_REMOVAL_TAIL}
     """,
     tags=("llm", "dedup"),
 )
@@ -2405,25 +2319,7 @@ def scalar_collection_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_bfs_levels",
     oracle=f"""
-    WITH RECURSIVE {_DSS},
-    pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-    ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
-    cc(node, lbl) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM e)
-      UNION
-      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
-    ),
-    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node),
+    WITH RECURSIVE {NEAR_DUP_CLUSTERS},
     roots AS (SELECT DISTINCT cluster AS n FROM lbls),
     bfs(n, level) AS (
       SELECT n, 0 FROM roots

@@ -34,7 +34,13 @@ from ..operators import quality as Q
 from ..operators import similarity as S
 from ..operators import text as T
 from ..sources.tables import load_tables
-from .llm_ops import DUCK_SHINGLE_SETS, _duck_cosine
+from .llm_ops import (
+    DUCK_SHINGLE_SETS,
+    NEAR_DUP_CLUSTERS,
+    NEAR_DUP_PAIRS,
+    _duck_cosine,
+    shingle_overlap_sql,
+)
 from .registry import query
 
 #: The exact-Jaccard >= 0.5 near-dup cluster assignment as a DuckDB CTE
@@ -42,25 +48,7 @@ from .registry import query
 #: ``dedup_clusters`` oracle in llm_ops2.py, kept verbatim so the two
 #: relations can never drift apart).
 _DUCK_CLUSTERS = f"""
-    {DUCK_SHINGLE_SETS},
-    pairs AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-    ),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs),
-    cc(node, lbl) AS (
-      SELECT u, u FROM (SELECT DISTINCT u FROM e)
-      UNION
-      SELECT e.v, cc.lbl FROM cc JOIN e ON e.u = cc.node
-    ),
-    lbls AS (SELECT node, MIN(lbl) AS cluster FROM cc GROUP BY node),
+    {NEAR_DUP_CLUSTERS},
     asg AS (
       SELECT d.doc_id, COALESCE(l.cluster, d.doc_id) AS cluster_id,
              d.n_chars, d.source
@@ -563,9 +551,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {DUCK_SHINGLE_SETS},
     inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-      FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
+      {shingle_overlap_sql()}
     )
     SELECT doc_a, doc_b,
            CAST(FLOOR(1000.0 * inter / sa.n) AS BIGINT) AS cont_a_permille,
@@ -1204,19 +1190,45 @@ def curation_pii_rate_by_source(
 
 # -------------------------------- wave 6: concentration & search rendering
 
+_REV_CENTS_SQL = "SUM(CAST(CAST(o.o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)) AS cents"
+_REV_DOLLARS_SQL = "SUM(CAST(FLOOR(CAST(o.o_totalprice AS DECIMAL(14,2))) AS BIGINT)) AS dollars"
 
-@query(
-    "orders_pareto_concentration",
-    oracle="""
-    WITH rev AS (
+
+def _duck_nation_customer_rev(value: str) -> str:
+    """Oracle ``rev(nation, custkey, ...)`` CTE: one row per customer
+    (keyed by nation name) carrying the aggregate ``value``."""
+    return f"""rev AS (
       SELECT n.n_name AS nation, c.c_custkey AS custkey,
-             SUM(CAST(CAST(o.o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT))
-               AS cents
+             {value}
       FROM orders o
       JOIN customer c ON c.c_custkey = o.o_custkey
       JOIN nation n ON n.n_nationkey = c.c_nationkey
       GROUP BY 1, 2
-    ), ranked AS (
+    )"""
+
+
+def _nation_customer_rev(t, value, alias: str) -> DataFrame:
+    """(nation, c_custkey, ``alias``): per-customer sum of the order-level
+    ``value`` column, keyed by nation name — the input of the per-nation
+    concentration queries."""
+    return (
+        t.orders.join(
+            t.customer.select("c_custkey", "c_nationkey"),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(t.nation.select("n_nationkey", "n_name")),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
+        .groupBy(F.col("n_name").alias("nation"), F.col("c_custkey"))
+        .agg(F.sum(value).alias(alias))
+    )
+
+
+@query(
+    "orders_pareto_concentration",
+    oracle=f"""
+    WITH {_duck_nation_customer_rev(_REV_CENTS_SQL)}, ranked AS (
       SELECT nation, cents,
              SUM(cents) OVER (PARTITION BY nation
                               ORDER BY cents DESC, custkey
@@ -1257,18 +1269,7 @@ def orders_pareto_concentration(
     cents = (
         F.col("o_totalprice").cast("decimal(14,2)") * 100
     ).cast("long")
-    rev = (
-        t.orders.join(
-            t.customer.select("c_custkey", "c_nationkey"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy(F.col("n_name").alias("nation"), F.col("c_custkey"))
-        .agg(F.sum(cents).alias("cents"))
-    )
+    rev = _nation_customer_rev(t, cents, "cents")
     part = W.partitionBy("nation")
     order = part.orderBy(F.desc("cents"), F.asc("c_custkey"))
     ranked = rev.select(
@@ -1361,16 +1362,8 @@ def search_snippet_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_gini_by_nation",
-    oracle="""
-    WITH rev AS (
-      SELECT n.n_name AS nation, c.c_custkey AS custkey,
-             SUM(CAST(CAST(o.o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT))
-               AS cents
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey
-      GROUP BY 1, 2
-    ), ranked AS (
+    oracle=f"""
+    WITH {_duck_nation_customer_rev(_REV_CENTS_SQL)}, ranked AS (
       SELECT nation, cents,
              ROW_NUMBER() OVER (PARTITION BY nation
                                 ORDER BY cents, custkey) AS i
@@ -1407,18 +1400,7 @@ def agg_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (
         F.col("o_totalprice").cast("decimal(14,2)") * 100
     ).cast("long")
-    rev = (
-        t.orders.join(
-            t.customer.select("c_custkey", "c_nationkey"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy(F.col("n_name").alias("nation"), F.col("c_custkey"))
-        .agg(F.sum(cents).alias("cents"))
-    )
+    rev = _nation_customer_rev(t, cents, "cents")
     i = F.row_number().over(
         W.partitionBy("nation").orderBy("cents", "c_custkey")
     ).cast("long")
@@ -1588,22 +1570,12 @@ def events_weekday_hour_heatmap(
 
 # --------------------- wave 9 (round-5 final): evals, bursts, profiles
 
-from .llm_ops import DUCK_SHINGLE_SETS as _DSS  # noqa: E402  (alias for f-string clarity)
-
-
 @query(
     "dedup_lsh_recall_eval",
     oracle=f"""
-    WITH {_DSS},
+    WITH {DUCK_SHINGLE_SETS},
     exact AS (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ), c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM exact)
     -- The oracle pins the EXACT side and asserts full recall (the 24x6
     -- banding recovers every J>=0.5 pair on this corpus, verified by the
@@ -1821,16 +1793,8 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_hhi_by_nation",
-    oracle="""
-    WITH rev AS (
-      SELECT n.n_name AS nation, c.c_custkey AS custkey,
-             SUM(CAST(FLOOR(CAST(o.o_totalprice AS DECIMAL(14,2)))
-                      AS BIGINT)) AS dollars
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey
-      GROUP BY 1, 2
-    ), agg AS (
+    oracle=f"""
+    WITH {_duck_nation_customer_rev(_REV_DOLLARS_SQL)}, agg AS (
       SELECT nation, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(dollars * dollars) AS BIGINT) AS sc2,
              CAST(SUM(dollars) AS BIGINT) AS t
@@ -1862,18 +1826,7 @@ def agg_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dollars = F.floor(F.col("o_totalprice").cast("decimal(14,2)")).cast(
         "long"
     )
-    rev = (
-        t.orders.join(
-            t.customer.select("c_custkey", "c_nationkey"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy(F.col("n_name").alias("nation"), F.col("c_custkey"))
-        .agg(F.sum(dollars).alias("dollars"))
-    )
+    rev = _nation_customer_rev(t, dollars, "dollars")
     agg = rev.groupBy("nation").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("dollars") * F.col("dollars")).cast("long").alias("sc2"),

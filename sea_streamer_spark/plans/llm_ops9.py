@@ -35,6 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import load_tables
+from .llm_ops import (
+    DUCK_SHINGLE_SETS,
+    DUCK_SPAN_REMOVAL_TAIL,
+    NEAR_DUP_PAIRS,
+    UNDIRECTED_EDGES,
+    near_dup_pairs_sql,
+)
 from .registry import query
 
 #: Lee et al. use 50 BPE tokens as the duplication threshold; 10 words is
@@ -116,24 +123,7 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s.doc_id, s.pos + unnest(generate_series(0, {_SPAN_L - 1})) AS idx
         FROM sh s JOIN dup USING (sh)
       )
-    ), tp AS (
-      SELECT t.doc_id, i - 1 AS idx, t.tk[i] AS tok
-      FROM toks t, unnest(generate_series(1, len(t.tk))) AS u(i)
-    ), kept AS (
-      SELECT tp.doc_id, tp.idx, tp.tok
-      FROM tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.idx = tp.idx
-      WHERE cov.doc_id IS NULL
-    ), rebuilt AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-             md5(string_agg(tok, ' ' ORDER BY idx)) AS clean_fp
-      FROM kept GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           CAST(len(t.tk) AS BIGINT) AS n_tokens,
-           CAST(len(t.tk) - COALESCE(r.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(r.clean_fp, md5('')) AS clean_fp
-    FROM toks t LEFT JOIN rebuilt r USING (doc_id)
-    ORDER BY t.doc_id
+    ), {DUCK_SPAN_REMOVAL_TAIL}
     """,
     tags=("llm", "dedup"),
 )
@@ -450,8 +440,6 @@ _KCORE_ROUNDS = 4
 
 
 def _build_kcore_oracle() -> str:
-    from .llm_ops import DUCK_SHINGLE_SETS
-
     rounds = []
     for r in range(1, _KCORE_ROUNDS + 1):
         rounds.append(f"""
@@ -465,17 +453,9 @@ def _build_kcore_oracle() -> str:
     return f"""
     WITH {DUCK_SHINGLE_SETS},
     pairs AS MATERIALIZED (
-      SELECT doc_a, doc_b FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {NEAR_DUP_PAIRS}
     ),
-    e0 AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-           UNION ALL SELECT doc_b, doc_a FROM pairs),
+    e0 AS MATERIALIZED ({UNDIRECTED_EDGES}),
     {",".join(rounds)}
     SELECT u AS doc_id, CAST(COUNT(*) AS BIGINT) AS degree
     FROM e{_KCORE_ROUNDS} GROUP BY u ORDER BY doc_id"""
@@ -627,7 +607,6 @@ def _build_minhash_estimate_oracle() -> str:
     # red-row-means-recompute-recall convention).
     from ..operators.dedup import MINHASH_AB, MOD, N_MINHASH
     from ..operators.text import duck_char_fold
-    from .llm_ops import DUCK_SHINGLE_SETS
 
     mins = ",\n             ".join(
         f"MIN(({a} * h + {b}) % {MOD}) AS m{j}"
@@ -645,14 +624,7 @@ def _build_minhash_estimate_oracle() -> str:
       FROM h GROUP BY doc_id
     ),
     pairs AS (
-      SELECT doc_a, doc_b, inter, sa.n AS na, sb.n AS nb FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
+      {near_dup_pairs_sql('doc_a, doc_b, inter, sa.n AS na, sb.n AS nb')}
     )
     SELECT p.doc_a, p.doc_b,
            CAST(FLOOR(1000.0 * p.inter / (p.na + p.nb - p.inter)) AS BIGINT)

@@ -1,15 +1,9 @@
 """Aggregate module: importing this populates the full query registry.
 
-Registration order matters: the correctness driver walks ``queries()`` in
-order under a fixed budget (rounds 1 and 2 each covered exactly the first 50
-entries of their round's ordering). To convert builder-claimed coverage into
-driver-proven coverage we emit, in order: (a) the round-2 red/err rows whose
-fixes land this round (oracle-dtype CASTs, golden-VALUES oracles for the
-approximate queries), (b) every never-driver-sampled query (the llm_ops2
-block, quality gates, dedup_clusters, contamination, pack/sample/shuffle,
-relational4/5 leftovers), then (c) the 96 queries already green in
-CORRECTNESS_r01/r02 last — they are the least informative to re-check if the
-budget runs out.
+Registration order has no effect on ``queries()``: every registered query
+has strict-green driver evidence, so the re-rank below orders the registry
+entirely by the ``CORRECTNESS_r*.json`` artifacts. The order and every
+oracle's text are pinned by ``tests/test_rank_loader.py``.
 """
 
 from . import relational  # noqa: F401
@@ -18,26 +12,22 @@ from . import relational3  # noqa: F401
 from . import relational4  # noqa: F401
 from . import relational5  # noqa: F401
 from . import streaming_ops  # noqa: F401
-
-try:  # LLM-pipeline ops land in a later milestone of each round
-    from . import llm_ops  # noqa: F401
-    from . import llm_ops2  # noqa: F401
-    from . import llm_ops3  # noqa: F401
-    from . import llm_ops4  # noqa: F401
-    from . import llm_ops5  # noqa: F401
-    from . import llm_ops6  # noqa: F401
-    from . import llm_ops7  # noqa: F401
-    from . import llm_ops8  # noqa: F401
-    from . import llm_ops9  # noqa: F401
-    from . import llm_ops10  # noqa: F401
-    from . import llm_ops11  # noqa: F401
-    from . import llm_ops12  # noqa: F401
-    from . import llm_ops13  # noqa: F401
-    from . import llm_ops14  # noqa: F401
-    from . import llm_ops15  # noqa: F401
-    from . import llm_ops16  # noqa: F401
-except ImportError:
-    pass
+from . import llm_ops  # noqa: F401
+from . import llm_ops2  # noqa: F401
+from . import llm_ops3  # noqa: F401
+from . import llm_ops4  # noqa: F401
+from . import llm_ops5  # noqa: F401
+from . import llm_ops6  # noqa: F401
+from . import llm_ops7  # noqa: F401
+from . import llm_ops8  # noqa: F401
+from . import llm_ops9  # noqa: F401
+from . import llm_ops10  # noqa: F401
+from . import llm_ops11  # noqa: F401
+from . import llm_ops12  # noqa: F401
+from . import llm_ops13  # noqa: F401
+from . import llm_ops14  # noqa: F401
+from . import llm_ops15  # noqa: F401
+from . import llm_ops16  # noqa: F401
 
 from .registry import QUERIES, oracle_sql, queries  # noqa: F401
 

@@ -31,10 +31,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-ENVELOPE_DDL = (
-    "stream_key string, shard_id bigint, sequence bigint, "
-    "timestamp timestamp, payload binary"
-)
+from ..model import ENVELOPE_DDL, client_opts
 
 
 def make_iggy_client(opts: dict):
@@ -47,14 +44,6 @@ def make_iggy_client(opts: dict):
         "sea_iggy needs either the fake_root loopback server or the iggy-py "
         "client (not available in this environment)."
     )
-
-
-def _client_opts(options) -> dict:
-    return {
-        k: options.get(k)
-        for k in ("fake_root", "host", "port")
-        if options.get(k) is not None
-    }
 
 
 class IggyPartitionRange(InputPartition):
@@ -100,7 +89,7 @@ class SeaIggyStreamReader(DataSourceStreamReader):
             raise ValueError("sea_iggy requires a topic option")
         self.stream = options.get("stream", "sea")
         self.starting = options.get("starting_offsets", "earliest")
-        self.opts = _client_opts(options)
+        self.opts = client_opts(options)
         self._client = make_iggy_client(self.opts)  # driver-side planning
 
     def _tail(self, pid: int) -> int:
@@ -149,7 +138,7 @@ class SeaIggyBatchReader(DataSourceReader):
         self.stream = options.get("stream", "sea")
         self.min_off = int(options.get("min_offset", "0"))
         self.max_off = int(options["max_offset"]) if options.get("max_offset") else None
-        self.opts = _client_opts(options)
+        self.opts = client_opts(options)
 
     def partitions(self):
         client = make_iggy_client(self.opts)

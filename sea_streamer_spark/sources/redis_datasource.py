@@ -51,6 +51,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..model import ENVELOPE_DDL, client_opts
 from ..streaming.redis import (
     format_entry_id,
     next_after,
@@ -58,12 +59,6 @@ from ..streaming.redis import (
     parse_shard_key,
     shard_key,
 )
-
-ENVELOPE_DDL = (
-    "stream_key string, shard_id bigint, sequence bigint, "
-    "timestamp timestamp, payload binary"
-)
-
 
 def make_client(opts: dict):
     """Build the Redis client from plain string options — callable on the
@@ -133,14 +128,6 @@ class RedisShardPartition(InputPartition):
         self.opts = opts
 
 
-def _client_opts(options) -> dict:
-    return {
-        k: options.get(k)
-        for k in ("fake_root", "host", "port")
-        if options.get(k) is not None
-    }
-
-
 class SeaRedisStreamReader(DataSourceStreamReader):
     """Micro-batch reader: offsets = ``{"offsets": {shard_id: packed_id}}``."""
 
@@ -149,7 +136,7 @@ class SeaRedisStreamReader(DataSourceStreamReader):
         if not self.stream_key:
             raise ValueError("sea_redis requires a stream_key option")
         self.starting = options.get("starting_offsets", "earliest")
-        self.opts = _client_opts(options)
+        self.opts = client_opts(options)
         self._client = make_client(self.opts)  # driver-side, planning only
 
     def _tail(self, sid: int) -> int:
@@ -206,7 +193,7 @@ class SeaRedisBatchReader(DataSourceReader):
             raise ValueError("sea_redis requires a stream_key option")
         self.min_seq = int(options.get("min_seq", "-1"))
         self.max_seq = int(options["max_seq"]) if options.get("max_seq") else None
-        self.opts = _client_opts(options)
+        self.opts = client_opts(options)
 
     def partitions(self):
         client = make_client(self.opts)
@@ -257,7 +244,7 @@ class SeaRedisStreamWriter(DataSourceStreamWriter):
     the tasks report in their commit messages."""
 
     def __init__(self, options):
-        self.opts = _client_opts(options)
+        self.opts = client_opts(options)
         self.maxlen = int(options["maxlen"]) if options.get("maxlen") else None
 
     def write(self, iterator) -> RedisWriteReceipt:

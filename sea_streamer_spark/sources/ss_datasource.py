@@ -32,6 +32,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..model import ENVELOPE_DDL
 from .ss import HEADER_SIZE, decode_header, iter_messages_range
 
 
@@ -152,10 +153,7 @@ class SsDataSource(DataSource):
         return "ss"
 
     def schema(self) -> str:
-        return (
-            "stream_key string, shard_id bigint, sequence bigint, "
-            "timestamp timestamp, payload binary"
-        )
+        return ENVELOPE_DDL
 
     def reader(self, schema) -> SsDataSourceReader:
         return SsDataSourceReader(self.options)

@@ -92,3 +92,61 @@ def test_baseline_matches_reality():
                 f"baseline says {allowed} — ratchet _AUDITED_BASELINE "
                 f"down to {n}."
             )
+
+
+# ---------------------------------------------------------------------------
+# Duplication ratchet: each oracle fragment / Spark stage below has ONE
+# definition under plans/ that every query calls. A copy pasted back in
+# repeats the family's signature line and fails here — call the shared
+# builder instead (new spellings get a parameter, not a second copy).
+
+_SINGLE_DEFINITION = {
+    # llm_ops.shingle_overlap_sql (every Jaccard / near-dup pairs CTE)
+    "shingle overlap": "FROM ds a JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id",
+    # llm_ops.undirected_edges_sql
+    "undirected edges": "SELECT doc_a AS u, doc_b AS v FROM pairs",
+    # llm_ops.DUCK_CC_LABELS
+    "connected components": "cc(node, lbl) AS (",
+    # llm_ops.ivf_cell_sql
+    "IVF cell assignment": "'max').negcell) AS BIGINT)",
+    # llm_ops._duck_ivf_probe
+    "IVF probe": ") ORDER BY cs DESC, cell LIMIT",
+    # llm_ops11._duck_viterbi_dp
+    "unigram Viterbi dp": "LEFT JOIN vocab v4 ON v4.piece",
+    # llm_ops.DUCK_DUP_3GRAM_COVER
+    "duplicated 3-gram cover": "s.pos + unnest([0, 1, 2]) AS idx",
+    # llm_ops.DUCK_SPAN_REMOVAL_TAIL
+    "span removal tail": "FROM tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.idx = tp.idx",
+    # llm_ops14._build_cell_sweep_oracle / _cell_sweep
+    "cell sweep oracle": "FROM assign{k} GROUP BY cell",
+    "cell sweep": '"k", F.col("vec_id").alias("va"), F.col("cell").alias("cell_a")',
+    # llm_ops11._nb_cells_sql / _nb_cells
+    "NB 2x2 cells oracle": "CAST(SUM(CASE WHEN truth AND score_pass >= score_fail",
+    "NB 2x2 cells": 'F.sum(F.when(F.col("truth") & nb_pass, 1)',
+    # llm_ops11._NB_CONFUSION_SQL / _nb_confusion_aggs
+    "NB confusion oracle": "CAST(SUM(CASE WHEN score_pass >= score_fail AND truth",
+    "NB confusion": 'F.sum(F.when(pred & F.col("truth"), 1)',
+    # llm_ops8._duck_nation_customer_rev / _nation_customer_rev
+    "nation-customer revenue oracle": "SELECT n.n_name AS nation, c.c_custkey AS custkey",
+    "nation-customer revenue": '.groupBy(F.col("n_name").alias("nation"), F.col("c_custkey"))',
+}
+
+
+def test_each_shared_fragment_has_one_definition():
+    texts = [p.read_text() for p in sorted(PLANS_DIR.glob("*.py"))]
+    counts = {
+        family: sum(t.count(sig) for t in texts)
+        for family, sig in _SINGLE_DEFINITION.items()
+    }
+    assert all(n == 1 for n in counts.values()), (
+        f"signature-line counts under plans/ (each must be 1): {counts}"
+    )
+
+
+def test_envelope_ddl_has_one_definition():
+    pkg = PLANS_DIR.parent
+    n = sum(
+        p.read_text().count("stream_key string, shard_id bigint")
+        for p in pkg.rglob("*.py")
+    )
+    assert n == 1, f"envelope DDL spelled {n} times; use model.ENVELOPE_DDL"

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+from pathlib import Path
 
 import pytest
 
@@ -119,3 +120,36 @@ def test_every_green_artifact_row_names_a_registered_query():
     deletions would silently orphan evidence)."""
     missing = set(q._EVIDENCE) - set(q.QUERIES)
     assert not missing, f"evidence for unregistered queries: {missing}"
+
+
+_PIN = Path(__file__).parent / "data" / "registry_pin.json"
+
+
+def _oracle_digest(text: str) -> str:
+    return hashlib.sha256(" ".join(text.split()).encode()).hexdigest()
+
+
+def test_registry_order_and_oracles_are_pinned():
+    """``queries()`` order and every oracle's text are frozen.
+
+    ``tests/data/registry_pin.json`` lists ``[name, sha256]`` in
+    ``queries()`` order; the hash is over the oracle text with whitespace
+    runs collapsed, so a refactor that moves queries between modules or
+    shares oracle fragments must leave both byte-identical. The order is
+    set by the ``CORRECTNESS_r*.json`` driver evidence and the model-backed
+    oracles bake values trained on the gate corpus, so the pin applies
+    only when both are present.
+    """
+    from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+
+    root = Path(q.__file__).resolve().parents[2]
+    if not any(root.glob("CORRECTNESS_r*.json")):
+        pytest.skip("no CORRECTNESS_r*.json driver evidence")
+    if not (Path(ORACLE_SF_DIR) / "documents.parquet").exists():
+        pytest.skip("gate data absent")
+    pinned = json.loads(_PIN.read_text())
+    oracles = q.oracle_sql()
+    live = [[n, _oracle_digest(oracles[n]) if n in oracles else None] for n in q.queries()]
+    assert [n for n, _ in live] == [n for n, _ in pinned]
+    changed = [n for (n, h), (_, p) in zip(live, pinned) if h != p]
+    assert not changed, f"oracle text changed: {changed}"

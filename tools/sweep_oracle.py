@@ -8,9 +8,11 @@ Usage: python tools/sweep_oracle.py [sf_dir] [first_n] [--changed-since REF]
 
 ``--changed-since REF`` (delta-sweep, r5 judge task #8): sweep only the
 queries plausibly affected by commits since git ref REF — those whose
-defining plans module changed, plus those whose function source mentions
-the basename of any other changed .py module (catching queries that call
-into a changed operators/sources/streaming module at function level).
+defining plans module changed, plus those whose function source or
+defining module source mentions the basename of any other changed .py
+module (catching queries that call into a changed operators/sources/
+streaming module at function level, and oracles that embed a fragment
+imported from another plans module).
 This keeps per-wave verification cheap as the registry grows; the full
 sweep at round end remains the authority (the mention heuristic is
 conservative but not a transitive import graph).
@@ -24,15 +26,6 @@ import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-_args = list(sys.argv[1:])
-CHANGED_SINCE = None
-if "--changed-since" in _args:
-    i = _args.index("--changed-since")
-    CHANGED_SINCE = _args[i + 1]
-    del _args[i : i + 2]
-SF_DIR = _args[0] if len(_args) > 0 else "/root/testdata/sf0.01"
-FIRST_N = int(_args[1]) if len(_args) > 1 else 0
 
 from sea_streamer_spark.plans.queries import QUERIES  # noqa: E402
 from sea_streamer_spark.session import get_spark  # noqa: E402
@@ -48,13 +41,8 @@ GATE_ONLY = {"agg_approx_sketches"}
 from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR as GATE_SF_DIR  # noqa: E402
 
 
-def changed_query_names(ref: str) -> set[str]:
-    """Names of queries plausibly affected by commits since ``ref``: the
-    defining module changed, or the function source mentions the module
-    basename of another changed .py file (function-level operator imports
-    like ``from ..operators import graph as G`` mention 'graph')."""
-    import inspect
-    import re
+def changed_modules(ref: str) -> set[str]:
+    """Basenames (no extension) of the .py files changed since git ``ref``."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -62,16 +50,35 @@ def changed_query_names(ref: str) -> set[str]:
         ["git", "diff", "--name-only", ref, "--", "*.py"],
         capture_output=True, text=True, cwd=repo, check=True,
     ).stdout
-    changed = [ln.strip() for ln in out.splitlines() if ln.strip()]
-    mods = {os.path.splitext(os.path.basename(p))[0] for p in changed}
+    return {
+        os.path.splitext(os.path.basename(p.strip()))[0]
+        for p in out.splitlines()
+        if p.strip()
+    }
+
+
+def affected_queries(mods: set[str]) -> set[str]:
+    """Names of queries plausibly affected by changes to the modules
+    ``mods``: the defining module is one of them, or the source of the
+    query function or of its defining module mentions one of their
+    basenames. Function-level operator imports (``from ..operators import
+    graph as G``) mention 'graph'; module-level oracle fragments
+    (``from .llm_ops import DUCK_SHINGLE_SETS``) mention 'llm_ops'."""
+    import inspect
+    import re
+
     pats = [re.compile(rf"\b{re.escape(m)}\b") for m in mods]
+    module_src: dict[str, str] = {}
     sel: set[str] = set()
     for name, qd in QUERIES.items():
-        if qd.fn.__module__.rsplit(".", 1)[-1] in mods:
+        module = qd.fn.__module__
+        if module.rsplit(".", 1)[-1] in mods:
             sel.add(name)
             continue
         try:
-            src = inspect.getsource(qd.fn)
+            if module not in module_src:
+                module_src[module] = inspect.getsource(sys.modules[module])
+            src = inspect.getsource(qd.fn) + module_src[module]
         except OSError:  # no source (shouldn't happen) → be conservative
             sel.add(name)
             continue
@@ -81,26 +88,35 @@ def changed_query_names(ref: str) -> set[str]:
 
 
 def main() -> int:
+    args = list(sys.argv[1:])
+    changed_since = None
+    if "--changed-since" in args:
+        i = args.index("--changed-since")
+        changed_since = args[i + 1]
+        del args[i : i + 2]
+    sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
+    first_n = int(args[1]) if len(args) > 1 else 0
+
     spark = get_spark(app_name="oracle-sweep")
     names = [n for n, q in QUERIES.items() if q.oracle is not None]
-    if CHANGED_SINCE:
-        sel = changed_query_names(CHANGED_SINCE)
+    if changed_since:
+        sel = affected_queries(changed_modules(changed_since))
         skipped = len(names) - len([n for n in names if n in sel])
         names = [n for n in names if n in sel]
-        print(f"DELTA SWEEP since {CHANGED_SINCE}: {len(names)} affected, "
+        print(f"DELTA SWEEP since {changed_since}: {len(names)} affected, "
               f"{skipped} unchanged skipped", flush=True)
-    if os.path.abspath(SF_DIR) != os.path.abspath(GATE_SF_DIR):
+    if os.path.abspath(sf_dir) != os.path.abspath(GATE_SF_DIR):
         for n in sorted(GATE_ONLY & set(names)):
             print(f"SKIP {n}: golden-pinned to the gate sf", flush=True)
         names = [n for n in names if n not in GATE_ONLY]
-    if FIRST_N:
-        names = names[:FIRST_N]
+    if first_n:
+        names = names[:first_n]
     failed: list[str] = []
     t_all = time.perf_counter()
     for i, name in enumerate(names):
         t0 = time.perf_counter()
         try:
-            rows = check_query(spark, name, SF_DIR)
+            rows = check_query(spark, name, sf_dir)
             print(f"[{i+1}/{len(names)}] PASS {name} rows={rows} "
                   f"({time.perf_counter()-t0:.2f}s)", flush=True)
         except Exception as exc:  # noqa: BLE001
