@@ -15,9 +15,9 @@ Spark mapping:
   :func:`stream_join_batch`); :func:`stream_join_sharded` remains the
   default because per-shard order is the delivery guarantee the reference
   actually makes — global order is a replay/audit opt-in.
-- **streaming**: union the sources, apply a watermark, and sort within each
-  micro-batch (:func:`stream_join_stream`); the watermark plays the role of
-  align-gating (emission waits for the slowest peer's progress).
+- **streaming**: per-shard state buffers the sources and emits, each
+  micro-batch, the prefix every aligned peer has passed
+  (:func:`stream_join_stateful`) — align-gating across micro-batches.
 """
 
 from __future__ import annotations
@@ -156,15 +156,6 @@ def stream_join_sharded(muxed: DataFrame, align: list[str] | None = None) -> Dat
         muxed = _align_gate(muxed, align)
     w = Window.partitionBy("shard_id").orderBy(*[F.col(c).asc() for c in MERGE_ORDER])
     return muxed.withColumn("emit_index", F.row_number().over(w))
-
-
-def stream_join_stream(muxed: DataFrame, watermark: str = "1 minute") -> DataFrame:
-    """Streaming StreamJoin: watermarked union; each micro-batch is emitted
-    sorted by the merge order (``sortWithinPartitions`` after coalescing the
-    batch), which bounds disorder by the watermark delay — the streaming
-    analog of align-gating."""
-    validate_envelope(muxed)
-    return muxed.withWatermark("timestamp", watermark)
 
 
 def stream_join_stateful(

@@ -40,25 +40,12 @@ XRANGE scan (S7, redis/src/manager.rs:70-105): optional ``min_seq`` /
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceStreamWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamWriter, WriterCommitMessage
 
 from ..model import ENVELOPE_DDL, client_opts
-from ..streaming.redis import (
-    format_entry_id,
-    next_after,
-    parse_entry_id,
-    parse_shard_key,
-    shard_key,
-)
+from ..streaming.redis import _as_str, _xrange_shard, discover_shards, parse_entry_id, shard_key
+from .offset_log import _LogBatchReader, _LogStreamReader
+
 
 def make_client(opts: dict):
     """Build the Redis client from plain string options — callable on the
@@ -85,140 +72,39 @@ def make_client(opts: dict):
     return redis.Redis(host=host, port=port, decode_responses=False)
 
 
-def _as_str(v) -> str:
-    return v.decode() if isinstance(v, (bytes, bytearray)) else v
+class _RedisShards:
+    """The Redis hooks of the offset protocol: one partition per shard key,
+    offsets are packed MessageIds."""
 
-
-def discover_shard_ids(client, stream_key: str) -> list[int]:
-    """H4 shard discovery, client-agnostic (redis-py yields bytes keys)."""
-    shards = set()
-    for key in client.scan_iter(match=f"{stream_key}*"):
-        try:
-            shards.add(parse_shard_key(_as_str(key), stream_key))
-        except ValueError:
-            continue  # unrelated key sharing the prefix
-    return sorted(shards) or [0]
-
-
-def _read_shard_range(client, stream_key: str, sid: int, start_seq: int, end_seq: int):
-    """``XRANGE (start_seq .. end_seq]`` on one shard → envelope tuples.
-    ``start_seq < 0`` means Beginning (SeqPos::Beginning, stream.rs:34-40)."""
-    key = shard_key(stream_key, sid)
-    lo = "-" if start_seq < 0 else format_entry_id(next_after(start_seq))
-    hi = "+" if end_seq is None else format_entry_id(end_seq)
-    for entry_id, fields in client.xrange(key, min=lo, max=hi):
-        seq_no = parse_entry_id(_as_str(entry_id))
-        ms = seq_no >> 16
-        payload = fields.get("payload", fields.get(b"payload", b""))
-        yield (
-            stream_key,
-            sid,
-            seq_no,
-            datetime.fromtimestamp(ms / 1000, tz=timezone.utc),
-            bytes(payload) if payload is not None else b"",
-        )
-
-
-class RedisShardPartition(InputPartition):
-    def __init__(self, stream_key: str, shard_id: int, start_seq: int, end_seq: int | None, opts: dict):
-        self.stream_key = stream_key
-        self.shard_id = shard_id
-        self.start_seq = start_seq  # exclusive; -1 = Beginning
-        self.end_seq = end_seq  # inclusive; None = to tail (batch mode)
-        self.opts = opts
-
-
-class SeaRedisStreamReader(DataSourceStreamReader):
-    """Micro-batch reader: offsets = ``{"offsets": {shard_id: packed_id}}``."""
-
-    def __init__(self, options):
+    def _configure(self, options) -> None:
         self.stream_key = options.get("stream_key")
         if not self.stream_key:
             raise ValueError("sea_redis requires a stream_key option")
-        self.starting = options.get("starting_offsets", "earliest")
         self.opts = client_opts(options)
-        self._client = make_client(self.opts)  # driver-side, planning only
 
-    def _tail(self, sid: int) -> int:
-        entries = self._client.xrevrange(shard_key(self.stream_key, sid), count=1)
+    def _connect(self):
+        return make_client(self.opts)
+
+    def _ids(self, client) -> list[int]:
+        return discover_shards(client, self.stream_key)
+
+    def _tail(self, client, sid: int) -> int:
+        entries = client.xrevrange(shard_key(self.stream_key, sid), count=1)
         return parse_entry_id(_as_str(entries[0][0])) if entries else -1
 
-    def initialOffset(self) -> dict:
-        shards = discover_shard_ids(self._client, self.stream_key)
-        if self.starting == "latest":
-            # End: only entries produced after the query starts (D1 RealTime)
-            return {"offsets": {str(s): self._tail(s) for s in shards}}
-        return {"offsets": {str(s): -1 for s in shards}}
-
-    def latestOffset(self) -> dict:
-        shards = discover_shard_ids(self._client, self.stream_key)
-        return {"offsets": {str(s): self._tail(s) for s in shards}}
-
-    def partitions(self, start: dict, end: dict):
-        souts = start.get("offsets", {})
-        parts = []
-        for sid_str, end_seq in end.get("offsets", {}).items():
-            start_seq = int(souts.get(sid_str, -1))
-            if end_seq is None or int(end_seq) <= start_seq:
-                continue  # nothing new on this shard
-            parts.append(
-                RedisShardPartition(
-                    self.stream_key, int(sid_str), start_seq, int(end_seq), self.opts
-                )
-            )
-        return parts
-
-    def read(self, partition: RedisShardPartition):
-        client = make_client(partition.opts)  # per-task client (executor-side)
-        yield from _read_shard_range(
-            client,
-            partition.stream_key,
-            partition.shard_id,
-            partition.start_seq,
-            partition.end_seq,
-        )
-
-    def commit(self, end: dict) -> None:
-        # Progress is owned by Spark's checkpoint (D2); nothing to ack (D4).
-        pass
+    def _rows(self, client, part):
+        return _xrange_shard(client, self.stream_key, part.pid, part.start, part.end)
 
 
-class SeaRedisBatchReader(DataSourceReader):
+class SeaRedisStreamReader(_RedisShards, _LogStreamReader):
+    """Micro-batch reader: offsets = ``{"offsets": {shard_id: packed_id}}``."""
+
+
+class SeaRedisBatchReader(_RedisShards, _LogBatchReader):
     """S7 bounded scan (``RedisManager::range``, manager.rs:70-105): one task
     per shard, optional packed-id bounds pushed into the XRANGE itself."""
 
-    def __init__(self, options):
-        self.stream_key = options.get("stream_key")
-        if not self.stream_key:
-            raise ValueError("sea_redis requires a stream_key option")
-        self.min_seq = int(options.get("min_seq", "-1"))
-        self.max_seq = int(options["max_seq"]) if options.get("max_seq") else None
-        self.opts = client_opts(options)
-
-    def partitions(self):
-        client = make_client(self.opts)
-        return [
-            RedisShardPartition(
-                self.stream_key,
-                sid,
-                # min_seq is an inclusive lower bound here; the shared range
-                # reader treats start as exclusive, so step one back.
-                self.min_seq - 1 if self.min_seq >= 0 else -1,
-                self.max_seq,
-                self.opts,
-            )
-            for sid in discover_shard_ids(client, self.stream_key)
-        ]
-
-    def read(self, partition: RedisShardPartition):
-        client = make_client(partition.opts)
-        yield from _read_shard_range(
-            client,
-            partition.stream_key,
-            partition.shard_id,
-            partition.start_seq,
-            partition.end_seq,
-        )
+    lo_option, hi_option = "min_seq", "max_seq"
 
 
 class RedisWriteReceipt(WriterCommitMessage):

@@ -19,10 +19,11 @@ offset *ranges* per micro-batch from the WAL/checkpoint, which subsumes the
 reference's Delayed/Rolling commit machinery (SURVEY §2.5). This is a
 documented semantic mapping, not an emulation.
 
-Backends resolve by URI scheme (socket/src/streamer.rs:203-245 analog):
-``kafka://`` → built-in Kafka source; ``file://<dir>`` → file streaming
-source over envelope parquet (the replay backend used in tests);
-``redis://`` → the sea_redis connector (streaming/redis.py).
+Backends resolve by URI scheme in :func:`..uri.reader_config`
+(socket/src/streamer.rs:203-245 analog): ``kafka://`` → built-in Kafka
+source; ``file://<dir>`` → file streaming source over envelope parquet (the
+replay backend used in tests); ``redis://`` / ``iggy://`` → the sea_redis /
+sea_iggy DataSources (sources/redis_datasource.py, sources/iggy_datasource.py).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 from ..errors import StreamErr
 from ..model import MESSAGE_SCHEMA
 from ..session import prepare
-from ..uri import StreamUrl
+from ..uri import StreamUrl, reader_config
 
 
 class ConsumerMode(enum.Enum):
@@ -144,19 +145,16 @@ class Consumer:
         metadata-scale scan of one column, never the payloads). Kafka
         returns ``None``: Spark's source owns partition metadata natively,
         so there is nothing to fetch driver-side."""
-        scheme = self.url.streamer.scheme
-        if scheme in ("redis", "rediss", "redis+fake"):
+        fmt, opts = reader_config(self.url)
+        if fmt == "sea_redis":
             from ..sources.redis_datasource import make_client
-            from ..uri import reader_config
             from .redis import discover_shards
 
-            _, opts = reader_config(self.url)
             return discover_shards(make_client(opts), opts["stream_key"])
-        if scheme == "file":
-            path = self.url.streamer.nodes[0]
+        if fmt == "parquet":
             rows = (
                 self.spark.read.schema(MESSAGE_SCHEMA)
-                .parquet(path)
+                .parquet(opts["path"])
                 .select("shard_id")
                 .distinct()
                 .collect()
@@ -239,25 +237,52 @@ def _replace(opts: ConsumerOptions, **kw) -> ConsumerOptions:
 def create_consumer(
     spark: SparkSession, url: str | StreamUrl, options: ConsumerOptions | None = None
 ) -> Consumer:
-    """Backend dispatch by URI scheme → streaming envelope DataFrame."""
+    """Backend dispatch by URI scheme → streaming envelope DataFrame: the
+    source and its options are :func:`..uri.reader_config`'s; this adds the
+    consumer-mode mapping and registers the Python DataSource it names."""
     prepare(spark)
     if isinstance(url, str):
         url = StreamUrl.parse(url)
     options = options or ConsumerOptions()
-    scheme = url.streamer.scheme
-    if scheme == "kafka":
+    fmt, opts = reader_config(url)  # stdio:// and memory:// raise here
+    if fmt == "kafka":
         df = _kafka_reader(spark, url, options)
-    elif scheme == "file":
-        df = _file_reader(spark, url, options)
-    elif scheme in ("redis", "rediss", "redis+fake"):
-        from .redis import redis_reader
+    elif fmt == "parquet":
+        df = _file_reader(spark, opts["path"], options)
+    elif fmt in ("sea_redis", "sea_iggy"):
+        # one task per shard, offsets in the checkpoint (sources/offset_log.py)
+        url.stream_key()  # NotOneStreamKey unless the URL names one stream
+        _register_source(spark, fmt)
+        if fmt == "sea_iggy":
+            from ..sources.iggy_datasource import make_iggy_client
 
-        df = redis_reader(spark, url, options)
-    elif scheme in ("iggy", "iggy+fake"):
-        df = _iggy_reader(spark, url, options)
+            make_iggy_client(opts)  # no live iggy client here: fail at connect time
+        opts["starting_offsets"] = _starting_offsets(options)
+        df = spark.readStream.format(fmt).options(**opts).load()
     else:
-        raise ValueError(f"unsupported consumer scheme {scheme!r}")
+        raise ValueError(f"unsupported consumer scheme {url.streamer.scheme!r}")
     return Consumer(spark, url, options, df)
+
+
+def _register_source(spark: SparkSession, fmt: str) -> None:
+    """Register the Python DataSource behind ``sea_redis`` / ``sea_iggy``."""
+    if fmt == "sea_redis":
+        from ..sources.redis_datasource import SeaRedisDataSource as source
+    else:
+        from ..sources.iggy_datasource import SeaIggyDataSource as source
+    spark.dataSource.register(source)
+
+
+def _starting_offsets(options: ConsumerOptions) -> str:
+    """D1-D3 → the ``starting_offsets`` of the Redis and Iggy sources:
+    RealTime tails from End; Resumable and LoadBalanced start at Beginning
+    with the checkpoint owning progress; an explicit rewind overrides. (Kafka
+    maps LoadBalanced to ``latest`` instead — see :func:`kafka_options`.)"""
+    if options.rewind_to is Beginning:
+        return "earliest"
+    if options.rewind_to is End:
+        return "latest"
+    return "latest" if options.mode is ConsumerMode.RealTime else "earliest"
 
 
 def kafka_options(
@@ -273,11 +298,9 @@ def kafka_options(
     ``KafkaConnectOptions`` pair or dict) — forwarded verbatim through
     Spark's ``kafka.`` passthrough (kafka.py:to_spark_options), byte-exact
     with the reference's make_client_config strings."""
-    opts = {
-        "kafka.bootstrap.servers": ",".join(url.streamer.nodes),
-        "subscribe": ",".join(url.streams),
-        "startingOffsets": "earliest" if options.mode is ConsumerMode.Resumable else "latest",
-    }
+    _, opts = reader_config(url)
+    opts.setdefault("subscribe", "")
+    opts["startingOffsets"] = "earliest" if options.mode is ConsumerMode.Resumable else "latest"
     if options.rewind_to is Beginning:
         opts["startingOffsets"] = "earliest"
     elif options.rewind_to is End:
@@ -316,35 +339,7 @@ def _kafka_reader(spark: SparkSession, url: StreamUrl, options: ConsumerOptions)
     )
 
 
-def _iggy_reader(spark: SparkSession, url: StreamUrl, options: ConsumerOptions) -> DataFrame:
-    """S15 Iggy source via the registered ``sea_iggy`` DataSource (one task
-    per partition, server offsets checkpointed — sources/iggy_datasource.py).
-    ``iggy+fake:///dir/topic`` drives the file-backed loopback server; a live
-    ``iggy://host:port/topic`` needs iggy-py (clear error at connect time)."""
-    from ..sources.iggy_datasource import SeaIggyDataSource
-
-    spark.dataSource.register(SeaIggyDataSource)
-    reader = spark.readStream.format("sea_iggy").option("topic", str(url.stream_key()))
-    if url.streamer.scheme == "iggy+fake":
-        reader = reader.option("fake_root", url.streamer.nodes[0])
-    else:
-        raise NotImplementedError(
-            "iggy:// consumer requires the iggy-py client, which is not "
-            "available in this environment; use iggy+fake:///dir/topic "
-            "(file-backed loopback server) to exercise the identical "
-            "partitioned source path."
-        )
-    starting = "latest" if options.mode is ConsumerMode.RealTime else "earliest"
-    if options.rewind_to is Beginning:
-        starting = "earliest"
-    elif options.rewind_to is End:
-        starting = "latest"
-    return reader.option("starting_offsets", starting).load()
-
-
-def _file_reader(
-    spark: SparkSession, url: StreamUrl, options: ConsumerOptions | None = None
-) -> DataFrame:
+def _file_reader(spark: SparkSession, path: str, options: ConsumerOptions) -> DataFrame:
     """File replay backend (S8/S10 analog): a directory of envelope parquet
     consumed as a stream — new files are discovered like `tail -f`; bounded
     replay uses an availableNow trigger (EOS, D10).
@@ -353,10 +348,7 @@ def _file_reader(
     the paged-read cap; the file backend's read unit is a log segment
     file, so capping files per micro-batch is the same knob Kafka's
     offset cap turns — node.rs:141-157)."""
-    path = url.streamer.nodes[0]
-    per_trigger = 8
-    if options is not None and options.max_offsets_per_trigger:
-        per_trigger = options.max_offsets_per_trigger
+    per_trigger = options.max_offsets_per_trigger or 8
     return (
         spark.readStream.schema(MESSAGE_SCHEMA)
         .option("maxFilesPerTrigger", str(per_trigger))

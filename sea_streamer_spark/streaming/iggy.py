@@ -23,10 +23,12 @@ from __future__ import annotations
 
 import enum
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..model import ENVELOPE_COLUMNS
 from .consumer import Beginning, ConsumerMode, ConsumerOptions, End, SeqPos
 
 
@@ -87,8 +89,6 @@ def consumer_options_for(opts: IggyConsumerOptions, checkpoint_dir: str | None =
     if opts.polling is IggyPollingStrategy.Timestamp:
         if opts.polling_arg is None:
             raise ValueError("Timestamp polling requires polling_arg (unix us)")
-        from datetime import datetime, timezone
-
         return _replace(
             base, seek_to=datetime.fromtimestamp(opts.polling_arg / 1e6, tz=timezone.utc)
         )
@@ -121,6 +121,15 @@ def apply_partitioning(
     return df.withColumn("shard_id", partition_expr(partitioning, num_partitions, arg))
 
 
+def _poll_rows(client, stream: str, topic: str, pid: int, **poll):
+    """One partition poll → envelope tuples: stream_key = topic, shard_id =
+    partition, sequence = server offset, timestamp from the server's
+    microsecond clock. The one read path behind both the ``sea_iggy``
+    DataSource partitions and :func:`poll_partitions`."""
+    for off, ts_us, payload in client.poll_messages(stream, topic, pid, **poll):
+        yield (topic, pid, off, datetime.fromtimestamp(ts_us / 1e6, tz=timezone.utc), payload)
+
+
 def poll_partitions(
     client,
     stream: str,
@@ -131,44 +140,27 @@ def poll_partitions(
 ) -> list[dict]:
     """One micro-batch poll over the topic's partitions (iggy/src/consumer.rs
     analog): each partition polls with the configured strategy; messages map
-    to the canonical envelope (stream_key = topic, shard_id = partition,
-    sequence = server offset, timestamp from the server's microsecond
-    clock). Client-agnostic — iggy-py or fake_iggy.FakeIggy.
+    to the canonical envelope. Client-agnostic — iggy-py or fake_iggy.FakeIggy.
 
     AutoCommit semantics (options.rs:87-97): Disabled never advances the
     server-side consumer offset; every other mode commits what was polled —
     under Spark the checkpoint is the source of truth either way (D4's
     batch-level mapping), the server offset is interop courtesy.
     """
-    from datetime import datetime, timezone
-
-    strategy = opts.polling.value
-    value = opts.polling_arg
-    auto_commit = opts.auto_commit is not IggyAutoCommit.Disabled
     if partition_ids is None:
         partition_ids = client.partition_ids(stream, topic)
-    rows: list[dict] = []
-    for pid in partition_ids:
-        for off, ts_us, payload in client.poll_messages(
-            stream,
-            topic,
-            pid,
-            strategy=strategy,
-            value=value,
-            count=opts.batch_size,
-            consumer=consumer,
-            auto_commit=auto_commit,
-        ):
-            rows.append(
-                {
-                    "stream_key": topic,
-                    "shard_id": pid,
-                    "sequence": off,
-                    "timestamp": datetime.fromtimestamp(ts_us / 1e6, tz=timezone.utc),
-                    "payload": payload,
-                }
-            )
-    return rows
+    poll = {
+        "strategy": opts.polling.value,
+        "value": opts.polling_arg,
+        "count": opts.batch_size,
+        "consumer": consumer,
+        "auto_commit": opts.auto_commit is not IggyAutoCommit.Disabled,
+    }
+    return [
+        dict(zip(ENVELOPE_COLUMNS, row))
+        for pid in partition_ids
+        for row in _poll_rows(client, stream, topic, pid, **poll)
+    ]
 
 
 def iggy_sink_batch(

@@ -19,9 +19,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..model import ENVELOPE_COLUMNS, StreamKey
+from ..model import ENVELOPE_COLUMNS, StreamKey, client_opts
 from ..session import prepare
-from ..uri import StreamUrl
+from ..uri import StreamUrl, reader_config
 
 
 def kafka_sink_projection(env: DataFrame, pin_partitions: bool = False) -> DataFrame:
@@ -76,38 +76,30 @@ class Producer:
         the reference's default path lets the broker partitioner place by
         key (producer.rs:155-169), and so do we."""
         env = self._prepare_df(df)
-        scheme = self.url.streamer.scheme
-        if scheme == "kafka":
+        # the sink needs the broker, not the stream keys: rows carry those
+        fmt, opts = reader_config(StreamUrl(self.url.streamer))
+        if fmt == "kafka":
             writer = (
                 kafka_sink_projection(env, pin_partitions=pin_partitions)
                 .writeStream.format("kafka")
-                .option("kafka.bootstrap.servers", ",".join(self.url.streamer.nodes))
+                .options(**opts)
             )
-        elif scheme == "file":
-            writer = (
-                env.writeStream.format("parquet")
-                .option("path", self.url.streamer.nodes[0])
-            )
-        elif scheme in ("redis", "rediss", "redis+fake"):
+        elif fmt == "parquet":
+            writer = env.writeStream.format("parquet").options(**opts)
+        elif fmt == "sea_redis":
             # S5 as a registered sink: per-(stream, shard) layout upstream so
             # each shard's explicit XADD ids stay globally monotonic, then
             # the sea_redis stream writer pipelines per task (executor-side).
-            from ..sources.redis_datasource import SeaRedisDataSource
+            from .consumer import _register_source
 
-            self.spark.dataSource.register(SeaRedisDataSource)
-            writer = env.repartition("stream_key", "shard_id").writeStream.format(
-                "sea_redis"
+            _register_source(self.spark, fmt)
+            writer = (
+                env.repartition("stream_key", "shard_id")
+                .writeStream.format(fmt)
+                .options(**client_opts(opts))
             )
-            if scheme == "redis+fake":
-                writer = writer.option("fake_root", self.url.streamer.nodes[0])
-            else:
-                node = self.url.streamer.nodes[0]
-                host, _, port = node.partition(":")
-                writer = writer.option("host", host or "localhost").option(
-                    "port", port or "6379"
-                )
         else:
-            raise ValueError(f"unsupported producer scheme {scheme!r}")
+            raise ValueError(f"unsupported producer scheme {self.url.streamer.scheme!r}")
         writer = writer.option("checkpointLocation", checkpoint_dir)
         if trigger_available_now:
             writer = writer.trigger(availableNow=True)
@@ -116,10 +108,10 @@ class Producer:
     def send_batch(self, df: DataFrame) -> None:
         """Bounded send (flush+end immediately — D8): batch append."""
         env = self._prepare_df(df)
-        if self.url.streamer.scheme == "file":
-            env.write.mode("append").parquet(self.url.streamer.nodes[0])
-        else:
+        fmt, opts = reader_config(StreamUrl(self.url.streamer))
+        if fmt != "parquet":
             raise ValueError("send_batch supports file:// targets")
+        env.write.mode("append").parquet(opts["path"])
 
 
 def create_producer(spark: SparkSession, url: str | StreamUrl) -> Producer:

@@ -27,7 +27,9 @@ Spark mapping:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from datetime import datetime, timezone
+
+from pyspark.sql import DataFrame
 
 MAX_SEQ16 = 0xFFFF
 
@@ -141,17 +143,40 @@ def parse_shard_key(key: str, stream_key: str) -> int:
     return int(key[len(prefix):])
 
 
+def _as_str(v) -> str:
+    return v.decode() if isinstance(v, (bytes, bytearray)) else v
+
+
 def discover_shards(client, stream_key: str) -> list[int]:
     """H4 shard discovery: ``SCAN MATCH key*`` → shard ids (shard.rs:38-93).
-    Works against any client exposing ``scan_iter`` (redis-py or the
-    in-process loopback model)."""
+    Works against any client exposing ``scan_iter`` (redis-py, which yields
+    bytes keys, the RESP2 client or the loopback model)."""
     shards = set()
     for key in client.scan_iter(match=f"{stream_key}*"):
         try:
-            shards.add(parse_shard_key(key, stream_key))
+            shards.add(parse_shard_key(_as_str(key), stream_key))
         except ValueError:
             continue  # unrelated key sharing the prefix
     return sorted(shards) or [0]
+
+
+def _xrange_shard(client, stream_key: str, sid: int, after: int, until=None, count=None):
+    """``XRANGE (after .. until] COUNT count`` on one shard → envelope tuples.
+    ``after < 0`` means Beginning (SeqPos::Beginning, stream.rs:34-40);
+    ``until=None`` reads to the tail. The one read path behind both the
+    ``sea_redis`` DataSource partitions and :func:`poll_shards`."""
+    lo = "-" if after < 0 else format_entry_id(next_after(after))
+    hi = "+" if until is None else format_entry_id(until)
+    for entry_id, fields in client.xrange(shard_key(stream_key, sid), min=lo, max=hi, count=count):
+        seq_no = parse_entry_id(_as_str(entry_id))
+        payload = fields.get("payload", fields.get(b"payload", b""))
+        yield (
+            stream_key,
+            sid,
+            seq_no,
+            datetime.fromtimestamp((seq_no >> 16) / 1000, tz=timezone.utc),
+            bytes(payload) if payload is not None else b"",
+        )
 
 
 def poll_shards(
@@ -172,66 +197,17 @@ def poll_shards(
     ``count`` mirrors the reference's ``batch_size`` default of 100
     (consumer/mod.rs:74-75). Client-agnostic: redis-py or the loopback model.
     """
-    from datetime import datetime, timezone
-
     last_seq_nos = dict(last_seq_nos or {})
     rows: list[dict] = []
     for sid in shard_ids:
-        key = shard_key(stream_key, sid)
-        last = last_seq_nos.get(sid)
-        start = "-" if last is None else format_entry_id(next_after(last))
-        for entry_id, fields in client.xrange(key, min=start, max="+", count=count):
-            seq_no = parse_entry_id(entry_id)
-            ms, _ = unpack_message_id(seq_no)
-            payload = fields.get("payload", fields.get(b"payload", b""))
+        for key, _, seq_no, ts, payload in _xrange_shard(
+            client, stream_key, sid, last_seq_nos.get(sid, -1), count=count
+        ):
             rows.append(
-                {
-                    "stream_key": stream_key,
-                    "shard_id": sid,
-                    "sequence": seq_no,
-                    "timestamp": datetime.fromtimestamp(ms / 1000, tz=timezone.utc),
-                    "payload": bytes(payload) if payload is not None else b"",
-                }
+                {"stream_key": key, "shard_id": sid, "sequence": seq_no, "timestamp": ts, "payload": payload}
             )
             last_seq_nos[sid] = seq_no
     return rows, last_seq_nos
-
-
-def redis_reader(spark: SparkSession, url, options) -> DataFrame:
-    """S4 Redis Streams source: registers the ``sea_redis`` Python DataSource
-    (sources/redis_datasource.py — per-shard partitions, packed-MessageId
-    checkpoint offsets) and builds the streaming envelope DataFrame.
-
-    URI dispatch: ``redis://host:port/stream`` → redis-py client (executors
-    connect per task; raises a clear error here at *connect* time if the
-    client library is absent, streamer.rs:41-58 parity);
-    ``redis+fake:///path/stream`` → the file-backed loopback broker, which
-    runs the identical partitioned read path in-container.
-    """
-    from ..sources.redis_datasource import SeaRedisDataSource
-
-    spark.dataSource.register(SeaRedisDataSource)
-    stream_key = str(url.stream_key())
-    reader = spark.readStream.format("sea_redis").option("stream_key", stream_key)
-    if url.streamer.scheme == "redis+fake":
-        reader = reader.option("fake_root", url.streamer.nodes[0])
-    else:
-        # redis-py when installed; otherwise the in-repo RESP2 wire client
-        # (streaming/resp.py) — make_client dispatches per task
-        node = url.streamer.nodes[0]
-        host, _, port = node.partition(":")
-        reader = reader.option("host", host or "localhost").option("port", port or "6379")
-    # D1-D3 mode mapping (same contract as kafka_options): RealTime tails
-    # from End; Resumable starts at Beginning with the checkpoint owning
-    # progress; explicit rewind overrides.
-    from .consumer import Beginning, ConsumerMode, End
-
-    starting = "latest" if options.mode is ConsumerMode.RealTime else "earliest"
-    if options.rewind_to is Beginning:
-        starting = "earliest"
-    elif options.rewind_to is End:
-        starting = "latest"
-    return reader.option("starting_offsets", starting).load()
 
 
 # ------------------------------------------------------------- producer side
@@ -358,31 +334,23 @@ def redis_sink_foreach_batch(
     """
     if executor_side is None:
         executor_side = client_factory is None
-
-    host_port: tuple[str, int] | None = None
-    if url is not None:
-        node = url.streamer.nodes[0]
-        host, _, port = node.partition(":")
-        host_port = (host or "localhost", int(port or 6379))
-
-    def make_client():
-        if client_factory is not None:
-            return client_factory()
-        if host_port is None:
+    if client_factory is None:
+        if url is None:
             raise ValueError("redis sink needs a url or a client_factory")
-        try:
-            import redis
-        except ImportError:
-            from .resp import RespClient
+        from functools import partial
 
-            return RespClient(host=host_port[0], port=host_port[1])
-        return redis.Redis(host=host_port[0], port=host_port[1])
+        from ..model import client_opts
+        from ..sources.redis_datasource import make_client
+        from ..uri import StreamUrl, reader_config
+
+        _, opts = reader_config(StreamUrl(url.streamer))
+        client_factory = partial(make_client, client_opts(opts))
 
     def write_partition(rows) -> None:
         rows = list(rows)
         if not rows:
             return
-        _flush_xadds(make_client(), rows, maxlen)
+        _flush_xadds(client_factory(), rows, maxlen)
 
     def write(batch: DataFrame, batch_id: int) -> None:
         cols = batch.select("stream_key", "shard_id", "sequence", "timestamp", "payload")
@@ -399,6 +367,6 @@ def redis_sink_foreach_batch(
                 cols.collect(),
                 key=lambda r: (r.stream_key, r.shard_id, r.timestamp, r.sequence),
             )
-            _flush_xadds(make_client(), rows, maxlen)
+            _flush_xadds(client_factory(), rows, maxlen)
 
     return write

@@ -16,7 +16,8 @@ tasks, one shard per task:
   :class:`..streaming.resp.RespClient` — exactly what
   ``redis_sink_foreach_batch`` runs per partition in a deployment.
 - consume: paged :func:`..streaming.redis.poll_shards` loops per shard —
-  the same micro-batch read the ``sea_redis`` DataSource partitions run.
+  the same per-shard XRANGE read (``redis._xrange_shard``) the
+  ``sea_redis`` DataSource partitions run.
 
 Honesty note: the broker side is the in-repo pure-Python server
 (``resp_server.py``), not a C redis-server — broker CPU is charged to the

@@ -116,48 +116,41 @@ def reader_config(url: StreamUrl | str) -> tuple[str, dict[str, str]]:
     """Resolve a stream URL to a Spark (format, options) pair.
 
     The runtime-dispatch analog of ``SeaStreamer::connect``
-    (socket/src/streamer.rs:203-245): scheme picks the backend.
+    (socket/src/streamer.rs:203-245): scheme picks the backend. This is the
+    only place a scheme's host/port defaults, loopback ``fake_root``, stream
+    key and Kafka bootstrap list are read; the consumer, producer and sinks
+    all take their options from here.
+
+    ``file://<dir>/<streams>`` is the envelope parquet log under ``<dir>``;
+    a streaming read of it needs the envelope schema (``MESSAGE_SCHEMA``),
+    and the stream filter is applied on the envelope's ``stream_key``.
     """
     if isinstance(url, str):
         url = StreamUrl.parse(url)
     scheme = url.streamer.scheme
-    streams = ",".join(url.streams)
+    node = url.streamer.nodes[0]
+    host, _, port = node.partition(":")
     if scheme == "kafka":
         opts = {"kafka.bootstrap.servers": ",".join(url.streamer.nodes)}
-        if streams:
-            opts["subscribe"] = streams
+        if url.streams:
+            opts["subscribe"] = ",".join(url.streams)
         return "kafka", opts
-    if scheme in ("redis", "rediss"):
-        host, _, port = url.streamer.nodes[0].partition(":")
-        opts = {
-            "stream_key": str(url.stream_key()) if url.streams else "",
-            "host": host or "localhost",
-            "port": port or "6379",
-        }
-        return "sea_redis", opts
-    if scheme == "redis+fake":
-        opts = {
-            "stream_key": str(url.stream_key()) if url.streams else "",
-            "fake_root": url.streamer.nodes[0],
-        }
-        return "sea_redis", opts
-    if scheme in ("iggy", "iggy+fake"):
-        opts = {"topic": str(url.stream_key()) if url.streams else ""}
-        if scheme == "iggy+fake":
-            opts["fake_root"] = url.streamer.nodes[0]
+    if scheme in ("redis", "rediss", "redis+fake", "iggy", "iggy+fake"):
+        iggy = scheme.startswith("iggy")
+        key = str(url.stream_key()) if url.streams else ""
+        opts = {"topic" if iggy else "stream_key": key}
+        if scheme.endswith("+fake"):
+            opts["fake_root"] = node
         else:
-            host, _, port = url.streamer.nodes[0].partition(":")
-            opts.update({"host": host or "localhost", "port": port or "8090"})
-        return "sea_iggy", opts
+            opts.update(host=host or "localhost", port=port or ("8090" if iggy else "6379"))
+        return ("sea_iggy" if iggy else "sea_redis"), opts
     if scheme == "file":
-        path = "/".join(url.streamer.nodes[0].split("/"))
-        return "sea_ss_file", {"path": path, "streams": streams}
+        return "parquet", {"path": node}
     if scheme == "stdio":
         # stdio is a line protocol on a text stream: the Spark analog is the
         # socket/text source piped through stdio.parse_lines_df — there is no
         # registered batch format ("memory" is a sink-only format and would
-        # fail at load()). create_consumer handles stdio via that path; a
-        # bare (format, options) pair cannot express it.
+        # fail at load()). A bare (format, options) pair cannot express it.
         raise StreamUrlErr(
             "stdio:// has no (format, options) mapping: build it with "
             "spark.readStream.format('text'/'socket') + "
@@ -172,6 +165,5 @@ def reader_config(url: StreamUrl | str) -> tuple[str, dict[str, str]]:
             ".queryName(k) and read back via spark.table(k)"
         )
     if scheme == "socket":
-        host, _, port = url.streamer.nodes[0].partition(":")
         return "socket", {"host": host, "port": port or "9999"}
     raise StreamUrlErr(f"unsupported scheme {scheme!r} (supported: {SUPPORTED_SCHEMES})")

@@ -150,3 +150,41 @@ def test_envelope_ddl_has_one_definition():
         for p in pkg.rglob("*.py")
     )
     assert n == 1, f"envelope DDL spelled {n} times; use model.ENVELOPE_DDL"
+
+
+# ---------------------------------------------------------------------------
+# Streaming-layer duplication ratchet: uri.reader_config is the one scheme
+# resolver, and each backend decision below has one definition in the
+# package. Resolve a URL with reader_config instead of re-parsing it.
+
+_PKG_DIR = PLANS_DIR.parent
+
+
+def _pkg_sources() -> dict[str, str]:
+    return {
+        str(p.relative_to(_PKG_DIR)): p.read_text() for p in sorted(_PKG_DIR.rglob("*.py"))
+    }
+
+
+def test_scheme_literals_and_host_split_live_in_uri_only():
+    spots = {
+        (path, needle)
+        for path, text in _pkg_sources().items()
+        for needle in ('"redis+fake"', '"iggy+fake"', '.partition(":")')
+        if needle in text
+    }
+    assert {path for path, _ in spots} <= {"uri.py"}, (
+        f"scheme resolution outside uri.reader_config: {sorted(spots)}"
+    )
+
+
+def test_each_backend_decision_has_one_definition():
+    texts = _pkg_sources().values()
+    counts = {
+        "host split": sum(t.count('.partition(":")') for t in texts),
+        "shard discovery": sum(len(re.findall(r"^def discover_shard", t, re.M)) for t in texts),
+        "starting_offsets mode mapping": sum(
+            t.count('ConsumerMode.RealTime else "earliest"') for t in texts
+        ),
+    }
+    assert all(n == 1 for n in counts.values()), f"definitions (each must be 1): {counts}"
