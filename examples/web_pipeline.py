@@ -34,10 +34,7 @@ from sea_streamer_spark.operators.graph import (
     connected_components,
     incremental_components,
 )
-from sea_streamer_spark.plans.llm_ops6 import (
-    _html_synth_spark,
-    html_extract_text,
-)
+from sea_streamer_spark.plans.text import _html_synth_spark, html_extract_text
 from sea_streamer_spark.sources.tables import load_tables
 
 MAX_DOCS_PER_DOMAIN = 200

@@ -29,7 +29,6 @@ def main() -> None:
     from sea_streamer_spark.streaming.wire_bench import benchmark_wire
 
     spark = get_spark(app_name="wire-bench-example")
-    benchmark_wire(spark, n=min(n, 20_000), n_shards=shards)  # warm-up
     print(json.dumps(benchmark_wire(spark, n=n, n_shards=shards)))
     spark.stop()
 

@@ -25,7 +25,7 @@ Scale design (the one-pass distributed PCA):
 No reference analog (sea-streamer has no vector layer); part of the
 beyond-reference LLM-pipeline block. Registry-deferred like the other
 round-3 late ops (driver-budget fit); the oracle plan for round 4 is a
-centroid-literal-style model pin (llm_ops.py's IVF pattern): train at
+centroid-literal-style model pin (plans/similarity.py's IVF pattern): train at
 import, embed μ/W as literals, let DuckDB recompute the projection.
 """
 

@@ -339,7 +339,7 @@ def pq_codebooks(
 
 def pq_codebooks_from_sample(X, m: int, ksub: int, iters: int = 8) -> list[list[list[float]]]:
     """Codebooks from an already-fetched float64 sample matrix — the part
-    shared with the DuckDB oracle builder (plans/llm_ops.py), which feeds it
+    shared with the DuckDB oracle builder (plans/similarity.py), which feeds it
     the same rows in the same hash order."""
     d = X.shape[1]
     if d % m:
@@ -606,7 +606,7 @@ def ivf_kmeans(X, n_cells: int, iters: int = 8):
     of how the hash ordering interleaves them — and it stays RNG-free.
 
     Shared by :func:`ivf_centroids` (Spark collect path) and the DuckDB
-    oracle builder (plans/llm_ops.py), which feed it the SAME sample rows in
+    oracle quantizer (plans/fragments.py), which feed it the SAME sample rows in
     the SAME hash order — identical numpy ops on identical input produce
     bit-identical centroids in both, making the IVF query value-hash
     checkable."""
@@ -861,7 +861,7 @@ def semantic_cells_for(n: int, target_pop: int = 32) -> int:
     the expected population constant, so candidate volume is ≈ N·target_pop
     (linear — the SemDeDup paper's own regime: ~100k clusters for web-scale
     corpora, arXiv:2303.09540 §3) and cluster granularity tracks corpus
-    density. ``dedup_semantic_cell_sweep`` (plans/llm_ops14.py) measures the
+    density. ``dedup_semantic_cell_sweep`` (plans/semantic_dedup.py) measures the
     recall/candidate-volume tradeoff of this formula against fixed counts.
 
     Pure integer arithmetic (no log2 float edge cases): next power of two

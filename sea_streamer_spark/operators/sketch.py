@@ -15,7 +15,7 @@ Hashing is the repo's portable polynomial fold (operators/text.char_fold_hash
 — base 31 mod 1e9+7) through d pairwise-independent ``(a·h+b) mod P mod w``
 rows, NOT xxhash64: the fold is replayable in DuckDB SQL, so a query built
 on this sketch is value-hash ORACLE-CHECKABLE — the oracle rebuilds the
-entire grid and its estimates in SQL (see plans/llm_ops4.sketch_heavy_hitters).
+entire grid and its estimates in SQL (see plans/sketch.sketch_heavy_hitters).
 
 No reference analog (sea-streamer has no aggregation layer); part of the
 beyond-reference LLM-pipeline block.

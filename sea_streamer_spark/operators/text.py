@@ -163,3 +163,21 @@ def edit1_pairs(vocab: DataFrame, token_col: str = "token") -> DataFrame:
         .distinct()
     )
     return cand.filter(F.levenshtein("token_a", "token_b") == 1)
+
+
+def word_counts(docs: DataFrame, key: str, alias: str) -> DataFrame:
+    """(``key``, w, ``alias``): whitespace-token counts per ``key``
+    (doc_id or source), empty tokens dropped."""
+    return (
+        docs.select(
+            key,
+            F.explode(
+                F.filter(
+                    F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
+                    lambda x: F.length(x) > 0,
+                )
+            ).alias("w"),
+        )
+        .groupBy(key, "w")
+        .agg(F.count(F.lit(1)).cast("long").alias(alias))
+    )

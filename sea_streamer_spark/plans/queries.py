@@ -6,28 +6,49 @@ entirely by the ``CORRECTNESS_r*.json`` artifacts. The order and every
 oracle's text are pinned by ``tests/test_rank_loader.py``.
 """
 
-from . import relational  # noqa: F401
-from . import relational2  # noqa: F401
-from . import relational3  # noqa: F401
-from . import relational4  # noqa: F401
-from . import relational5  # noqa: F401
+from . import basket_graphs  # noqa: F401
+from . import curation  # noqa: F401
+from . import curation_sampling  # noqa: F401
+from . import dataset_versions  # noqa: F401
+from . import dedup  # noqa: F401
+from . import dedup_curation  # noqa: F401
+from . import dedup_eval  # noqa: F401
+from . import embedding  # noqa: F401
+from . import eval_metrics  # noqa: F401
+from . import event_ab_tests  # noqa: F401
+from . import event_analytics  # noqa: F401
+from . import event_rank_tests  # noqa: F401
+from . import event_sequences  # noqa: F401
+from . import event_streams  # noqa: F401
+from . import event_trends  # noqa: F401
+from . import event_windows  # noqa: F401
+from . import graph  # noqa: F401
+from . import layout  # noqa: F401
+from . import multimodal  # noqa: F401
+from . import order_analytics  # noqa: F401
+from . import privacy  # noqa: F401
+from . import profile  # noqa: F401
+from . import quality_calibration  # noqa: F401
+from . import quality_drift  # noqa: F401
+from . import quality_gates  # noqa: F401
+from . import quality_lm_scores  # noqa: F401
+from . import quality_signals  # noqa: F401
+from . import quality_text_signals  # noqa: F401
+from . import relational_aggregates  # noqa: F401
+from . import relational_expressions  # noqa: F401
+from . import relational_joins  # noqa: F401
+from . import relational_stats  # noqa: F401
+from . import search  # noqa: F401
+from . import semantic_dedup  # noqa: F401
+from . import similarity  # noqa: F401
+from . import similarity_eval  # noqa: F401
+from . import sketch  # noqa: F401
+from . import span_dedup  # noqa: F401
 from . import streaming_ops  # noqa: F401
-from . import llm_ops  # noqa: F401
-from . import llm_ops2  # noqa: F401
-from . import llm_ops3  # noqa: F401
-from . import llm_ops4  # noqa: F401
-from . import llm_ops5  # noqa: F401
-from . import llm_ops6  # noqa: F401
-from . import llm_ops7  # noqa: F401
-from . import llm_ops8  # noqa: F401
-from . import llm_ops9  # noqa: F401
-from . import llm_ops10  # noqa: F401
-from . import llm_ops11  # noqa: F401
-from . import llm_ops12  # noqa: F401
-from . import llm_ops13  # noqa: F401
-from . import llm_ops14  # noqa: F401
-from . import llm_ops15  # noqa: F401
-from . import llm_ops16  # noqa: F401
+from . import text  # noqa: F401
+from . import text_stats  # noqa: F401
+from . import tokenizers  # noqa: F401
+from . import tpch  # noqa: F401
 
 from .registry import QUERIES, oracle_sql, queries  # noqa: F401
 

@@ -3,7 +3,7 @@
 ``applyInPandasWithState``: typed state variables, timers, RocksDB-backed).
 
 Semantics are EXACTLY the batch query ``events_anomaly_zscore``
-(plans/llm_ops4.py): each (event_type, hour) count is scored against the
+(plans/event_streams.py): each (event_type, hour) count is scored against the
 mean/stddev of the previous ``TRAIL`` fully-observed hours — same integer
 sums, same float expression order, same HALF_UP micro rounding — so the
 streaming operator is verifiable row-for-row against the oracle-checked
@@ -19,7 +19,7 @@ aggregation emits them that way); within a batch the processor sorts.
 
 from __future__ import annotations
 
-TRAIL = 24  # single source of truth — plans.llm_ops4 imports this as _Z_TRAIL
+TRAIL = 24  # single source of truth — plans.event_streams imports this as _Z_TRAIL
 
 OUTPUT_SCHEMA = (
     "event_type string, window_start timestamp, c long, z_micro long"

@@ -1,5 +1,5 @@
 """Streaming curation stages — the incremental half of the batch
-curation funnel (plans/llm_ops15 ``curation_e2e_pipeline``), composed
+curation funnel (plans/dedup_curation ``curation_e2e_pipeline``), composed
 from the streaming layer's own primitives so the two deeply-verified
 halves of the engine are proven TOGETHER (r11 VERDICT task #1).
 

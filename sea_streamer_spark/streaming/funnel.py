@@ -1,5 +1,5 @@
 """Streaming ordered-funnel tracking — the batch query
-``events_funnel_stages`` (plans/llm_ops5.py) as a stateful stream.
+``events_funnel_stages`` (plans/event_analytics.py) as a stateful stream.
 
 Semantics are EXACTLY the batch operator's under its input contract:
 per-user events arrive in event-time order across micro-batches (within a

@@ -4,12 +4,14 @@ equal the live registry exactly (the r8/r9 ADVICE "one wave stale" class
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
 from sea_streamer_spark.plans.queries import QUERIES
 
 _COV = os.path.join(os.path.dirname(os.path.dirname(__file__)), "COVERAGE.md")
+_PRE_WAVE = os.path.join(os.path.dirname(__file__), "data", "pre_wave_queries.json")
 
 
 def test_coverage_header_counts_match_registry():
@@ -34,23 +36,21 @@ def test_coverage_header_counts_match_registry():
 
 
 def test_bench_new_ops_list_is_complete():
-    """Every query registered in the round-6+ wave modules must be
-    measured by bench's new_ops phase (or be a headline query) — a new
+    """Every query registered from the round-6 waves on must be measured
+    by bench's new_ops phase (or be a headline query) — a new
     registration can no longer silently skip the bench, and the list
     lives in ONE module-level constant instead of an inline literal
-    (the r9 ADVICE stale-annotation class)."""
+    (the r9 ADVICE stale-annotation class). The queries registered
+    before those waves are frozen in tests/data/pre_wave_queries.json;
+    every other registered name is a wave query."""
     import bench
 
-    wave_modules = {
-        f"sea_streamer_spark.plans.llm_ops{i}" for i in range(10, 30)
-    }
+    with open(_PRE_WAVE, encoding="utf-8") as f:
+        pre_wave = set(json.load(f))
+    wave = [n for n in QUERIES if n not in pre_wave]
+    assert len(wave) >= 139, f"only {len(wave)} wave queries registered"
     bench_names = set(bench.NEW_OPS_QUERIES) | set(bench.BENCH_QUERIES)
-    missing = [
-        n
-        for n, q in QUERIES.items()
-        if getattr(q.fn, "__module__", "") in wave_modules
-        and n not in bench_names
-    ]
+    missing = [n for n in wave if n not in bench_names]
     assert not missing, (
         f"registered wave queries absent from bench.NEW_OPS_QUERIES: "
         f"{missing}"

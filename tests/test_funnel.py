@@ -1,4 +1,4 @@
-"""Ordered funnel stages (plans/llm_ops5.events_funnel_stages)."""
+"""Ordered funnel stages (plans/event_analytics.events_funnel_stages)."""
 
 from __future__ import annotations
 

@@ -714,7 +714,7 @@ class TestRecallEval:
         this number is what you tune nprobe against."""
         import os
 
-        from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+        from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR
         from sea_streamer_spark.plans.queries import QUERIES
 
         if not os.path.exists(os.path.join(ORACLE_SF_DIR, "embeddings.parquet")):

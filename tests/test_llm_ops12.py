@@ -29,10 +29,10 @@ def _py_semantic(sf=SF):
     cosine ≥ threshold. Mirrors operators/similarity.cos_py's fold so
     all three engines agree bit-for-bit before the micro-rounding."""
     from sea_streamer_spark.operators.similarity import cos_py, dot_py
-    from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
-    from sea_streamer_spark.plans.llm_ops3 import _SEM_CELLS, _SEM_THRESHOLD
+    from sea_streamer_spark.plans.fragments import gate_ivf_centroids
+    from sea_streamer_spark.plans.fragments import SEM_CELLS, SEM_THRESHOLD
 
-    cents = gate_ivf_centroids(n_cells=_SEM_CELLS)
+    cents = gate_ivf_centroids(n_cells=SEM_CELLS)
     assert cents is not None, "gate testdata absent"
     emb = _embeddings(sf)
     rows = {}
@@ -49,7 +49,7 @@ def _py_semantic(sf=SF):
         kept[vid] = not any(
             ob_cell == cell
             and (ob_micro, ovid) < (micro, vid)
-            and cos_py(emb[vid], emb[ovid]) >= _SEM_THRESHOLD
+            and cos_py(emb[vid], emb[ovid]) >= SEM_THRESHOLD
             for ovid, (ob_cell, ob_micro) in rows.items()
             if ovid != vid
         )
@@ -74,7 +74,7 @@ def test_semantic_keeps_exactly_one_per_duplicate_clique(spark):
     representative, not keep-none (the failure mode a naive 'drop if
     any near neighbor' rule has)."""
     from sea_streamer_spark.operators.similarity import cos_py
-    from sea_streamer_spark.plans.llm_ops3 import _SEM_THRESHOLD
+    from sea_streamer_spark.plans.fragments import SEM_THRESHOLD
 
     rows, kept = _py_semantic()
     emb = _embeddings()
@@ -88,7 +88,7 @@ def test_semantic_keeps_exactly_one_per_duplicate_clique(spark):
             near = [
                 b
                 for b in vids
-                if b != a and cos_py(emb[a], emb[b]) >= _SEM_THRESHOLD
+                if b != a and cos_py(emb[a], emb[b]) >= SEM_THRESHOLD
             ]
             if not near:
                 assert kept[a], f"isolated vector {a} must be kept"
@@ -230,7 +230,7 @@ def test_ams_f2_full_python_replay(spark):
     t = pq.read_table(f"{SF}/events.parquet", columns=["user_id"])
     from collections import Counter
 
-    from sea_streamer_spark.plans.llm_ops12 import _AMS_COEF, _AMS_D, _AMS_P
+    from sea_streamer_spark.plans.eval_metrics import _AMS_COEF, _AMS_D, _AMS_P
 
     freq = Counter(t.column("user_id").to_pylist())
     f2 = sum(f * f for f in freq.values())
@@ -263,7 +263,7 @@ def _ql_py(sf=SF):
     import re
     from collections import Counter
 
-    from sea_streamer_spark.plans.llm_ops12 import _QL_MU
+    from sea_streamer_spark.plans.search import _QL_MU
 
     docs = {d: [w for w in re.split(r"\s+", t) if w] for d, t, _s in _docs(sf)}
     q = set(docs[0])
@@ -298,7 +298,7 @@ def test_query_likelihood_full_python_replay(spark):
 
 def test_ndcg_full_python_replay(spark):
     import re
-    from sea_streamer_spark.plans.llm_ops12 import _NDCG_K, _NDCG_W
+    from sea_streamer_spark.plans.search import _NDCG_K, _NDCG_W
 
     scores, corpus, q, _cf = _ql_py()
     rel = {
@@ -321,7 +321,7 @@ def test_ndcg_full_python_replay(spark):
 def test_benford_full_python_replay(spark):
     from collections import Counter
 
-    from sea_streamer_spark.plans.llm_ops12 import _BENFORD_P
+    from sea_streamer_spark.plans.quality_signals import _BENFORD_P
 
     t = pq.read_table(f"{SF}/events.parquet", columns=["value"])
     obs = Counter()
@@ -345,7 +345,7 @@ def test_benford_full_python_replay(spark):
 
 def test_jl_distortion_full_python_replay(spark):
     from sea_streamer_spark.operators.similarity import dot_py
-    from sea_streamer_spark.plans.llm_ops12 import _JL_K, _JL_R
+    from sea_streamer_spark.plans.similarity_eval import _JL_K, _JL_R
 
     emb = _embeddings()
     from collections import Counter
@@ -419,8 +419,11 @@ def test_good_turing_full_python_replay(spark):
 
 
 def test_weighted_reservoir_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops12 import (
-        _RES_A, _RES_B, _RES_K, _RES_P,
+    from sea_streamer_spark.plans.curation_sampling import (
+        _RES_A,
+        _RES_B,
+        _RES_K,
+        _RES_P,
     )
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "n_chars"])
@@ -447,7 +450,7 @@ def test_weighted_reservoir_full_python_replay(spark):
 def test_spearman_full_python_replay(spark):
     import re
 
-    from sea_streamer_spark.plans.llm_ops12 import _SPEAR_SIGNALS
+    from sea_streamer_spark.plans.quality_signals import _SPEAR_SIGNALS
 
     sig = {}
     for d, text, _s in _docs():
@@ -520,12 +523,12 @@ def test_cell_label_purity_replay_and_invariants(spark):
     from collections import Counter
 
     from sea_streamer_spark.operators.similarity import dot_py
-    from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
-    from sea_streamer_spark.plans.llm_ops3 import _SEM_CELLS
+    from sea_streamer_spark.plans.fragments import gate_ivf_centroids
+    from sea_streamer_spark.plans.fragments import SEM_CELLS
 
     t = pq.read_table(f"{SF}/embeddings.parquet",
                       columns=["vec_id", "embedding", "label"])
-    cents = gate_ivf_centroids(n_cells=_SEM_CELLS)
+    cents = gate_ivf_centroids(n_cells=SEM_CELLS)
     assert cents is not None
     per: dict[int, Counter] = {}
     for v, e, lab in zip(t.column("vec_id").to_pylist(),
@@ -616,7 +619,7 @@ def test_pagerank_convergence_pins(spark):
 
 def test_lsh_band_curve_pins(spark):
     from sea_streamer_spark.operators.dedup import LSH_BANDS, LSH_ROWS
-    from sea_streamer_spark.plans.llm_ops12 import _LSH_THEORY
+    from sea_streamer_spark.plans.dedup_eval import _LSH_THEORY
 
     rows = _run(spark, "dedup_lsh_band_curve").collect()
     assert [r["j_bucket"] for r in rows] == list(range(3, 10))

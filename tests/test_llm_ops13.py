@@ -174,7 +174,7 @@ def test_mann_kendall_plan_dimension_bounded(spark):
     InMemory scans); pairs/ties/median all live on the day dimension. No
     python nodes, no cartesian (the registered query checkpoints, so the
     pin inspects the pre-checkpoint builder)."""
-    from sea_streamer_spark.plans.llm_ops13 import _mann_kendall_frame
+    from sea_streamer_spark.plans.event_rank_tests import _mann_kendall_frame
 
     df, daily = _mann_kendall_frame(spark, SF)
     try:
@@ -213,7 +213,7 @@ def test_collocation_llr_full_python_replay(spark):
     def xlx(v):
         return v * math.log(v) if v > 0 else 0.0
 
-    from sea_streamer_spark.plans.llm_ops13 import _G2_MIN_PAIR, _G2_TOPK
+    from sea_streamer_spark.plans.text_stats import _G2_MIN_PAIR, _G2_TOPK
 
     scored = []
     for (w1, w2), o11 in bi.items():
@@ -278,7 +278,7 @@ def test_cuped_full_python_replay(spark):
             t.column("value").to_pylist())
     )
     d0 = min(ts.date() for ts, _u, _v in rows)
-    from sea_streamer_spark.plans.llm_ops13 import _CUPED_PRE_DAYS
+    from sea_streamer_spark.plans.event_ab_tests import _CUPED_PRE_DAYS
 
     users: dict = {}
     for ts, uid, v in rows:
@@ -411,11 +411,7 @@ def test_prefix_filter_full_python_replay(spark):
 def test_textrank_full_python_replay(spark):
     import re as _re
 
-    from sea_streamer_spark.plans.llm_ops13 import (
-        _TR_ITERS,
-        _TR_STOPS,
-        _TR_TOPK,
-    )
+    from sea_streamer_spark.plans.graph import _TR_ITERS, _TR_STOPS, _TR_TOPK
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
     docs = {
@@ -464,7 +460,7 @@ def test_textrank_full_python_replay(spark):
 def test_poisson_bootstrap_full_python_replay(spark):
     import hashlib
 
-    from sea_streamer_spark.plans.llm_ops13 import (
+    from sea_streamer_spark.plans.event_ab_tests import (
         _BOOT_HI,
         _BOOT_LO,
         _BOOT_MOD,
@@ -668,7 +664,7 @@ def _embeddings(sf=SF):
 
 def test_kcenter_full_python_replay(spark):
     from sea_streamer_spark.operators.similarity import cos_py
-    from sea_streamer_spark.plans.llm_ops13 import _KC_K
+    from sea_streamer_spark.plans.similarity import _KC_K
 
     emb = _embeddings()
     seed = min(emb)
@@ -701,10 +697,7 @@ def test_kcenter_full_python_replay(spark):
 def test_burstiness_full_python_replay(spark):
     import re as _re
 
-    from sea_streamer_spark.plans.llm_ops13 import (
-        _BURST_MIN_TOTAL,
-        _BURST_TOPK,
-    )
+    from sea_streamer_spark.plans.text_stats import _BURST_MIN_TOTAL, _BURST_TOPK
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
     per_w: dict = {}
@@ -743,7 +736,7 @@ def test_burstiness_full_python_replay(spark):
 def test_submodular_coverage_full_python_replay(spark):
     import re as _re
 
-    from sea_streamer_spark.plans.llm_ops13 import _SUB_K
+    from sea_streamer_spark.plans.dedup_curation import _SUB_K
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
     sets: dict = {}
@@ -838,7 +831,7 @@ def test_theil_full_python_replay(spark):
 
 
 def test_cdc_chunking_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops13 import _CDC_MASK, _CDC_WINDOW
+    from sea_streamer_spark.plans.span_dedup import _CDC_MASK, _CDC_WINDOW
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["text", "source"])
     per_src: dict = {}
@@ -882,7 +875,7 @@ def test_cdc_boundaries_are_local(spark):
     of the shared suffix mostly survives. Verified directly in python
     on one fixture doc (an engine-independent semantic pin of why this
     operator exists)."""
-    from sea_streamer_spark.plans.llm_ops13 import _CDC_MASK, _CDC_WINDOW
+    from sea_streamer_spark.plans.span_dedup import _CDC_MASK, _CDC_WINDOW
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["text"])
     x = next(s for s in t.column("text").to_pylist() if s and len(s) > 400)
@@ -1015,7 +1008,7 @@ def test_char_entropy_full_python_replay(spark):
 
 
 def test_dp_budget_consistent_with_k_anonymity(spark):
-    from sea_streamer_spark.plans.llm_ops13 import _DP_EPS
+    from sea_streamer_spark.plans.relational_stats import _DP_EPS
 
     ka = {
         (r["nation"], r["segment"]): r
@@ -1164,7 +1157,7 @@ def test_anisotropy_full_python_replay(spark):
 
 
 def test_powerlaw_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops13 import _PL_XMIN
+    from sea_streamer_spark.plans.event_trends import _PL_XMIN
 
     t = pq.read_table(f"{SF}/events.parquet", columns=["user_id"])
     ua: dict = {}
@@ -1249,10 +1242,7 @@ def test_bitmask_full_python_replay(spark):
 
 
 def test_masked_esd_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops13 import (
-        _ESD_CUTOFF_MILLI,
-        _ESD_ROUNDS,
-    )
+    from sea_streamer_spark.plans.event_trends import _ESD_CUTOFF_MILLI, _ESD_ROUNDS
 
     t = pq.read_table(f"{SF}/events.parquet", columns=["ts"])
     daily: dict = {}
@@ -1331,7 +1321,7 @@ def test_abc_analysis_full_python_replay(spark):
 def test_jm_lambda_em_full_python_replay(spark):
     import re as _re
 
-    from sea_streamer_spark.plans.llm_ops13 import _JM_ITERS
+    from sea_streamer_spark.plans.quality_calibration import _JM_ITERS
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
     docs = {
@@ -1393,7 +1383,7 @@ def test_idiv_col_exact_above_double_precision(spark):
     below (the old double-division modulo trick returned 6 here)."""
     from pyspark.sql import functions as F
 
-    from sea_streamer_spark.plans.llm_ops12 import _idiv_col
+    from sea_streamer_spark.operators.exact import idiv_col
 
     a = 380246347954840 * 1000
     b = 20302 * 2591642839594
@@ -1401,7 +1391,7 @@ def test_idiv_col_exact_above_double_precision(spark):
         [(a, b), (a + 1, b), (-a, b)], "a long, b long"
     )
     got = [
-        r["q"] for r in df.select(_idiv_col(F.col("a"), F.col("b")).alias("q")).collect()
+        r["q"] for r in df.select(idiv_col(F.col("a"), F.col("b")).alias("q")).collect()
     ]
     def trunc(x, y):
         return abs(x) // y * (1 if x >= 0 else -1)
@@ -1456,7 +1446,7 @@ def test_idiv_col_scale_exact_past_bigint(spark):
     DECIMAL(38,0), so 1000·a stays exact far past BIGINT."""
     from pyspark.sql import functions as F
 
-    from sea_streamer_spark.plans.llm_ops12 import _idiv_col
+    from sea_streamer_spark.operators.exact import idiv_col
 
     a = 5_300_000_000_000_000_123  # ~5.3e18: 1000*a wraps int64
     b = 20302 * 2591642839594
@@ -1464,7 +1454,7 @@ def test_idiv_col_scale_exact_past_bigint(spark):
     got = [
         r["q"]
         for r in df.select(
-            _idiv_col(F.col("a"), F.col("b"), scale=1000).alias("q")
+            idiv_col(F.col("a"), F.col("b"), scale=1000).alias("q")
         ).collect()
     ]
     def trunc(x, y):
@@ -1475,7 +1465,7 @@ def test_idiv_col_scale_exact_past_bigint(spark):
     (got2,) = [
         r["q"]
         for r in df2.select(
-            _idiv_col(F.col("n"), F.col("d"), scale=10**12).alias("q")
+            idiv_col(F.col("n"), F.col("d"), scale=10**12).alias("q")
         ).collect()
     ]
     assert got2 == (10**12 * 9_300_000) // 17

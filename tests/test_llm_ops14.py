@@ -106,7 +106,7 @@ def test_cell_sweep_full_python_replay(spark):
     assignment via the same gate centroid literals and (sim, -cell)
     argmax, counts in pure python."""
     from sea_streamer_spark.operators.similarity import cos_py, dot_py
-    from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
+    from sea_streamer_spark.plans.fragments import gate_ivf_centroids
 
     t = pq.read_table(f"{SF}/embeddings.parquet")
     ids = t.column("vec_id").to_pylist()
@@ -232,9 +232,9 @@ def test_pii_audit_full_python_replay(spark):
     import re
 
     t = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text", "source"])
-    from sea_streamer_spark.plans.llm_ops14 import _PII_PATTERNS
+    from sea_streamer_spark.operators.pii import PII_PATTERNS
 
-    pats = [(n, re.compile(p)) for n, p, _ in _PII_PATTERNS]
+    pats = [(n, re.compile(p)) for n, p, _ in PII_PATTERNS]
 
     def inject(d, text):
         m = d % 7
@@ -302,7 +302,7 @@ def test_pii_patterns_are_pairwise_disjoint():
     every pattern with python re."""
     import re
 
-    from sea_streamer_spark.plans.llm_ops14 import _PII_PATTERNS
+    from sea_streamer_spark.operators.pii import PII_PATTERNS
 
     samples = {
         "email": "user123@example.org",
@@ -311,7 +311,7 @@ def test_pii_patterns_are_pairwise_disjoint():
         "ssn": "123-45-6789",
         "ccard": "1234-5678-9012-3456",
     }
-    for name, pat, _ in _PII_PATTERNS:
+    for name, pat, _ in PII_PATTERNS:
         p = re.compile(pat)
         for sname, s in samples.items():
             hits = p.findall(f"pad {s} pad")
@@ -399,9 +399,7 @@ def test_map_mrr_full_python_replay(spark):
     """Pure-python MAP@10/MRR@10 from the collected QL ranking and a
     python-recomputed relevance set."""
     got = _run(spark, "search_map_mrr_eval").collect()[0]
-    from sea_streamer_spark.plans.llm_ops12 import (
-        search_query_likelihood_topk,
-    )
+    from sea_streamer_spark.plans.search import search_query_likelihood_topk
 
     ranked = [
         r["doc_id"]
@@ -596,9 +594,9 @@ def test_heaps_full_python_replay(spark):
 def test_brier_ece_full_python_replay(spark):
     import math
 
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     ps = []
     for r in rows:
         margin = r["score_pass"] - r["score_fail"]
@@ -825,9 +823,9 @@ def test_lorenz_shares_monotone_and_complete(spark):
 
 
 def test_mcnemar_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     b = sum(
         1
         for r in rows
@@ -967,10 +965,8 @@ def test_order_mad_full_python_replay(spark):
 
 
 def test_rank_tau_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops3 import search_bm25_topk
-    from sea_streamer_spark.plans.llm_ops12 import (
-        search_query_likelihood_topk,
-    )
+    from sea_streamer_spark.plans.search import search_bm25_topk
+    from sea_streamer_spark.plans.search import search_query_likelihood_topk
 
     ql = [r["doc_id"] for r in search_query_likelihood_topk(spark, SF).collect()]
     bm = [r["doc_id"] for r in search_bm25_topk(spark, SF).collect()]
@@ -999,9 +995,9 @@ def test_rank_tau_full_python_replay(spark):
 
 
 def test_kappa_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     a = sum(1 for r in rows if r["truth"] and r["score_pass"] >= r["score_fail"])
     b = sum(1 for r in rows if r["truth"] and r["score_pass"] < r["score_fail"])
     c = sum(1 for r in rows if not r["truth"] and r["score_pass"] >= r["score_fail"])
@@ -1116,9 +1112,9 @@ def test_user_gini_full_python_replay(spark):
 
 
 def test_youden_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     margins = sorted(
         {r["score_pass"] - r["score_fail"] for r in rows}, reverse=True
     )

@@ -91,12 +91,12 @@ def test_aa_hubcapped_single_sources_registered_graph(spark):
     reproduced by ranking the hub-cap query's own candidate relation."""
     from pyspark.sql import functions as F
 
-    from sea_streamer_spark.plans.llm_ops14 import _aa_graph
+    from sea_streamer_spark.operators.linkpred import aa_graph
 
     reg = _run(spark, "graph_adamic_adar_linkpred").select(
         "part_a", "part_b", "aa_micro"
     )
-    pairs, e, deg, wedges = _aa_graph(spark, SF)
+    pairs, e, deg, wedges = aa_graph(spark, SF)
     unlinked = wedges.join(
         pairs.select(F.col("pa").alias("u"), F.col("pb").alias("v")),
         ["u", "v"],
@@ -134,7 +134,7 @@ def test_planted_sweep_full_python_replay(spark):
     import pyarrow.parquet as pq
 
     from sea_streamer_spark.operators.similarity import cos_py, dot_py
-    from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
+    from sea_streamer_spark.plans.fragments import gate_ivf_centroids
 
     t = pq.read_table(f"{SF}/embeddings.parquet")
     base_ids = t.column("vec_id").to_pylist()
@@ -235,7 +235,7 @@ def test_e2e_pipeline_composes_registered_stages(spark):
     import hashlib
     import re as _re
 
-    from sea_streamer_spark.plans.llm_ops14 import _PII_PATTERNS
+    from sea_streamer_spark.operators.pii import PII_PATTERNS
     from sea_streamer_spark.sources.tables import load_tables
 
     docs = {
@@ -265,7 +265,7 @@ def test_e2e_pipeline_composes_registered_stages(spark):
         return text
 
     def redact(t):
-        for _, pat, repl in _PII_PATTERNS:
+        for _, pat, repl in PII_PATTERNS:
             t = _re.sub(pat, repl, t)
         return t
 
@@ -311,7 +311,7 @@ def test_e2e_pipeline_composes_registered_stages(spark):
         row[5] += keep5[d]
 
     # Hamilton over survivor counts, python replay
-    from sea_streamer_spark.plans.llm_ops14 import _APPORTION_BUDGET as budget
+    from sea_streamer_spark.operators.apportion import APPORTION_BUDGET as budget
 
     n_total = sum(v[5] for v in per.values())
     q = {
@@ -706,9 +706,9 @@ def test_order_sensitivity_consistent_with_e2e(spark):
 
 def test_precision_at_k_full_python_replay(spark):
     """P@k/R@k replayed from the NB margin ranking collected once."""
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     ranked = sorted(
         rows,
         key=lambda r: (-(r["score_pass"] - r["score_fail"]), r["doc_id"]),

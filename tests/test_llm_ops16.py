@@ -37,9 +37,9 @@ def test_auc_full_python_replay(spark):
     """AUC replayed from the NB score relation via the rank-sum
     identity; the margin relation is the SAME one the MCC/kappa family
     summarizes, pinned by matching n."""
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     margins = [r["score_pass"] - r["score_fail"] for r in rows]
     r2 = _rank2(margins)
     np_ = sum(1 for r in rows if r["truth"])
@@ -344,9 +344,9 @@ def test_hits_full_python_replay(spark):
 
 
 def test_pr_curve_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     ranked = sorted(
         rows,
         key=lambda r: (-(r["score_pass"] - r["score_fail"]), r["doc_id"]),
@@ -567,9 +567,9 @@ def test_welch_full_python_replay(spark):
 
 
 def test_ks_gate_full_python_replay(spark):
-    from sea_streamer_spark.plans.llm_ops11 import _nb_scored
+    from sea_streamer_spark.plans.quality_calibration import nb_scored
 
-    rows = _nb_scored(spark, SF).collect()
+    rows = nb_scored(spark, SF).collect()
     np_ = sum(1 for r in rows if r["truth"])
     nn = len(rows) - np_
     by_m: dict = {}

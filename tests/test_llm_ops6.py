@@ -13,23 +13,19 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from sea_streamer_spark.plans.llm_ops6 import (
+from sea_streamer_spark.plans.span_dedup import (
     _BOILERPLATE,
     _LINE_FREQ_CUT,
     _LINE_W,
-    text_html_extract,
     text_line_dedup,
-    web_url_stats,
 )
+from sea_streamer_spark.plans.text import text_html_extract, web_url_stats
 
 
 class TestHtmlExtract:
     def test_clean_text_has_no_markup_and_entities_decoded(self, spark, sf_dir):
         # Re-derive clean text (the registered query only ships its md5).
-        from sea_streamer_spark.plans.llm_ops6 import (
-            _html_synth_spark,
-            html_extract_text,
-        )
+        from sea_streamer_spark.plans.text import _html_synth_spark, html_extract_text
         from sea_streamer_spark.sources.tables import load_tables
 
         docs = load_tables(spark, sf_dir, "documents").documents
@@ -136,7 +132,7 @@ class TestLineDedup:
 
 class TestCdcMergeUpsert:
     def test_action_provenance(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import cdc_merge_upsert
+        from sea_streamer_spark.plans.curation import cdc_merge_upsert
 
         rows = cdc_merge_upsert(spark, sf_dir).collect()
         by_id = {r["doc_id"]: r["action"] for r in rows}
@@ -156,7 +152,7 @@ class TestCdcMergeUpsert:
                 assert (not in_base) and has_change
 
     def test_deleted_keys_absent(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import cdc_merge_upsert
+        from sea_streamer_spark.plans.curation import cdc_merge_upsert
 
         ids = {r["doc_id"] for r in cdc_merge_upsert(spark, sf_dir).collect()}
         assert not any(i % 9 == 0 for i in ids)
@@ -243,7 +239,7 @@ class TestClassifierProbe:
             py_label,
             py_train,
         )
-        from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+        from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR
 
         rows = duckdb.sql(
             f"SELECT text FROM '{ORACLE_SF_DIR}/documents.parquet'"
@@ -272,7 +268,7 @@ class TestClassifierProbe:
 
 class TestEntityResolution:
     def test_match_and_orphan_structure(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import (
+        from sea_streamer_spark.plans.dedup import (
             _ER_DIRTY_BASE,
             entity_resolution_customers,
         )
@@ -292,9 +288,7 @@ class TestEntityResolution:
                 assert src in cleans, (dk, cleans)
 
     def test_blocking_join_is_not_a_nested_loop(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import (
-            entity_resolution_customers,
-        )
+        from sea_streamer_spark.plans.dedup import entity_resolution_customers
         from tests.test_plan_quality import _final_plan
 
         plan = _final_plan(entity_resolution_customers(spark, sf_dir))
@@ -304,7 +298,7 @@ class TestEntityResolution:
 
 class TestEventsAnalytics:
     def test_retention_offset_zero_is_cohort_size(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import events_cohort_retention
+        from sea_streamer_spark.plans.event_analytics import events_cohort_retention
 
         rows = events_cohort_retention(spark, sf_dir).collect()
         assert rows
@@ -322,7 +316,7 @@ class TestEventsAnalytics:
             )
 
     def test_gini_bounds_and_skew_ordering(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import profile_key_skew
+        from sea_streamer_spark.plans.event_analytics import profile_key_skew
 
         rows = profile_key_skew(spark, sf_dir).collect()
         assert rows
@@ -336,7 +330,7 @@ class TestEventsAnalytics:
         from pyspark.sql import Window
 
         # uniform keys vs one hot key: gini must rank them correctly
-        from sea_streamer_spark.plans.llm_ops6 import profile_key_skew
+        from sea_streamer_spark.plans.event_analytics import profile_key_skew
 
         uniform = spark.createDataFrame(
             [("u", i % 10, i) for i in range(100)],
@@ -460,7 +454,7 @@ class TestMmrDiverseTopk:
         return out
 
     def test_matches_pure_python_greedy(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import (
+        from sea_streamer_spark.plans.similarity import (
             _MMR_K,
             _MMR_LAM,
             _MMR_POOL,
@@ -480,7 +474,7 @@ class TestMmrDiverseTopk:
 
     def test_diversity_changes_the_selection(self, spark, sf_dir):
         from sea_streamer_spark.operators.similarity import cosine_topk
-        from sea_streamer_spark.plans.llm_ops6 import mmr_diverse_topk
+        from sea_streamer_spark.plans.similarity import mmr_diverse_topk
         from sea_streamer_spark.sources.tables import load_tables
 
         emb = load_tables(spark, sf_dir, "embeddings").embeddings
@@ -499,7 +493,7 @@ class TestPatternMatch:
     def test_matches_python_re(self, spark, sf_dir):
         import re as _re
 
-        from sea_streamer_spark.plans.llm_ops6 import (
+        from sea_streamer_spark.plans.event_analytics import (
             _CEP_PATTERN,
             events_pattern_match,
         )
@@ -528,7 +522,7 @@ class TestPatternMatch:
     def test_hand_cases(self):
         import re as _re
 
-        from sea_streamer_spark.plans.llm_ops6 import _CEP_PATTERN
+        from sea_streamer_spark.plans.event_analytics import _CEP_PATTERN
 
         assert _re.findall(_CEP_PATTERN, "vvccp") == ["vvccp"]
         assert _re.findall(_CEP_PATTERN, "vcpvcp") == ["vcp", "vcp"]
@@ -539,7 +533,7 @@ class TestPatternMatch:
 
 class TestGapFill:
     def test_corpus_has_gaps_and_locf_is_total_after_first(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import events_gapfill_15m
+        from sea_streamer_spark.plans.event_analytics import events_gapfill_15m
 
         rows = events_gapfill_15m(spark, sf_dir).collect()
         assert rows
@@ -557,7 +551,7 @@ class TestGapFill:
         assert seen_obs
 
     def test_grid_is_dense(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import events_gapfill_15m
+        from sea_streamer_spark.plans.event_analytics import events_gapfill_15m
 
         rows = events_gapfill_15m(spark, sf_dir).collect()
         buckets = [r["bucket"] for r in rows]
@@ -566,7 +560,7 @@ class TestGapFill:
 
 class TestValidateExpectations:
     def test_mixed_outcomes_and_scan_economy(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import validate_expectations
+        from sea_streamer_spark.plans.quality_signals import validate_expectations
 
         rows = {r["rule_id"]: r for r in validate_expectations(spark, sf_dir).collect()}
         assert len(rows) == 7
@@ -583,7 +577,7 @@ class TestValidateExpectations:
     def test_single_scan_per_table(self, spark, sf_dir):
         # all 5 orders rules share one aggregate: the plan must scan the
         # orders parquet at most twice (agg + FK probe), not once per rule
-        from sea_streamer_spark.plans.llm_ops6 import validate_expectations
+        from sea_streamer_spark.plans.quality_signals import validate_expectations
         from tests.test_plan_quality import _final_plan
 
         plan = _final_plan(validate_expectations(spark, sf_dir))
@@ -622,10 +616,7 @@ import sys  # noqa: E402
 
 class TestJoinCardinality:
     def test_one_sided_and_tight(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import (
-            _JC_W,
-            sketch_join_cardinality,
-        )
+        from sea_streamer_spark.plans.sketch import _JC_W, sketch_join_cardinality
 
         rows = {r["stat"]: r["value"] for r in
                 sketch_join_cardinality(spark, sf_dir).collect()}
@@ -655,10 +646,7 @@ class TestJoinCardinality:
         # independent python build of both grids from raw keys
         import duckdb
 
-        from sea_streamer_spark.plans.llm_ops6 import (
-            _JC_W,
-            sketch_join_cardinality,
-        )
+        from sea_streamer_spark.plans.sketch import _JC_W, sketch_join_cardinality
 
         def build(sql):
             grid = [[0] * _JC_W for _ in range(CMS_DEPTH)]
@@ -689,7 +677,7 @@ class TestDriftChisq:
         import duckdb
         import math
 
-        from sea_streamer_spark.plans.llm_ops6 import profile_drift_chisq
+        from sea_streamer_spark.plans.quality_drift import profile_drift_chisq
 
         rows = duckdb.sql(
             f"""SELECT source, lang,
@@ -723,7 +711,7 @@ class TestDriftChisq:
     def test_engineered_drift_is_flagged(self, spark):
         import tempfile
 
-        from sea_streamer_spark.plans.llm_ops6 import profile_drift_chisq
+        from sea_streamer_spark.plans.quality_drift import profile_drift_chisq
 
         # source 'stable' identical across waves; 'drifted' doubles in the
         # new wave; 'fresh' appears only in the new wave
@@ -757,7 +745,7 @@ class TestTrianglesAndKAnon:
         from itertools import combinations
 
         from sea_streamer_spark.operators.dedup import minhash_lsh_dedup
-        from sea_streamer_spark.plans.llm_ops6 import graph_triangle_counts
+        from sea_streamer_spark.plans.dedup import graph_triangle_counts
         from sea_streamer_spark.sources.tables import load_tables
 
         docs = load_tables(spark, sf_dir, "documents").documents
@@ -783,7 +771,7 @@ class TestTrianglesAndKAnon:
         # clique{1,2,3,4} has 4 triangles (3 per node); path 5-6-7 has none
         from pyspark.sql import functions as F
 
-        from sea_streamer_spark.plans import llm_ops6  # noqa: F401
+        from sea_streamer_spark.plans import dedup  # noqa: F401
 
         edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
         edges += [(5, 6), (6, 7)]
@@ -808,7 +796,7 @@ class TestTrianglesAndKAnon:
                        [(x["a"], x["b"], x["c"]) for x in rows])
 
     def test_k_anonymity_flags(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import privacy_k_anonymity
+        from sea_streamer_spark.plans.quality_signals import privacy_k_anonymity
 
         rows = privacy_k_anonymity(spark, sf_dir).collect()
         assert rows
@@ -821,7 +809,7 @@ class TestSpanRemoval:
         from sea_streamer_spark.operators.dedup import (
             duplicated_span_coverage,
         )
-        from sea_streamer_spark.plans.llm_ops6 import dedup_span_removal
+        from sea_streamer_spark.plans.span_dedup import dedup_span_removal
         from sea_streamer_spark.sources.tables import load_tables
 
         docs = load_tables(spark, sf_dir, "documents").documents
@@ -840,7 +828,7 @@ class TestSpanRemoval:
         # engineered corpus: a shared sentence between two docs must vanish
         import tempfile
 
-        from sea_streamer_spark.plans.llm_ops6 import dedup_span_removal
+        from sea_streamer_spark.plans.span_dedup import dedup_span_removal
 
         shared = "alpha beta gamma delta"
         rows = [
@@ -867,7 +855,7 @@ class TestRrfFusion:
     def test_formula_and_fusion_structure(self, spark, sf_dir):
         import math
 
-        from sea_streamer_spark.plans.llm_ops6 import _RRF_K, search_rrf_fusion
+        from sea_streamer_spark.plans.similarity import _RRF_K, search_rrf_fusion
 
         rows = search_rrf_fusion(spark, sf_dir).collect()
         assert len(rows) == 10
@@ -887,9 +875,7 @@ class TestRrfFusion:
 
 class TestIncrementalRestatement:
     def test_restated_hours_only_and_exact_distincts(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import (
-            rollup_incremental_restatement,
-        )
+        from sea_streamer_spark.plans.event_analytics import rollup_incremental_restatement
         from sea_streamer_spark.sources.tables import load_tables
 
         ev = load_tables(spark, sf_dir, "events").events
@@ -925,7 +911,7 @@ class TestIncrementalRestatement:
 
 class TestStatsFamily:
     def test_histogram_heights_balanced_and_boundaries_ordered(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import (
+        from sea_streamer_spark.plans.relational_stats import (
             _HIST_B,
             profile_equiheight_histogram,
         )
@@ -944,7 +930,7 @@ class TestStatsFamily:
         import duckdb
         import numpy as np
 
-        from sea_streamer_spark.plans.llm_ops6 import events_mad_outliers
+        from sea_streamer_spark.plans.event_trends import events_mad_outliers
 
         got = {r["event_type"]: r for r in events_mad_outliers(spark, sf_dir).collect()}
         rows = duckdb.sql(
@@ -975,7 +961,7 @@ class TestAbConversion:
     def test_z_matches_python_reference(self, spark, sf_dir):
         import math
 
-        from sea_streamer_spark.plans.llm_ops6 import events_ab_conversion
+        from sea_streamer_spark.plans.event_ab_tests import events_ab_conversion
 
         r = events_ab_conversion(spark, sf_dir).collect()[0]
         n_a, c_a, n_b, c_b = r["n_a"], r["c_a"], r["n_b"], r["c_b"]
@@ -993,7 +979,7 @@ class TestAbConversion:
         # arms must be the registry's split_bucket(user_id, 2) — stable
         # across engines/runs (the experimentation requirement)
         from sea_streamer_spark.operators.curation import split_bucket
-        from sea_streamer_spark.plans.llm_ops6 import events_ab_conversion
+        from sea_streamer_spark.plans.event_ab_tests import events_ab_conversion
         from sea_streamer_spark.sources.tables import load_tables
 
         ev = load_tables(spark, sf_dir, "events").events
@@ -1013,7 +999,7 @@ class TestAbConversion:
 
 class TestRankNormalize:
     def test_per_source_fairness(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import quality_rank_normalize
+        from sea_streamer_spark.plans.quality_signals import quality_rank_normalize
 
         rows = quality_rank_normalize(spark, sf_dir).collect()
         by_src: dict[str, list] = {}
@@ -1037,7 +1023,7 @@ class TestRankNormalize:
         # rank normalization it keeps its own top 70%
         import tempfile
 
-        from sea_streamer_spark.plans.llm_ops6 import quality_rank_normalize
+        from sea_streamer_spark.plans.quality_signals import quality_rank_normalize
 
         rows = []
         for i in range(20):  # rich source: long texts
@@ -1072,7 +1058,7 @@ class TestBfsLevels:
 
         from sea_streamer_spark.operators.dedup import minhash_lsh_dedup
         from sea_streamer_spark.operators.graph import connected_components
-        from sea_streamer_spark.plans.llm_ops6 import graph_bfs_levels
+        from sea_streamer_spark.plans.dedup import graph_bfs_levels
         from sea_streamer_spark.sources.tables import load_tables
 
         docs = load_tables(spark, sf_dir, "documents").documents
@@ -1109,7 +1095,7 @@ class TestBfsLevels:
 
 class TestNoveltyAndGrowth:
     def test_first_doc_has_full_novelty(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import text_novelty_score
+        from sea_streamer_spark.plans.text import text_novelty_score
 
         rows = {r["doc_id"]: r for r in text_novelty_score(spark, sf_dir).collect()}
         first = rows[min(rows)]
@@ -1120,7 +1106,7 @@ class TestNoveltyAndGrowth:
             assert r["n_novel"] <= r["n_shingles"]
 
     def test_growth_curve_is_monotone_and_concave_ish(self, spark, sf_dir):
-        from sea_streamer_spark.plans.llm_ops6 import corpus_growth_curve
+        from sea_streamer_spark.plans.text import corpus_growth_curve
 
         rows = corpus_growth_curve(spark, sf_dir).collect()
         toks = [r["n_tokens"] for r in rows]

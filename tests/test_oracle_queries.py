@@ -32,7 +32,7 @@ def test_no_silent_oracle_drops():
     re-raise on present-but-broken gate data; this pins the contract."""
     import os
 
-    from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+    from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR
 
     if not os.path.exists(os.path.join(ORACLE_SF_DIR, "documents.parquet")):
         pytest.skip("gate testdata absent")
@@ -43,7 +43,7 @@ def test_no_silent_oracle_drops():
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_query(spark, sf_dir, name):
     if name in _PINNED_SF:
-        from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+        from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR
 
         sf_dir = ORACLE_SF_DIR
     rows = check_query(spark, name, sf_dir)

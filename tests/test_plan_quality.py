@@ -769,8 +769,8 @@ class TestRound10Plans:
         from pyspark.sql import functions as F
 
         from sea_streamer_spark.operators import similarity as S
-        from sea_streamer_spark.plans.llm_ops import gate_ivf_centroids
-        from sea_streamer_spark.plans.llm_ops14 import _sweep_colocated
+        from sea_streamer_spark.plans.fragments import gate_ivf_centroids
+        from sea_streamer_spark.plans.semantic_dedup import _sweep_colocated
         from sea_streamer_spark.sources.tables import load_tables
 
         emb = load_tables(spark, sf_dir, "embeddings").embeddings
@@ -829,7 +829,7 @@ class TestRound11Plans:
         join, no Python — F.transform is JVM higher-order-function
         territory), and the sweep's counting side stays vec_id/cell
         equi-joins."""
-        from sea_streamer_spark.plans.llm_ops15 import planted_embeddings
+        from sea_streamer_spark.plans.semantic_dedup import planted_embeddings
 
         plan = _final_plan(planted_embeddings(spark, sf_dir))
         assert "EvalPython" not in plan, plan
@@ -879,16 +879,16 @@ class TestRound12Plans:
 
         from pyspark.sql import functions as F
 
-        from sea_streamer_spark.plans.llm_ops16 import _stream_transform
+        from sea_streamer_spark.plans.dedup_curation import _stream_transform
         from sea_streamer_spark.sources.tables import load_tables
         from sea_streamer_spark.streaming.curation import (
             incremental_exact_dedup_sink,
         )
-        from sea_streamer_spark.plans.llm_ops14 import _pii_injected_col
+        from sea_streamer_spark.operators.pii import pii_injected_col
 
         docs = load_tables(spark, "/root/testdata/sf0.001", "documents").documents
         staged = _stream_transform(
-            docs.select("doc_id", "source", _pii_injected_col().alias("text"))
+            docs.select("doc_id", "source", pii_injected_col().alias("text"))
         )
         flags_dir = str(tmp_path / "flags")
         os.makedirs(flags_dir)

@@ -140,7 +140,7 @@ def test_registry_order_and_oracles_are_pinned():
     oracles bake values trained on the gate corpus, so the pin applies
     only when both are present.
     """
-    from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+    from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR
 
     root = Path(q.__file__).resolve().parents[2]
     if not any(root.glob("CORRECTNESS_r*.json")):

@@ -1153,7 +1153,7 @@ class TestStreamStreamLeftOuter:
 class TestSessionWindowStreaming:
     """Live session windows: F.session_window (30-min dynamic gap) over a
     watermarked stream must produce the same closed sessions as the batch
-    gap-based sessionize_events formulation (plans/llm_ops2.py)."""
+    gap-based sessionize_events formulation (plans/event_streams.py)."""
 
     def test_session_window_matches_batch_gap_logic(self, spark, tmp_path):
         import pandas as pd

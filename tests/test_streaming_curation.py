@@ -41,16 +41,16 @@ _REP_OFFSET = 504
 
 
 def _dirty_docs(spark):
-    from sea_streamer_spark.plans.llm_ops14 import _pii_injected_col
+    from sea_streamer_spark.operators.pii import pii_injected_col
 
     docs = load_tables(spark, SF_DIR, "documents").documents
-    return docs.select("doc_id", "source", _pii_injected_col().alias("text"))
+    return docs.select("doc_id", "source", pii_injected_col().alias("text"))
 
 
 def _planted_docs(spark):
     """Base dirty corpus + one exact-dup replica per doc (ids 504..1003,
     PII-injected per the REPLICA id, colliding post-redaction)."""
-    from sea_streamer_spark.plans.llm_ops14 import _pii_injected_col
+    from sea_streamer_spark.operators.pii import pii_injected_col
 
     docs = load_tables(spark, SF_DIR, "documents").documents
     reps = docs.select(
@@ -59,12 +59,12 @@ def _planted_docs(spark):
     return (
         docs.select("doc_id", "source", "text")
         .unionByName(reps)
-        .select("doc_id", "source", _pii_injected_col().alias("text"))
+        .select("doc_id", "source", pii_injected_col().alias("text"))
     )
 
 
 def _transform(df):
-    from sea_streamer_spark.plans.llm_ops16 import _stream_transform
+    from sea_streamer_spark.plans.dedup_curation import _stream_transform
 
     return _stream_transform(df)
 
@@ -75,9 +75,9 @@ def _batch_flags(dirty):
     2), computed directly over the same dirty corpus."""
     from pyspark.sql.window import Window
 
-    from sea_streamer_spark.plans.llm_ops14 import _redact_chain_spark
+    from sea_streamer_spark.operators.pii import redact_chain_spark
 
-    r = _redact_chain_spark(F.col("text"))
+    r = redact_chain_spark(F.col("text"))
     return dirty.select(
         "doc_id",
         "source",
@@ -275,7 +275,7 @@ class TestStreamedFrontRunsPerInvocation:
         import hashlib
         import tempfile
 
-        from sea_streamer_spark.plans.llm_ops16 import _streamed_flags
+        from sea_streamer_spark.plans.dedup_curation import _streamed_flags
 
         tmp = tempfile.gettempdir()
         before = set(glob.glob(os.path.join(tmp, "sea_curation_work_*")))

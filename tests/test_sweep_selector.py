@@ -17,8 +17,14 @@ def _sweep_oracle():
 
 
 def test_changed_fragment_module_selects_its_oracle_users():
-    sel = _sweep_oracle().affected_queries({"llm_ops"})
-    # graph_bfs_levels (llm_ops6) embeds llm_ops.DUCK_SHINGLE_SETS; its
-    # function body never names llm_ops, only its module does.
+    sel = _sweep_oracle().affected_queries({"fragments"})
+    # graph_bfs_levels and dedup_minhash_lsh (plans/dedup.py) embed
+    # fragments.DUCK_SHINGLE_SETS; their function bodies never name
+    # fragments, only their module does.
     assert "graph_bfs_levels" in sel
-    assert "dedup_minhash_lsh" in sel  # defined in llm_ops itself
+    assert "dedup_minhash_lsh" in sel
+
+
+def test_changed_family_module_selects_its_queries():
+    sel = _sweep_oracle().affected_queries({"tpch"})
+    assert "q1_pricing_summary" in sel  # defined in plans/tpch.py itself

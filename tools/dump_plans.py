@@ -49,7 +49,7 @@ SNAPSHOT_QUERIES = [
     "quality_winsorize", "events_rolling_7d_actives",
     "asof_join_nearest_click", "privacy_l_diversity",
     "events_transition_matrix",
-    # round-5 llm_ops8 waves (dedup finishers, embedding QA, attribution,
+    # round-5 waves (dedup finishers, embedding QA, attribution,
     # token budgets, containment, SCD2, basket lift)
     "dedup_keep_longest_per_cluster", "dedup_rate_by_source",
     "embedding_outlier_centroid", "events_last_touch_attribution",

@@ -3,7 +3,7 @@
 The registered query (``dedup_semantic_recall_planted``) derives this
 corpus IN-QUERY in both engines — this tool exists so the fixture can be
 inspected, diffed, or reused outside the oracle gate. Single-sourced
-from ``plans.llm_ops15.planted_embeddings`` (FIXTURES.md §4).
+from ``plans.semantic_dedup.planted_embeddings`` (FIXTURES.md §4).
 
 Usage: python tools/gen_planted_fixture.py [sf_dir] [out.parquet]
 """
@@ -16,7 +16,7 @@ import sys
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/planted_embeddings.parquet"
-    from sea_streamer_spark.plans.llm_ops15 import planted_embeddings
+    from sea_streamer_spark.plans.semantic_dedup import planted_embeddings
     from sea_streamer_spark.session import get_spark
 
     spark = get_spark(app_name="gen-planted-fixture", shuffle_partitions=8)

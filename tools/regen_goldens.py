@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR
+    from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR
 
     spark = (
         SparkSession.builder.master("local[8]")

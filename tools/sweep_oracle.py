@@ -38,7 +38,7 @@ from tests.oracle import check_query  # noqa: E402
 # quantizers, BPE, DSIR), whose fixed model applies at any sf — must pass
 # at every sf.
 GATE_ONLY = {"agg_approx_sketches"}
-from sea_streamer_spark.plans.llm_ops import ORACLE_SF_DIR as GATE_SF_DIR  # noqa: E402
+from sea_streamer_spark.plans.fragments import ORACLE_SF_DIR as GATE_SF_DIR  # noqa: E402
 
 
 def changed_modules(ref: str) -> set[str]:
@@ -63,7 +63,7 @@ def affected_queries(mods: set[str]) -> set[str]:
     query function or of its defining module mentions one of their
     basenames. Function-level operator imports (``from ..operators import
     graph as G``) mention 'graph'; module-level oracle fragments
-    (``from .llm_ops import DUCK_SHINGLE_SETS``) mention 'llm_ops'."""
+    (``from .fragments import DUCK_SHINGLE_SETS``) mention 'fragments'."""
     import inspect
     import re
 
