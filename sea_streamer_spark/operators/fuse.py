@@ -175,11 +175,16 @@ def stream_join_stateful(
     monotone per shard across micro-batches: wave N+1 only contains rows
     later than wave N's gate.
 
-    Scale: state is partitioned by ``shard_id`` — each shard's buffer lives
-    on one executor and is bounded by arrival skew between aligned streams
-    (as in the reference, where it is bounded by peer lag), not by stream
-    length. A global (unsharded) total order would serialize; this is the
-    distributed contract the reference actually guarantees.
+    Scale: state is keyed by ``shard_id`` — each shard's buffer is bounded
+    by arrival skew between aligned streams (as in the reference, where it
+    is bounded by peer lag), not by stream length. A global (unsharded)
+    total order would serialize; this is the distributed contract the
+    reference actually guarantees. The keys hash into
+    ``spark.sql.shuffle.partitions`` state stores (8 at 4 cpus, 64 at 32
+    under ``get_spark``), a count fixed in the checkpoint at the query's
+    first start. Stores holding no shard still run every micro-batch: with
+    4 shards most of them are empty, and each empty one costs a Python task
+    and a state-store commit.
 
     ``max_buffer_rows`` guards the unbounded-growth failure mode: an aligned
     peer that never produces would otherwise buffer its shard's entire

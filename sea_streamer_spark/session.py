@@ -5,10 +5,22 @@ inputs); locally it runs on ``local[$SPARK_GRAFT_CPUS]``. Only
 *runtime-settable* SQL confs are applied in :func:`prepare` so that it is safe
 to call on an externally-created session (the correctness driver owns its own
 ``SparkSession``).
+
+:func:`get_spark` also starts the Python workers from the library's daemon
+(``daemon/sea_streamer_spark_daemon.py``). pyspark's worker calls
+``importlib.invalidate_caches()`` before every task, and on CPython 3.11 each
+cached ``zipimporter`` then re-reads its whole archive directory (pyspark.zip,
+the spark-core jar, the shipped package zip): 0.1-0.5 s of fixed cost per
+Python task, the largest one in a ``tail_fuse`` micro-batch. The daemon skips
+the re-read for an archive whose mtime and size are unchanged since it was
+last read, which holds for all three while a session runs. Daemon confs are
+static, so :func:`prepare` on an externally-created session cannot add it.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import tempfile
 
@@ -40,6 +52,23 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 _SHIPPED: set[str] = set()
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+@functools.cache
+def _package_zip() -> str:
+    """Zip the package's sources once per process; the zip is removed at exit."""
+    import zipfile
+
+    fd, path = tempfile.mkstemp(prefix="sea_streamer_spark_", suffix=".zip")
+    atexit.register(os.remove, path)
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+        for root, _dirs, files in os.walk(_PKG_DIR):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(_PKG_DIR)))
+    return path
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -54,19 +83,7 @@ def _ship_package(spark: SparkSession) -> None:
     if app_id in _SHIPPED:
         return
     try:
-        import zipfile
-
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        zip_path = os.path.join(tempfile.gettempdir(), f"sea_streamer_spark_{os.getpid()}.zip")
-        if not os.path.exists(zip_path):
-            with zipfile.ZipFile(zip_path, "w") as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
-                    for fn in files:
-                        if fn.endswith(".py"):
-                            full = os.path.join(root, fn)
-                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                            zf.write(full, rel)
-        spark.sparkContext.addPyFile(zip_path)
+        spark.sparkContext.addPyFile(_package_zip())
     except Exception:
         pass  # already added or restricted deployment — closures still work
     _SHIPPED.add(app_id)
@@ -107,6 +124,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
     )
+    if master.startswith("local"):
+        # The daemon's directory is a driver-side path, so only executors on
+        # this host can import it (see the module docstring).
+        builder = builder.config(
+            "spark.python.daemon.module", "sea_streamer_spark_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", os.path.join(_PKG_DIR, "daemon"))
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return prepare(builder.getOrCreate())

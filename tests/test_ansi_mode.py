@@ -27,10 +27,12 @@ class TestAnsiMode:
         from sea_streamer_spark.plans.queries import QUERIES
 
         fn = QUERIES[name].fn
-        base = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-        spark.conf.set("spark.sql.ansi.enabled", "true")
+        default = spark.conf.get("spark.sql.ansi.enabled")
         try:
+            spark.conf.set("spark.sql.ansi.enabled", "false")
+            base = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+            spark.conf.set("spark.sql.ansi.enabled", "true")
             ansi = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
         finally:
-            spark.conf.set("spark.sql.ansi.enabled", "false")
+            spark.conf.set("spark.sql.ansi.enabled", default)
         assert ansi == base, name
