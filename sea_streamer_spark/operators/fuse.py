@@ -179,12 +179,11 @@ def stream_join_stateful(
     by arrival skew between aligned streams (as in the reference, where it
     is bounded by peer lag), not by stream length. A global (unsharded)
     total order would serialize; this is the distributed contract the
-    reference actually guarantees. The keys hash into
-    ``spark.sql.shuffle.partitions`` state stores (8 at 4 cpus, 64 at 32
-    under ``get_spark``), a count fixed in the checkpoint at the query's
-    first start. Stores holding no shard still run every micro-batch: with
-    4 shards most of them are empty, and each empty one costs a Python task
-    and a state-store commit.
+    reference actually guarantees. ``get_spark`` local sessions keep all
+    shards in one state store, like the reference's one buffer per consumer
+    (see ``session``); elsewhere they hash into ``spark.sql.shuffle.partitions``
+    stores, most of them empty with few shards. The count is fixed in the
+    checkpoint at the query's first start.
 
     ``max_buffer_rows`` guards the unbounded-growth failure mode: an aligned
     peer that never produces would otherwise buffer its shard's entire

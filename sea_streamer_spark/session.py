@@ -15,6 +15,18 @@ Python task, the largest one in a ``tail_fuse`` micro-batch. The daemon skips
 the re-read for an archive whose mtime and size are unchanged since it was
 last read, which holds for all three while a session runs. Daemon confs are
 static, so :func:`prepare` on an externally-created session cannot add it.
+
+Local sessions from :func:`get_spark` also give each stateful streaming
+query one state store (``spark.sql.streaming.internal.stateStore.partitions``
+= 1) instead of one per shuffle partition. Every store costs a Python task and
+a state commit in every micro-batch, even when it holds no key, and that fixed
+cost dominates an operator with few state keys, such as the fuse's shards
+(whose hash puts shards 0 and 1 in one store at 4, 8 and 64 partitions
+anyway). An operator with many state keys loses its parallelism instead: all
+its groups run in one task, so a query that needs it should be started with
+the conf unset. Spark records the count in a query's checkpoint at its first
+start, so a restarted query keeps its count. The query's other shuffles,
+and batch queries, keep ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -55,13 +67,21 @@ _SHIPPED: set[str] = set()
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
+def _remove_if_present(path: str) -> None:
+    """Remove ``path``; it may already be gone with its temp dir at exit."""
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
 @functools.cache
 def _package_zip() -> str:
     """Zip the package's sources once per process; the zip is removed at exit."""
     import zipfile
 
     fd, path = tempfile.mkstemp(prefix="sea_streamer_spark_", suffix=".zip")
-    atexit.register(os.remove, path)
+    atexit.register(_remove_if_present, path)
     with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):
             for fn in files:
@@ -127,9 +147,12 @@ def get_spark(
     if master.startswith("local"):
         # The daemon's directory is a driver-side path, so only executors on
         # this host can import it (see the module docstring).
-        builder = builder.config(
-            "spark.python.daemon.module", "sea_streamer_spark_daemon"
-        ).config("spark.executorEnv.PYTHONPATH", os.path.join(_PKG_DIR, "daemon"))
+        # One state store per stateful streaming query (module docstring).
+        builder = (
+            builder.config("spark.python.daemon.module", "sea_streamer_spark_daemon")
+            .config("spark.executorEnv.PYTHONPATH", os.path.join(_PKG_DIR, "daemon"))
+            .config("spark.sql.streaming.internal.stateStore.partitions", "1")
+        )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return prepare(builder.getOrCreate())

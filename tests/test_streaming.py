@@ -302,58 +302,79 @@ class TestRelayBenchmark:
         assert rows[0] == rows[1] == 256
 
 
+STATE_STORES = "spark.sql.streaming.internal.stateStore.partitions"
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _envelope_stream(spark, src, files):
+    """Append each file's envelope rows to ``src`` as one parquet file and
+    stream ``src`` back one file per micro-batch."""
+    import pandas as pd
+
+    from sea_streamer_spark.model import MESSAGE_SCHEMA
+
+    for rows in files:
+        pdf = pd.DataFrame(rows, columns=["stream_key", "shard_id", "sequence", "timestamp", "payload"])
+        spark.createDataFrame(pdf, MESSAGE_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    return spark.readStream.schema(MESSAGE_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+
+
 class TestStatefulStreamJoin:
     """fuse/src/lib.rs:66-100 align-gating, stateful path across micro-batches."""
 
+    @staticmethod
+    def _seq_rows(seqs):
+        """Keys a/b/c and shards 0/1 round-robin, ts = sequence seconds."""
+        import pandas as pd
+
+        t0 = pd.Timestamp("2024-01-01")
+        return [("abc"[s % 3], s % 2, s, t0 + pd.Timedelta(seconds=s), b"p") for s in seqs]
+
+    @staticmethod
+    def _assert_aligned_output(rows, got):
+        """Per shard: exactly the rows at or below the final gate
+        min(max ts of a, max ts of b), once each, in ts order, with a
+        contiguous emit_index."""
+        import pandas as pd
+
+        pdf = pd.DataFrame(rows, columns=["stream_key", "shard_id", "sequence", "timestamp", "payload"])
+        for shard in (0, 1):
+            sh = pdf[pdf.shard_id == shard]
+            gate = min(sh[sh.stream_key == k].timestamp.max() for k in ("a", "b"))
+            g = got[got.shard_id == shard].sort_values("emit_index")
+            assert sorted(g.sequence) == sorted(sh[sh.timestamp <= gate].sequence), f"shard {shard}"
+            # emission order is the merge order: ts monotone along emit_index
+            assert g.timestamp.is_monotonic_increasing
+            assert list(g.emit_index) == list(range(1, len(g) + 1))
+
     def test_align_gate_across_microbatches(self, spark, tmp_path):
         import pandas as pd
-        from pyspark.sql import functions as F
 
         from sea_streamer_spark.operators.fuse import stream_join_stateful
 
-        # 3 keys x 2 shards, ts = sequence seconds; delivered as 3 files
-        # (one micro-batch each via maxFilesPerTrigger=1).
-        rows = []
-        for seq in range(30):
-            key = "abc"[seq % 3]
-            rows.append((key, seq % 2, seq, pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=seq), b"p"))
-        pdf = pd.DataFrame(rows, columns=["stream_key", "shard_id", "sequence", "timestamp", "payload"])
-        src = tmp_path / "src"
-        for i in range(3):  # batch i carries seqs [10i, 10i+10) — arrival in ts order
-            chunk = spark.createDataFrame(pdf.iloc[10 * i: 10 * i + 10])
-            chunk.coalesce(1).write.mode("append").parquet(str(src))
+        # 3 keys x 2 shards delivered as 3 files (one micro-batch each),
+        # batch i carrying seqs [10i, 10i+10): arrival in ts order.
+        rows = self._seq_rows(range(30))
+        stream = _envelope_stream(spark, str(tmp_path / "src"), [rows[:10], rows[10:20], rows[20:]])
+        batches, shuffles = [], set()
 
-        from sea_streamer_spark.model import MESSAGE_SCHEMA
+        def sink(batch, batch_id):
+            batches.append(batch.toPandas())
+            shuffles.add(batch.groupBy("stream_key").count().rdd.getNumPartitions())
 
-        stream = (
-            spark.readStream.schema(MESSAGE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        out = stream_join_stateful(stream, align=["a", "b"])
         q = (
-            out.writeStream.format("memory")
-            .queryName("fuse_stateful")
+            stream_join_stateful(stream, align=["a", "b"])
+            .writeStream.foreachBatch(sink)
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        got = spark.sql("SELECT * FROM fuse_stateful").toPandas()
-
-        # expected: per shard, final gate = min(max ts of a, max ts of b)
-        for shard in (0, 1):
-            sh = pdf[pdf.shard_id == shard]
-            gate = min(
-                sh[sh.stream_key == "a"].timestamp.max(),
-                sh[sh.stream_key == "b"].timestamp.max(),
-            )
-            expect = sh[sh.timestamp <= gate]
-            g = got[got.shard_id == shard].sort_values("emit_index")
-            assert set(g.sequence) == set(expect.sequence), f"shard {shard}"
-            # emission order is the merge order: ts monotone along emit_index
-            assert g.timestamp.is_monotonic_increasing
-            assert list(g.emit_index) == list(range(1, len(g) + 1))
+        self._assert_aligned_output(rows, pd.concat(batches, ignore_index=True))
+        # A local get_spark session keeps the state in one store; the
+        # stream's other shuffles keep spark.sql.shuffle.partitions.
+        assert {p["stateOperators"][0]["numStateStoreInstances"] for p in q.recentProgress} == {1}
+        assert shuffles == {int(spark.conf.get(SHUFFLE))} != {1}
 
     def test_unaligned_emits_everything(self, spark, tmp_path):
         import pandas as pd
@@ -410,24 +431,43 @@ class TestStatefulStreamJoin:
             q.awaitTermination()
         assert "never" in str(ei.value) and "max_buffer_rows" in str(ei.value)
 
+    def test_checkpoint_resumes_with_its_recorded_store_count(self, spark, tmp_path):
+        """A fuse checkpoint started without the one-store conf keeps
+        spark.sql.shuffle.partitions stores (6 here) when it resumes in a
+        one-store session, with no duplicate or skipped emission."""
+        from sea_streamer_spark.operators.fuse import stream_join_stateful
+
+        src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+        rows = self._seq_rows(range(30))
+
+        def run(stream):
+            q = (
+                stream_join_stateful(stream, align=["a", "b"])
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return {p["stateOperators"][0]["numStateStoreInstances"] for p in q.recentProgress}
+
+        stores, shuffle = spark.conf.get(STATE_STORES), spark.conf.get(SHUFFLE)
+        assert stores == "1"
+        spark.conf.unset(STATE_STORES)
+        spark.conf.set(SHUFFLE, "6")
+        try:
+            assert run(_envelope_stream(spark, src, [rows[:10], rows[10:20]])) == {6}
+        finally:
+            spark.conf.set(STATE_STORES, stores)
+            spark.conf.set(SHUFFLE, shuffle)
+        assert run(_envelope_stream(spark, src, [rows[20:]])) == {6}
+        self._assert_aligned_output(rows, spark.read.parquet(out).toPandas())
+
 
 class TestWatermarkStreaming:
     """Late-data semantics: watermarked windowed aggregation (append mode only
     emits closed windows) and dropDuplicatesWithinWatermark."""
-
-    def _stream(self, spark, src, files):
-        import pandas as pd
-
-        from sea_streamer_spark.model import MESSAGE_SCHEMA
-
-        for chunk in files:
-            pdf = pd.DataFrame(
-                chunk, columns=["stream_key", "shard_id", "sequence", "timestamp", "payload"]
-            )
-            spark.createDataFrame(pdf, MESSAGE_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-        return (
-            spark.readStream.schema(MESSAGE_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-        )
 
     def test_append_mode_emits_only_closed_windows(self, spark, tmp_path):
         import pandas as pd
@@ -440,7 +480,7 @@ class TestWatermarkStreaming:
             [mk(5, 0), mk(20, 1), mk(70, 2)],
             [mk(600, 3), mk(610, 4)],
         ]
-        stream = self._stream(spark, str(tmp_path / "src"), files)
+        stream = _envelope_stream(spark, str(tmp_path / "src"), files)
         agg = (
             stream.withWatermark("timestamp", "30 seconds")
             .groupBy(F.window("timestamp", "1 minute").alias("w"))
@@ -469,7 +509,7 @@ class TestWatermarkStreaming:
             [mk(0, 0), mk(1, 1)],
             [mk(2, 1), mk(3, 2)],
         ]
-        stream = self._stream(spark, str(tmp_path / "src2"), files)
+        stream = _envelope_stream(spark, str(tmp_path / "src2"), files)
         dd = stream.withWatermark("timestamp", "1 hour").dropDuplicatesWithinWatermark(
             ["stream_key", "sequence"]
         )

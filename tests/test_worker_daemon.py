@@ -76,3 +76,18 @@ def test_get_spark_process_leaves_no_package_zip(tmp_path):
     env = {**os.environ, "TMPDIR": str(tmp_path)}
     subprocess.run([sys.executable, "-c", code], cwd=REPO, env=env, check=True, timeout=300)
     assert sorted(p.name for p in tmp_path.glob("*.zip")) == []
+
+
+def test_package_zip_already_gone_at_exit_is_quiet(tmp_path):
+    """The temp dir may be cleaned before the process exits; the zip's
+    removal at exit must then pass silently (no JVM is started here)."""
+    code = (
+        "import os; from sea_streamer_spark import session; "
+        "os.remove(session._package_zip())"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    done = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env, check=True, timeout=120,
+        capture_output=True, text=True,
+    )
+    assert done.stderr == ""
