@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import iterate
+
 __all__ = [
     "word_counts",
     "spaced",
@@ -69,29 +71,17 @@ def _apply_merge(col: Column, left: str, right: str) -> Column:
     )
 
 
-def train_bpe(
-    df: DataFrame, n_merges: int, text_col: str = "text"
-) -> list[tuple[str, str, int]]:
-    """Distributed BPE training: returns up to ``n_merges`` merges as
-    ``(left, right, weighted_pair_count)`` in rank order. Stops early when
-    no pair occurs twice (nothing left to compress)."""
-    # One round = one localCheckpoint(eager=True): the vocab-bounded word
-    # table materializes IMMEDIATELY (so the corpus word-count shuffle runs
-    # exactly once) and the logical lineage is severed per round. Chained
-    # .cache() is the wrong tool here — each round's captured plan would
-    # nest the previous round's InMemoryRelation, and 24 nested cached
-    # plans blow up plan-string rendering exponentially (observed
-    # OutOfMemoryError in QueryExecution.explainString).
-    wc = (
-        word_counts(df, text_col)
-        .select(spaced(F.col("word")).alias("s"), "n")
-        .localCheckpoint(eager=True)
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        syms = wc.select(F.split(F.trim(F.col("s")), " ").alias("a"), "n")
-        k = F.size(F.col("a")) - 1
-        pairs = syms.select(
+def _symbols(wc: DataFrame) -> DataFrame:
+    """(a = symbol array, n) per word of the spaced word table."""
+    return wc.select(F.split(F.trim(F.col("s")), " ").alias("a"), "n")
+
+
+def _pair_counts(syms: DataFrame) -> DataFrame:
+    """(l, r, pc): adjacent symbol pairs occurring at least twice, weighted
+    by word count (a pair seen once is not worth a merge)."""
+    k = F.size(F.col("a")) - 1
+    return (
+        syms.select(
             F.explode(
                 F.zip_with(
                     F.slice(F.col("a"), F.lit(1), k),
@@ -101,21 +91,58 @@ def train_bpe(
             ).alias("p"),
             "n",
         )
-        best = (
-            pairs.groupBy("p")
-            .agg(F.sum("n").cast("long").alias("c"))
-            .orderBy(F.col("c").desc(), F.col("p.l"), F.col("p.r"))
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["c"] < 2:
-            break
-        left, right, c = best[0]["p"]["l"], best[0]["p"]["r"], best[0]["c"]
-        merges.append((left, right, int(c)))
-        wc = wc.select(
-            _apply_merge(F.col("s"), left, right).alias("s"), "n"
-        ).localCheckpoint(eager=True)
+        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+        .agg(F.sum("n").cast("long").alias("pc"))
+        .filter(F.col("pc") >= 2)
+    )
+
+
+def _best(scored: DataFrame, score: str):
+    """The top ``(l, r, score)`` by score desc then (l, r), or None."""
+    top = scored.orderBy(F.col(score).desc(), "l", "r").limit(1).collect()
+    return (top[0]["l"], top[0]["r"], int(top[0][score])) if top else None
+
+
+def _train(
+    df: DataFrame, n_merges: int, text_col: str, best
+) -> list[tuple[str, str, int]]:
+    """The merge loop of :func:`train_bpe` and :func:`train_wordpiece`:
+    ``best(wc)`` picks the next ``(left, right, score)`` merge, or None
+    when nothing is left to merge (the loop then stops)."""
+    # One eager localCheckpoint per round: the word table materializes
+    # immediately (the corpus word-count shuffle runs exactly once) and the
+    # lineage is severed. Chained .cache() would nest every round's
+    # InMemoryRelation; 24 of them blew up plan-string rendering (OOM).
+    def step(state):
+        wc, merges = state
+        merge = best(wc)
+        if merge is None:
+            return state
+        left, right, _ = merge
+        wc = wc.select(_apply_merge(F.col("s"), left, right).alias("s"), "n")
+        return wc.localCheckpoint(eager=True), merges + [merge]
+
+    wc = (
+        word_counts(df, text_col)
+        .select(spaced(F.col("word")).alias("s"), "n")
+        .localCheckpoint(eager=True)
+    )
+    # a round that returns its state unchanged found nothing to merge
+    _, merges = iterate(
+        (wc, []), step, n_merges, lambda prev, cur: cur is prev, strict=False
+    )
     return merges
+
+
+def train_bpe(
+    df: DataFrame, n_merges: int, text_col: str = "text"
+) -> list[tuple[str, str, int]]:
+    """Distributed BPE training: returns up to ``n_merges`` merges as
+    ``(left, right, weighted_pair_count)`` in rank order. Stops early when
+    no pair occurs twice (nothing left to compress)."""
+    return _train(
+        df, n_merges, text_col, lambda wc: _best(_pair_counts(_symbols(wc)), "pc")
+    )
 
 
 def py_train_bpe(wc: dict[str, int], n_merges: int) -> list[tuple[str, str, int]]:
@@ -155,7 +182,7 @@ def bpe_token_count(
     counts as empty (0 tokens) — the oracle's COALESCE semantics."""
 
     def apply_word(w: Column) -> Column:
-        s = F.concat(F.lit(" "), F.array_join(F.split(w, ""), " "), F.lit(" "))
+        s = spaced(w)
         for left, right, _ in merges:
             s = _apply_merge(s, left, right)
         return F.size(F.split(F.trim(s), " "))
@@ -199,60 +226,22 @@ def train_wordpiece(
 
     Returns ``(left, right, score_scaled)`` per merge in rank order; stops
     early when no pair occurs twice."""
-    wc = (
-        word_counts(df, text_col)
-        .select(spaced(F.col("word")).alias("s"), "n")
-        .localCheckpoint(eager=True)
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        syms = wc.select(F.split(F.trim(F.col("s")), " ").alias("a"), "n")
+
+    def best(wc: DataFrame):
+        syms = _symbols(wc)
         sym_counts = (
             syms.select(F.explode(F.col("a")).alias("sym"), "n")
             .groupBy("sym")
             .agg(F.sum("n").cast("long").alias("sc"))
         )
-        k = F.size(F.col("a")) - 1
-        pairs = (
-            syms.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("a"), F.lit(1), k),
-                        F.slice(F.col("a"), F.lit(2), k),
-                        lambda x, y: F.struct(x.alias("l"), y.alias("r")),
-                    )
-                ).alias("p"),
-                "n",
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("n").cast("long").alias("pc"))
-        )
         lc = sym_counts.select(F.col("sym").alias("l"), F.col("sc").alias("lsc"))
         rc = sym_counts.select(F.col("sym").alias("r"), F.col("sc").alias("rsc"))
-        best = (
-            pairs.filter(F.col("pc") >= 2)
-            .join(lc, "l")
-            .join(rc, "r")
-            .select(
-                "l",
-                "r",
-                "pc",
-                F.expr(f"pc * {WP_SCALE} div (lsc * rsc)")
-                .cast("long")
-                .alias("score"),
-            )
-            .orderBy(F.col("score").desc(), F.col("l"), F.col("r"))
-            .limit(1)
-            .collect()
+        scored = _pair_counts(syms).join(lc, "l").join(rc, "r").select(
+            "l", "r", F.expr(f"pc * {WP_SCALE} div (lsc * rsc)").cast("long").alias("score")
         )
-        if not best:
-            break
-        left, right, score = best[0]["l"], best[0]["r"], int(best[0]["score"])
-        merges.append((left, right, score))
-        wc = wc.select(
-            _apply_merge(F.col("s"), left, right).alias("s"), "n"
-        ).localCheckpoint(eager=True)
-    return merges
+        return _best(scored, "score")
+
+    return _train(df, n_merges, text_col, best)
 
 
 def py_train_wordpiece(

@@ -15,12 +15,50 @@ plan stays bounded; the convergence probe is a count+hash aggregate, never a
 collect. Each round shuffles O(|edges|) pairs — the 100 TB cost model is
 rounds x one edge shuffle, with AQE coalescing as stars collapse the edge
 count.
+
+Every loop here (both component algorithms, PageRank, BFS, harmonic
+centrality) is a step function run by ``operators/rounds.iterate``, which
+owns the round cap, the convergence probe, the error at the cap and the
+release of superseded checkpoints.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import NotConverged, iterate, unchanged
+
+
+def symmetrize(
+    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b", carry=()
+) -> DataFrame:
+    """Both orientations of every pair as (u, v, *carry) in ONE pass over
+    ``pairs`` (explode of two structs), not a self-union that evaluates the
+    typically expensive LSH-candidate subtree twice (~25% of the query at
+    bench scale, r6 measurement)."""
+    extra = [F.col(c) for c in carry]
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("u"), F.col(dst).alias("v"), *extra),
+                F.struct(F.col(dst).alias("u"), F.col(src).alias("v"), *extra),
+            )
+        ).alias("p")
+    ).select("p.u", "p.v", *[f"p.{c}" for c in carry])
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    return e.select("u", "v").union(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+
+
+def undirected(edges: DataFrame, src: str = "doc_a", dst: str = "doc_b") -> DataFrame:
+    """Distinct (u, v) in both orientations (BFS, harmonic centrality)."""
+    return _both_ways(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    ).distinct()
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -37,9 +75,7 @@ def _canonical(e: DataFrame) -> DataFrame:
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
-    d = e.select("u", "v").union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    d = _both_ways(e)
     mins = d.groupBy("u").agg(F.min("v").alias("mv"))
     mins = mins.select("u", F.least("u", "mv").alias("m"))
     out = (
@@ -63,31 +99,23 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _canonical(rewired.union(self_edge))
 
 
+def _signature(e: DataFrame):
+    row = e.agg(
+        F.count(F.lit(1)).alias("n"),
+        # bit_xor, not sum: order-independent AND overflow-free under
+        # ANSI mode (the edge set is distinct, and n is compared too).
+        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+    ).first()
+    return (row.n, row.h)
+
+
 def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
     """Large-star/small-star to the star-forest fixpoint; ``e`` canonical."""
-    e = e.localCheckpoint(eager=True)
-
-    def signature(frame: DataFrame):
-        row = frame.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor, not sum: order-independent AND overflow-free under
-            # ANSI mode (the edge set is distinct, and n is compared too).
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return (row.n, row.h)
-
-    sig = signature(e)
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        sig2 = signature(e2)
-        e = e2
-        if sig2 == sig:
-            break
-        sig = sig2
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} star rounds"
-        )
+    e = iterate(
+        e.localCheckpoint(eager=True),
+        lambda e: _small_star(_large_star(e)).localCheckpoint(eager=True),
+        max_iter, unchanged(_signature), name="connected_components (star rounds)",
+    )
     # At the fixpoint the edge set is a star forest: every non-root node has
     # exactly the edge (node, component-min); roots never appear on the u
     # side and label themselves.
@@ -99,29 +127,22 @@ def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
 def _hashmin_components(e: DataFrame, max_iter: int) -> DataFrame | None:
     """Hash-min label propagation; returns None if not converged within
     ``max_iter`` rounds (caller falls back) — never partial labels."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=True)
-    labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
-        "cluster", F.col("node")
-    )
-    for _ in range(max_iter):
+    sym = _both_ways(e).localCheckpoint(eager=True)
+
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("node", "cluster")
         nbr = sym.join(labels.withColumnRenamed("node", "v"), "v").select(
             F.col("u").alias("node"),
             "cluster",
             F.lit(False).alias("own"),
         )
-        # r12: the convergence flag rides INSIDE the checkpointed frame —
-        # the old→new comparison runs in the materialization job, and the
-        # per-round fixpoint check becomes a narrow scan of checkpointed
-        # blocks instead of its own join+shuffle job (guide §5: halve the
-        # per-round driver round-trip cost). The old label is recovered
-        # IN the same keyed aggregate (each node contributes exactly one
-        # ``own`` row, so ``min(cluster) FILTER own`` IS the previous
-        # label — no post-aggregate join with the labels frame; guide
-        # §2.3/§2.4: one exchange per round, not two). new ≤ old always
-        # (the min includes the own row), so ``chg = new < old`` detects
-        # exactly the old check's condition.
-        upd = (
+        # r12: the change flag rides INSIDE the checkpointed frame, so the
+        # probe is a narrow scan of checkpointed blocks, not its own
+        # join+shuffle job. The old label comes from the same keyed
+        # aggregate (each node has one ``own`` row, so ``min(cluster)
+        # FILTER own`` IS the previous label), and new ≤ old always, so
+        # ``chg = new < old``: one exchange per round, not two.
+        return (
             labels.withColumn("own", F.lit(True))
             .union(nbr)
             .groupBy("node")
@@ -136,11 +157,17 @@ def _hashmin_components(e: DataFrame, max_iter: int) -> DataFrame | None:
             )
             .localCheckpoint(eager=True)
         )
-        changed = upd.filter("chg").limit(1).count()
-        labels = upd.select("node", "cluster")
-        if changed == 0:
-            return labels
-    return None
+
+    labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
+        "cluster", F.col("node")
+    )
+    try:
+        upd = iterate(
+            labels, step, max_iter, lambda _, u: u.filter("chg").limit(1).count() == 0
+        )
+    except NotConverged:
+        return None
+    return upd.select("node", "cluster")
 
 
 def connected_components(
@@ -148,7 +175,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 50,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Components of the undirected graph given by ``edges``.
 
@@ -156,31 +182,18 @@ def connected_components(
     Only nodes appearing in at least one edge are returned — callers join
     back to the full entity table and coalesce singletons to their own id.
 
-    ``algorithm``:
-
-    - ``"auto"`` (default): hash-min label propagation for up to 8 rounds —
-      one cheap shuffle per round, and near-dup graphs are clique-ish with
-      diameter 1-3 so it converges almost immediately — then, only if the
-      graph turns out to be high-diameter, falls back to the star rounds.
-      Adversarial inputs pay both phases; typical inputs pay the cheap one.
-    - ``"star"``: large-star/small-star only — O(log n) rounds at any
-      diameter, heavier per round (two groupBy+join passes).
-    - ``"hashmin"``: label propagation only; raises if ``max_iter`` rounds
-      do not reach the fixpoint (never returns partial labels).
+    Hash-min label propagation runs for up to 8 rounds — one cheap shuffle
+    per round, and near-dup graphs are clique-ish with diameter 1-3 so it
+    converges almost immediately. Only if the graph turns out to be
+    high-diameter does it fall back to the large-star/small-star rounds:
+    O(log n) rounds at any diameter, heavier per round (two groupBy+join
+    passes), and an error if ``max_iter`` of them do not reach the
+    fixpoint (never partial labels). Adversarial inputs pay both phases;
+    typical inputs pay the cheap one.
     """
     e = _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    if algorithm not in ("auto", "star", "hashmin"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if algorithm in ("auto", "hashmin"):
-        rounds = 8 if algorithm == "auto" else max_iter
-        labels = _hashmin_components(e, rounds)
-        if labels is not None:
-            return labels
-        if algorithm == "hashmin":
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} hash-min rounds"
-            )
-    return _star_components(e, max_iter)
+    labels = _hashmin_components(e, 8)
+    return labels if labels is not None else _star_components(e, max_iter)
 
 
 def dedup_clusters(
@@ -201,6 +214,48 @@ def dedup_clusters(
         F.col(id_col),
         F.coalesce(F.col("cluster"), F.col(id_col)).alias("cluster_id"),
     )
+
+
+def pagerank_active(
+    base: DataFrame, pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b"
+):
+    """PageRank's graph over the corpus ``base`` (one ``node`` column):
+    ``(ed, deg, act, seed)`` — the symmetrized edges hash-partitioned by
+    ``u`` ONCE and cached with the source degree (the caller unpersists
+    it), the degrees, the active nodes (``base`` ∩ edge endpoints; an
+    endpoint outside ``base`` neither receives a score nor is output) and
+    the round-0 scores."""
+    # e needs no cache: deg and the join share its shuffle output
+    e = symmetrize(pairs, src, dst).repartition("u")
+    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    ed = e.join(deg, "u").select("u", "v", "deg").cache()
+    # graph-sized deg → broadcast semi, map-only over the one corpus scan;
+    # eager checkpoint: re-read every round
+    act = base.join(
+        deg.withColumnRenamed("u", "node"), "node", "left_semi"
+    ).localCheckpoint(eager=True)
+    return ed, deg, act, act.select("node", F.lit(1_000_000).cast("long").alias("s"))
+
+
+def pagerank_round(ed: DataFrame, act: DataFrame, s: DataFrame) -> DataFrame:
+    """One push round over the active set, ``s' = 150000 + Σ (s*17) div
+    (20*deg)``, lazily checkpointed: materialized inside the caller's
+    action, not in a driver job of its own."""
+    contrib = (
+        ed.join(s.withColumnRenamed("node", "u"), "u")
+        .select(
+            F.col("v").alias("node"),
+            F.expr("(s * 17) div (20 * deg)").alias("c"),
+        )
+        .groupBy("node")
+        .agg(F.sum("c").cast("long").alias("inc"))
+    )
+    # left join: an active node with no contrib row stays at the floor;
+    # contrib rows for targets outside `base` drop here
+    return act.join(contrib, "node", "left").select(
+        "node",
+        (F.lit(150_000) + F.coalesce(F.col("inc"), F.lit(0))).cast("long").alias("s"),
+    ).localCheckpoint(eager=False)
 
 
 def pagerank_fixed(
@@ -227,69 +282,17 @@ def pagerank_fixed(
     "rank within your dup family".
 
     Plan, 100 TB-first — iterate the GRAPH, not the corpus. A node with no
-    incident pair receives nothing and pushes nothing: after one round it
-    sits at the (1-d) floor forever, so re-keying a corpus-sized score
-    relation every round (billions of rows at the target scale) buys
-    nothing. The rounds therefore run over the ACTIVE node set (nodes ∩
-    edge endpoints — the dup-graph, typically orders of magnitude smaller
-    than the corpus): the symmetrized edge list is hash-partitioned by
-    ``u`` ONCE and cached, each round re-keys only the active score
-    relation, then one ``groupBy(v)`` sum. Cost model = one corpus scan up
-    front (broadcast-semi to carve the active set) + iters × graph-sized
-    (score shuffle + contribution shuffle) + one map-only broadcast
-    anti-join to emit the isolated mass at the closed-form floor. Edges
-    never re-shuffle; corpus rows are never touched inside the loop.
-    ``localCheckpoint`` cuts the iterative lineage (the
-    connected_components contract).
+    incident pair sits at the (1-d) floor after one round, so the rounds
+    (:func:`pagerank_round`) run over the ACTIVE node set of
+    :func:`pagerank_active`: cost = one corpus scan up front + iters ×
+    graph-sized (score shuffle + contribution shuffle) + one map-only
+    broadcast anti-join emitting the isolated nodes at the closed-form
+    floor. Edges never re-shuffle; corpus rows are never touched inside
+    the loop.
     """
-    # Symmetrize with ONE pass over `pairs` (explode of the two oriented
-    # structs), not a self-union: `pairs` is typically an expensive
-    # LSH-candidate subtree, and union evaluates it twice — at bench scale
-    # that alone was ~25% of the query (r6 measurement; at 100 TB it is a
-    # second full candidate-generation pass).
-    e = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
-    # e itself needs no cache: the repartition shuffle's map output is
-    # shared by both consumers (deg and the join) via shuffle reuse
-    e = e.repartition("u")
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    ed = e.join(deg, "u").select("u", "v", "deg").cache()
     base = nodes.select(F.col(id_col).alias("node"))
-    # active = nodes that touch an edge (semi keeps edge-endpoints NOT in
-    # `nodes` out of the iteration — they must neither receive scores nor
-    # appear in the output, matching the corpus-keyed formulation); deg is
-    # graph-sized → broadcast semi, map-only over the one corpus scan.
-    # Eager checkpoint: graph-sized, re-read every round.
-    act = base.join(
-        deg.withColumnRenamed("u", "node"), "node", "left_semi"
-    ).localCheckpoint(eager=True)
-    s = act.select("node", F.lit(1_000_000).cast("long").alias("s"))
-    for rnd in range(iters):
-        contrib = (
-            ed.join(s.withColumnRenamed("node", "u"), "u")
-            .select(
-                F.col("v").alias("node"),
-                F.expr("(s * 17) div (20 * deg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").cast("long").alias("inc"))
-        )
-        # left join (not contrib alone): an active node whose incoming
-        # sources all fall outside `nodes` gets no contrib row but must
-        # stay at the floor; junk contrib rows for out-of-corpus targets
-        # drop here — both exactly as the corpus-keyed formulation behaved
-        s = act.join(contrib, "node", "left").select(
-            "node",
-            (F.lit(150_000) + F.coalesce(F.col("inc"), F.lit(0)))
-            .cast("long")
-            .alias("s"),
-        ).localCheckpoint(eager=False)
+    ed, deg, act, s = pagerank_active(base, pairs, src, dst)
+    s = iterate(s, lambda s: pagerank_round(ed, act, s), iters)
     # deg recomputes off e's reusable shuffle output — cheaper than a
     # distinct over the cached edge×deg relation (an extra full shuffle).
     # Graph-sized eager materialization so the edge cache can be dropped
@@ -371,17 +374,15 @@ def bfs_levels(
     connected_components convention). Rounds = graph eccentricity from
     the roots; raises on non-convergence rather than returning partial
     levels. Returns (node, level)."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().localCheckpoint(eager=True)
-    visited = (
-        roots.select(F.col(node).alias("n"), F.lit(0).alias("level"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for _ in range(max_iter):
+    und = undirected(edges, src, dst).localCheckpoint(eager=True)
+
+    def step(state):
+        # ``visited`` arrives as the lazy union of the last round's visited
+        # set and frontier; it is checkpointed here, so a round whose
+        # frontier comes back empty pays no extra checkpoint for it.
+        visited, frontier = state
+        visited = visited.localCheckpoint(eager=True)
+        frontier = visited if frontier is None else frontier
         nxt = (
             frontier.join(und, frontier["n"] == und["u"])
             .select(F.col("v").alias("n"), (F.col("level") + 1).alias("level"))
@@ -392,11 +393,13 @@ def bfs_levels(
             .agg(F.min("level").alias("level"))
             .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            return visited.select(F.col("n").alias(node), "level")
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    raise RuntimeError(f"bfs_levels did not converge in {max_iter} rounds")
+        return visited.unionByName(nxt), nxt
+
+    roots = roots.select(F.col(node).alias("n"), F.lit(0).alias("level")).distinct()
+    visited, _ = iterate(
+        (roots, None), step, max_iter, lambda _, s: s[1].isEmpty(), name="bfs_levels"
+    )
+    return visited.select(F.col("n").alias(node), "level")
 
 
 def harmonic_centrality(
@@ -420,31 +423,27 @@ def harmonic_centrality(
     near-dup components are duplication families, never the corpus).
     Returns (node, n_reachable, harmonic_micro) for nodes with ≥1 edge.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected(edges, src, dst).localCheckpoint(eager=True)
     dist = und.select(
         F.col("u").alias("s"), F.col("v").alias("n"), F.lit(1).alias("d")
     ).localCheckpoint(eager=True)
-    for _ in range(max_dist - 1):
+
+    def step(dist: DataFrame) -> DataFrame:
         grown = (
             dist.join(und, dist["n"] == und["u"])
             .filter(F.col("v") != F.col("s"))
             .select("s", F.col("v").alias("n"), (F.col("d") + 1).alias("d"))
         )
-        nxt = (
+        return (
             dist.unionByName(grown)
             .groupBy("s", "n")
             .agg(F.min("d").alias("d"))
             .localCheckpoint(eager=True)
         )
-        if nxt.count() == dist.count():  # no new (s, n) pairs reached
-            dist = nxt
-            break
-        dist = nxt
+
+    # stops once a round reaches no new (s, n) pair; max_dist is the
+    # definition's hop cap, so reaching it is not an error
+    dist = iterate(dist, step, max_dist - 1, unchanged(DataFrame.count), strict=False)
     return (
         dist.groupBy(F.col("n").alias("node"))
         .agg(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators.exact import idiv_col
 from ..operators.linkpred import aa_graph
+from ..operators.rounds import iterate
 from ..sources.tables import load_tables
 from .fragments import AA_GRAPH_CTES
 from .registry import query
@@ -593,33 +594,34 @@ def graph_hits_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localCheckpoint rationale, operators/graph.py)
         .localCheckpoint(eager=True)
     )
-    h = edges.select("u").distinct().select(
-        "u", F.lit(1_000_000).cast("long").alias("h")
-    )
-    a = None
-    for _ in range(_HITS_ITERS):
+
+    def normalized(raw: DataFrame, key: str, col: str) -> DataFrame:
+        total = raw.agg(F.sum(col).cast("long").alias(f"t{col}"))
+        return raw.crossJoin(F.broadcast(total)).select(
+            key, idiv_col(F.col(col), F.col(f"t{col}"), scale=1_000_000).alias(col)
+        )
+
+    def step(state):
+        h, _ = state
         ar = (
             edges.join(h, "u")
             .groupBy("v")
             .agg(F.sum(F.col("w") * F.col("h")).cast("long").alias("a"))
             .localCheckpoint(eager=True)
         )
-        at = ar.agg(F.sum("a").cast("long").alias("ta"))
-        a = ar.crossJoin(F.broadcast(at)).select(
-            "v",
-            idiv_col(F.col("a"), F.col("ta"), scale=1_000_000).alias("a"),
-        )
+        a = normalized(ar, "v", "a")
         hr = (
             edges.join(a, "v")
             .groupBy("u")
             .agg(F.sum(F.col("w") * F.col("a")).cast("long").alias("h"))
             .localCheckpoint(eager=True)
         )
-        ht = hr.agg(F.sum("h").cast("long").alias("th"))
-        h = hr.crossJoin(F.broadcast(ht)).select(
-            "u",
-            idiv_col(F.col("h"), F.col("th"), scale=1_000_000).alias("h"),
-        )
+        return normalized(hr, "u", "h"), a
+
+    h = edges.select("u").distinct().select(
+        "u", F.lit(1_000_000).cast("long").alias("h")
+    )
+    h, a = iterate((h, None), step, _HITS_ITERS)
     nation = t.nation.select("n_nationkey", "n_name")
     return (
         nation.join(h, nation.n_nationkey == h.u, "left")

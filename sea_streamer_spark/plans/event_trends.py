@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.exact import idiv_col
+from ..operators.rounds import iterate
 from ..sources.tables import load_tables
 from .registry import query
 
@@ -500,9 +501,9 @@ def events_anomaly_masked_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .localCheckpoint(eager=True)
     )
-    cur = daily
-    out = []
-    for k in range(1, _ESD_ROUNDS + 1):
+
+    def step(state):
+        cur, out = state
         m = cur.agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("c").cast("long").alias("s"),
@@ -526,18 +527,12 @@ def events_anomaly_masked_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .collect()[0]
         )
-        out.append(
-            (
-                k,
-                pick["day"].strftime("%Y-%m-%d"),
-                pick["c"],
-                pick["r_milli"],
-                1 if pick["r_milli"] > _ESD_CUTOFF_MILLI else 0,
-            )
-        )
-        cur = cur.filter(
-            F.col("day") != F.lit(pick["day"])
-        ).localCheckpoint(eager=True)
+        day, c, r = pick["day"], pick["c"], pick["r_milli"]
+        row = (len(out) + 1, day.strftime("%Y-%m-%d"), c, r, int(r > _ESD_CUTOFF_MILLI))
+        rest = cur.filter(F.col("day") != F.lit(day))
+        return rest.localCheckpoint(eager=True), out + [row]
+
+    _, out = iterate((daily, []), step, _ESD_ROUNDS)
     return spark.createDataFrame(
         out, "round long, day string, n_events long, r_milli long, flagged long"
     )

@@ -5,12 +5,17 @@ TextRank and link prediction.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import dedup as D
+from ..operators import graph as G
 from ..operators.exact import idiv_col
 from ..operators.linkpred import aa_graph
+from ..operators.rounds import iterate
 from ..sources.tables import load_tables
 from .fragments import (
     AA_GRAPH_CTES,
@@ -24,6 +29,12 @@ from .registry import query
 
 
 _PR_ITERS = 4
+
+
+def near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b): the J >= 1/2 MinHash-LSH near-dup pairs, the graph
+    every query in this module walks (the dedup_clusters pair list)."""
+    return D.minhash_lsh_dedup(docs, threshold=0.5).select("doc_a", "doc_b")
 
 
 def _build_pagerank_oracle() -> str:
@@ -70,13 +81,8 @@ def graph_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine-exact: BIGINT micro scores, integer-quotient contributions, so
     the unrolled-CTE DuckDB replay matches bit-for-bit. Edges partition
     once and stay put; each round shuffles only the per-node score row."""
-    from ..operators import dedup as D
-    from ..operators import graph as G
-
     t = load_tables(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_dedup(t.documents, threshold=0.5).select(
-        "doc_a", "doc_b"
-    )
+    pairs = near_dup_pairs(t.documents)
     return G.pagerank_fixed(t.documents, pairs, iters=_PR_ITERS).orderBy(
         "doc_id"
     )
@@ -130,37 +136,24 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     two semi-joins against the ≤ |nodes| keep set — every shuffle is
     graph-sized, the corpus is never touched after candidate
     generation."""
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
-
     docs = load_tables(spark, sf_dir, "documents").documents
-    pairs = D.minhash_lsh_dedup(docs, threshold=0.5).select("doc_a", "doc_b")
-    e = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
-                    F.struct(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")),
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_KCORE_ROUNDS):
+    pairs = near_dup_pairs(docs)
+
+    def peel(e: DataFrame) -> DataFrame:
         keep = (
             e.groupBy("u")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
             .select("u")
         )
-        e = (
+        return (
             e.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
             .select("u", "v")
             .localCheckpoint(eager=False)
         )
+
+    e = iterate(G.symmetrize(pairs).localCheckpoint(eager=True), peel, _KCORE_ROUNDS)
     return (
         e.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
@@ -218,13 +211,10 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (frontier ⋈ edges) join + a (s, n)-keyed min — all graph-sized, the
     corpus is never touched after candidate generation. The DuckDB
     oracle replays the identical capped BFS as a recursive CTE."""
-    from ..operators import dedup as D
-    from ..operators.graph import harmonic_centrality
-
     docs = load_tables(spark, sf_dir, "documents").documents
-    pairs = D.minhash_lsh_dedup(docs, threshold=0.5).select("doc_a", "doc_b")
+    pairs = near_dup_pairs(docs)
     return (
-        harmonic_centrality(pairs)
+        G.harmonic_centrality(pairs)
         .select(
             F.col("node").alias("doc_id"), "n_reachable", "harmonic_micro"
         )
@@ -285,16 +275,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     one endpoint-exploded count; CC = 2*tri/(deg*(deg-1)) permille-
     floored from exact integers, -1 when deg < 2. Everything after the
     pair relation is graph-sized."""
-    from ..operators import dedup as D
-
     docs = load_tables(spark, sf_dir, "documents").documents
     # r12: pairs feeds the degree union (×2) AND the three-way oriented
     # triangle join — one eager checkpoint, one LSH build (guide §3.3)
-    pairs = (
-        D.minhash_lsh_dedup(docs, threshold=0.5)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = near_dup_pairs(docs).localCheckpoint(eager=True)
     deg = (
         pairs.select(F.col("doc_a").alias("node"))
         .unionAll(pairs.select(F.col("doc_b").alias("node")))
@@ -400,83 +384,41 @@ def graph_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself stays graph-sized exactly like the shipped operator; only
     the active set shuffles per round. Expect geometric decay; the
     round where n_changed reaches zero is the exact fixpoint."""
-    from ..operators import dedup as D
-
     t = load_tables(spark, sf_dir, "documents")
     docs = t.documents
-    pairs = D.minhash_lsh_dedup(docs, threshold=0.5).select("doc_a", "doc_b")
-    e = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
-                F.struct(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")),
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
-    e = e.repartition("u")
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    ed = e.join(deg, "u").select("u", "v", "deg").cache()
+    pairs = near_dup_pairs(docs)
     base = docs.select(F.col("doc_id").alias("node"))
-    act = base.join(
-        deg.withColumnRenamed("u", "node"), "node", "left_semi"
-    ).localCheckpoint(eager=True)
+    ed, _, act, s = G.pagerank_active(base, pairs)
     n_total = docs.count()
     n_active = act.count()
     n_isolated = n_total - n_active
-    s = act.select("node", F.lit(1_000_000).cast("long").alias("s"))
+
+    def step(state):
+        # r13: s_next is referenced 3× (next round and both residuals), so
+        # it is checkpointed, but lazily: the 6 rounds and all residual
+        # aggregates evaluate in the ONE collect below. r12: the residuals
+        # are DEFERRED to that collect, not a driver round-trip per round.
+        s, per_round = state
+        s_next = G.pagerank_round(ed, act, s)
+        resid = (
+            s.withColumnRenamed("s", "s_prev")
+            .join(s_next, "node")
+            .agg(
+                F.sum(F.abs(F.col("s") - F.col("s_prev")))
+                .cast("long")
+                .alias("resid"),
+                F.sum((F.col("s") != F.col("s_prev")).cast("long"))
+                .cast("long")
+                .alias("moved"),
+            )
+            .select(F.lit(len(per_round) + 1).cast("long").alias("k"), "resid", "moved")
+        )
+        return s_next, per_round + [resid]
+
     stats: list[tuple[int, int, int]] = []
-    per_round = []
     try:
-        for k in range(1, _PRC_ITERS + 1):
-            contrib = (
-                ed.join(s.withColumnRenamed("node", "u"), "u")
-                .select(
-                    F.col("v").alias("node"),
-                    F.expr("(s * 17) div (20 * deg)").alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").cast("long").alias("inc"))
-            )
-            # r13: LAZY checkpoint (the pagerank_fixed round pattern,
-            # guide §5): s_next is referenced 3× (next round, residual
-            # vs prev, residual vs next) so the checkpoint itself is
-            # structurally required — but materializing it EAGERLY made
-            # every round its own blocking driver job. Lazy, the whole
-            # 6-round chain plus all residual aggregates evaluate in
-            # the ONE collect below; each s_next still persists (and
-            # its lineage truncates) at first materialization inside
-            # that job, and round-k residuals overlap round-k+1 stages.
-            s_next = (
-                act.join(contrib, "node", "left")
-                .select(
-                    "node",
-                    (F.lit(150_000) + F.coalesce(F.col("inc"), F.lit(0)))
-                    .cast("long")
-                    .alias("s"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # residual aggregates are DEFERRED: both inputs are
-            # checkpointed, so the per-round join+agg is a cheap replay
-            # — one unioned collect at the end instead of one driver
-            # round-trip per iteration (r12, guide §5: 6 jobs → 1)
-            per_round.append(
-                s.withColumnRenamed("s", "s_prev")
-                .join(s_next, "node")
-                .agg(
-                    F.sum(F.abs(F.col("s") - F.col("s_prev")))
-                    .cast("long")
-                    .alias("resid"),
-                    F.sum((F.col("s") != F.col("s_prev")).cast("long"))
-                    .cast("long")
-                    .alias("moved"),
-                )
-                .select(F.lit(k).cast("long").alias("k"), "resid", "moved")
-            )
-            s = s_next
-        allstats = per_round[0]
-        for d in per_round[1:]:
-            allstats = allstats.unionByName(d)
+        _, per_round = iterate((s, []), step, _PRC_ITERS)
+        allstats = functools.reduce(DataFrame.unionByName, per_round)
         by_k = {int(r["k"]): r for r in allstats.collect()}
         for k in range(1, _PRC_ITERS + 1):
             row = by_k[k]
@@ -608,18 +550,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("wt"))
     )
-    e = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("wa").alias("u"), F.col("wb").alias("v"), F.col("wt")
-                ),
-                F.struct(
-                    F.col("wb").alias("u"), F.col("wa").alias("v"), F.col("wt")
-                ),
-            )
-        ).alias("p")
-    ).select("p.u", "p.v", "p.wt")
+    e = G.symmetrize(pairs, "wa", "wb", carry=("wt",))
     st = e.groupBy("u").agg(F.sum("wt").cast("long").alias("strength"))
     # r13: ed/nodes stay eagerly materialized (each is referenced every
     # round), but the per-round ``s`` checkpoint is GONE: the round
@@ -709,18 +640,12 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     node and edge counts. Plan: the pair list is the production LSH
     join; degrees and the three moment sums are two keyed aggregates
     over the edge relation — all graph-sized."""
-    from ..operators import dedup as D
-
     docs = load_tables(spark, sf_dir, "documents").documents
     # r12: the pair list is referenced 6+ times below (×2 union, two deg
     # joins, n_nodes) and the LSH verify chain was re-run for the copies
     # exchange reuse could not cover — one eager checkpoint makes the
     # build single-evaluation (measured −72% on this query; guide §3.3).
-    pairs = (
-        D.minhash_lsh_dedup(docs, threshold=0.5)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = near_dup_pairs(docs).localCheckpoint(eager=True)
     e = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionByName(
@@ -805,13 +730,8 @@ def graph_neardup_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ(4m·m_c − d_c²) exposed so the one float is auditable. Plan: pairs
     from the production LSH join, components from the shipped hash-min
     CC operator, then everything lives on the component dimension."""
-    from ..operators import dedup as D
-    from ..operators import graph as G
-
     docs = load_tables(spark, sf_dir, "documents").documents
-    pairs = D.minhash_lsh_dedup(docs, threshold=0.5).select(
-        "doc_a", "doc_b"
-    ).cache()
+    pairs = near_dup_pairs(docs).cache()
     try:
         e = pairs.select(
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
+from ..operators.rounds import iterate
 from ..sources.tables import load_tables
 from .fragments import (
     ORACLE_SF_DIR,
@@ -998,36 +999,31 @@ def curation_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
     try:
         seed = emb.orderBy("vec_id").limit(1)
-        dist_to = lambda cvec: (  # noqa: E731
+        dist = (
             F.lit(1_000_000)
             - F.floor(cosine(F.col("embedding"), F.col("cvec")) * 1_000_000)
         ).cast("long")
-        cur = (
-            emb.crossJoin(
-                F.broadcast(seed.select(F.col("embedding").alias("cvec")))
+
+        def nearer(frame: DataFrame, cvec: DataFrame, dmin) -> DataFrame:
+            return (
+                frame.crossJoin(F.broadcast(cvec.select(F.col("embedding").alias("cvec"))))
+                .select("vec_id", "embedding", dmin.alias("dmin"))
+                .localCheckpoint(eager=True)
             )
-            .select("vec_id", "embedding", dist_to("cvec").alias("dmin"))
-            .localCheckpoint(eager=True)
+
+        def step(state):
+            cur, out = state
+            pick = cur.orderBy(F.desc("dmin"), F.asc("vec_id")).limit(1).collect()[0]
+            out = out + [(len(out) + 1, pick["vec_id"], pick["dmin"])]
+            if len(out) == _KC_K:  # the last pick needs no distance update
+                return cur, out
+            cvec = emb.filter(F.col("vec_id") == pick["vec_id"])
+            return nearer(cur, cvec, F.least(F.col("dmin"), dist)), out
+
+        cur = nearer(emb, seed, dist)
+        _, out = iterate(
+            (cur, [(1, seed.collect()[0]["vec_id"], -1)]), step, _KC_K - 1
         )
-        out = [(1, seed.collect()[0]["vec_id"], -1)]
-        for r in range(2, _KC_K + 1):
-            pick = (
-                cur.orderBy(F.desc("dmin"), F.asc("vec_id")).limit(1).collect()[0]
-            )
-            out.append((r, pick["vec_id"], pick["dmin"]))
-            if r < _KC_K:
-                cvec = emb.filter(F.col("vec_id") == pick["vec_id"]).select(
-                    F.col("embedding").alias("cvec")
-                )
-                cur = (
-                    cur.crossJoin(F.broadcast(cvec))
-                    .select(
-                        "vec_id",
-                        "embedding",
-                        F.least(F.col("dmin"), dist_to("cvec")).alias("dmin"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
     finally:
         emb.unpersist()
     return spark.createDataFrame(

@@ -273,3 +273,29 @@ def test_no_function_local_plan_imports():
         if is_local
     )
     assert not local, f"function-local imports of plan modules: {local}"
+
+
+# ---------------------------------------------------------------------------
+# Round-driver ratchet: every Spark-side iterative loop is a step run by
+# operators/rounds.iterate, which owns the round cap, the convergence probe
+# and the release of superseded checkpoints. A ``localCheckpoint`` inside a
+# ``for``/``while`` body is a loop that bypasses it.
+
+
+def test_no_checkpoint_inside_a_loop_outside_the_round_driver():
+    sites = sorted(
+        (path, node.lineno)
+        for path, text in _pkg_sources().items()
+        if path != "operators/rounds.py"
+        for loop in ast.walk(ast.parse(text))
+        if isinstance(loop, (ast.For, ast.AsyncFor, ast.While))
+        for stmt in loop.body + loop.orelse
+        for node in ast.walk(stmt)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    )
+    assert not sites, (
+        f"localCheckpoint inside a loop body: {sites} — write the round as a "
+        f"step and run it with operators.rounds.iterate"
+    )

@@ -223,9 +223,10 @@ class TestConnectedComponentsLongChain:
         assert set(got.values()) == {min(ids)}
 
 
-    def test_explicit_algorithms(self, spark):
-        """star alone handles the chain; hashmin alone refuses loudly rather
-        than returning partial labels."""
+    def test_star_fallback_and_round_cap(self, spark):
+        """A 50-node chain outlasts the 8 hash-min rounds, so the labels come
+        from the star fallback; with max_iter=2 star rounds it refuses loudly
+        rather than returning partial labels."""
         import pytest as _pytest
 
         from sea_streamer_spark.operators.graph import connected_components
@@ -233,10 +234,10 @@ class TestConnectedComponentsLongChain:
         ids = list(range(50))
         edges = list(zip(ids, ids[1:]))
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {r.node: r.cluster for r in connected_components(df, algorithm="star").collect()}
-        assert set(got.values()) == {0}
+        got = {r.node: r.cluster for r in connected_components(df).collect()}
+        assert set(got) == set(ids) and set(got.values()) == {0}
         with _pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(df, max_iter=3, algorithm="hashmin").collect()
+            connected_components(df, max_iter=2).collect()
 
 
 class TestMixtureResample:

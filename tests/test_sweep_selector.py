@@ -28,3 +28,12 @@ def test_changed_fragment_module_selects_its_oracle_users():
 def test_changed_family_module_selects_its_queries():
     sel = _sweep_oracle().affected_queries({"tpch"})
     assert "q1_pricing_summary" in sel  # defined in plans/tpch.py itself
+
+
+def test_changed_operator_selects_queries_that_import_it_transitively():
+    sel = _sweep_oracle().affected_queries({"rounds"})
+    # plans/dedup.py reaches operators/rounds.py through operators/graph.py,
+    # plans/tokenizers.py through operators/bpe.py; plans/basket_graphs.py
+    # imports it directly.
+    assert {"dedup_clusters", "graph_hits_nations", "tokenizer_bpe_counts"} <= sel
+    assert "q1_pricing_summary" not in sel

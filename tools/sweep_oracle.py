@@ -8,14 +8,12 @@ Usage: python tools/sweep_oracle.py [sf_dir] [first_n] [--changed-since REF]
 
 ``--changed-since REF`` (delta-sweep, r5 judge task #8): sweep only the
 queries plausibly affected by commits since git ref REF — those whose
-defining plans module changed, plus those whose function source or
-defining module source mentions the basename of any other changed .py
-module (catching queries that call into a changed operators/sources/
-streaming module at function level, and oracles that embed a fragment
-imported from another plans module).
+defining plans module imports a changed .py module, directly or through
+other package modules (module-level and function-level imports alike),
+plus those whose function source or defining module source mentions the
+basename of a changed module.
 This keeps per-wave verification cheap as the registry grows; the full
-sweep at round end remains the authority (the mention heuristic is
-conservative but not a transitive import graph).
+sweep at round end remains the authority.
 """
 
 from __future__ import annotations
@@ -57,22 +55,66 @@ def changed_modules(ref: str) -> set[str]:
     }
 
 
+def _package_imports() -> dict[str, set[str]]:
+    """Dotted package module -> the package modules it imports anywhere in
+    its source (module level or inside a function)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "sea_streamer_spark"
+    names = {
+        ".".join(p.relative_to(pkg.parent).with_suffix("").parts).removesuffix(
+            ".__init__"
+        ): p
+        for p in pkg.rglob("*.py")
+    }
+    graph: dict[str, set[str]] = {}
+    for mod, path in names.items():
+        here = mod if path.name == "__init__.py" else mod.rsplit(".", 1)[0]
+        deps: set[str] = set()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                deps.update(a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    up = here.rsplit(".", node.level - 1)[0] if node.level > 1 else here
+                    base = f"{up}.{base}" if base else up
+                subs = {f"{base}.{a.name}" for a in node.names} & names.keys()
+                # ``from ..operators import dedup`` depends on the submodule,
+                # not on every module the package __init__ re-exports
+                deps |= subs if len(subs) == len(node.names) else subs | {base}
+        graph[mod] = deps & names.keys()
+    return graph
+
+
+def _closure(graph: dict[str, set[str]], mod: str) -> set[str]:
+    seen, todo = set(), [mod]
+    while todo:
+        m = todo.pop()
+        if m not in seen:
+            seen.add(m)
+            todo.extend(graph.get(m, ()))
+    return seen
+
+
 def affected_queries(mods: set[str]) -> set[str]:
     """Names of queries plausibly affected by changes to the modules
-    ``mods``: the defining module is one of them, or the source of the
-    query function or of its defining module mentions one of their
-    basenames. Function-level operator imports (``from ..operators import
-    graph as G``) mention 'graph'; module-level oracle fragments
-    (``from .fragments import DUCK_SHINGLE_SETS``) mention 'fragments'."""
+    ``mods`` (basenames): the defining module imports one of them,
+    directly or transitively, or the source of the query function or of
+    its defining module mentions one of their basenames. Imports catch a
+    change to ``operators/rounds.py`` reaching a query through
+    ``operators/graph.py``; mentions catch the rest conservatively."""
     import inspect
     import re
 
+    graph = _package_imports()
     pats = [re.compile(rf"\b{re.escape(m)}\b") for m in mods]
     module_src: dict[str, str] = {}
     sel: set[str] = set()
     for name, qd in QUERIES.items():
         module = qd.fn.__module__
-        if module.rsplit(".", 1)[-1] in mods:
+        if {m.rsplit(".", 1)[-1] for m in _closure(graph, module)} & mods:
             sel.add(name)
             continue
         try:
